@@ -18,19 +18,8 @@ object Bench {
     if (!sys.env.contains("SPARK_GRAFT_EXACT"))
       System.setProperty("graft.bench.approxOnly", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // the library extension: kernel SQL surface + the FuseTokenCount
-      // optimizer rule — the documented way to run the engine
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores(default = GraftSession.CanonicalCores)
+    val spark = GraftSession("graft-bench", cpus)
     // Steady-state measurement: absorb JVM/codegen/FileIndex warmup with
     // one untimed trivial pass before the timed loop. The warmup's wall
     // time is ALSO the run's load indicator (emitted as "warmup" in the
@@ -53,7 +42,8 @@ object Bench {
     // with two samples a single GC/container hiccup lands in the min half
     // the time; three samples make the min robust to one bad execution.
     // Optional local profiling filter (unset in driver runs → all queries).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Self-defense against loaded gate runs (the r8 lesson: a contended
     // container reported q_date_bucket at 11× with zero code change, and
     // only a manual idle re-run cleared it): previous-round per-query
@@ -296,14 +286,14 @@ object Bench {
     // Full-registry gate-scale runs only: a SPARK_GRAFT_ONLY profiling
     // subset or an off-scale (sf1/sf10) table run must not clobber the
     // complete history the next round's priorMins reads. The canonical
-    // file is additionally gated on the DEFAULT core count (r14 verdict
+    // file is additionally gated on GraftSession.CanonicalCores (r14 verdict
     // item 1: the driver's local[8] scaling sweep overwrote the 32-core
     // map, so the next round's fallback regression denominators became
     // 8-core mins) — an off-core run writes a cpu-suffixed sibling
     // instead, so its map survives without corrupting the history.
     if (only.isEmpty && isGateScale) {
       val fullLine = render("%.3f", results).stripSuffix("}") + fpJson + maxJson + "}"
-      val target = if (cpus == "32") "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+      val target = if (cpus == GraftSession.CanonicalCores) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(target), fullLine + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] $target write failed: $e") }
     }

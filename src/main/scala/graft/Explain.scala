@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan for the named
   * queries (or all). Usage: runMain graft.Explain [sfDir] [q1 q2 ...]
   * Pass `--final` as the first query name to EXECUTE each query first and
@@ -15,17 +13,9 @@ object Explain {
     val finalPlan = rest.headOption.contains("--final")
     val qargs = if (finalPlan) rest.drop(1) else rest
     val names = if (qargs.nonEmpty) qargs else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      // match the production session: plans must show the injected
-      // fusion rules and the as-of strategy, not the pre-extension shape
-      .withExtensions(new GraftExtensions())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Fixed 4 cores, not SPARK_GRAFT_CPUS: captured plans must not
+    // depend on the environment.
+    val spark = GraftSession("graft-explain", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n======== $n ========")

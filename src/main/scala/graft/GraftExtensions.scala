@@ -14,7 +14,7 @@ import graft.functions._
   * Enable either way:
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   SparkSession.builder().withExtensions(new GraftExtensions()) ...
+  *   builder.withExtensions(new GraftExtensions()) ...  // what GraftSession does
   * }}}
   *
   * Injection happens at session build, before any query parses — unlike

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from sf0.1 by N× replication with
@@ -38,15 +38,7 @@ object MakeScale {
     val n = if (args.length > 0) args(0).toInt else 10
     val out = if (args.length > 1) args(1) else "target/sf1"
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-make-scale", GraftSession.cores(default = 32))
 
     def rep(table: String, keyShift: Seq[String], build: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.Readers
 import graft.parsers.Pipelines
 
@@ -30,17 +28,7 @@ object RunPipeline {
       sys.exit(2)
       throw new IllegalStateException
     })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-$name")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"graft-$name", GraftSession.cores(default = 4))
     try {
       val inputs = args.drop(2).map { kv =>
         val Array(k, path) = kv.split("=", 2)

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Cost-model probe (dev harness, not driver-run): executes registry
   * queries end-to-end (noop sink) while a SparkListener sums every
@@ -48,17 +47,7 @@ object ShuffleAudit {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sys.error(
       "ShuffleAudit: set SPARK_GRAFT_SF_DIR to the parquet scale dir to audit"))
     val names = if (args.nonEmpty) args.toSeq else defaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-shuffle-audit", GraftSession.cores(default = 32))
 
     val shuffleBytes = new LongAdder
     val shuffleRows = new LongAdder

@@ -686,8 +686,7 @@ object SparkEntry {
       // (256 edges at sf0.1), so this routes to the driver union-find
       // (exact); past ~2M edges it falls back to convergent distributed
       // propagation. Min doc_id per component either way.
-      if (sys.env.contains("SPARK_GRAFT_NOCC")) pairs else NearDup
-        .connectedComponentsAdaptive(pairs, "doc_id_a", "doc_id_b")
+      NearDup.connectedComponentsAdaptive(pairs, "doc_id_a", "doc_id_b")
         .select(col("id").as("doc_id"), col("label").as("cluster"))
     }),
 

@@ -1678,6 +1678,15 @@ case class GramHashes(child: Expression, gramLen: Int, stride: Int)
 }
 
 object SuccessorPairsImpl {
+  /** Largest pairable array: n² must stay an Int, and the ~1.07e9 pairs
+    * of an array this size are already far past a sane allocation.
+    */
+  val MaxElements: Int = 46340
+
+  /** Fails with a clear message (not an overflow or OOM) past [[MaxElements]]. */
+  def requirePairable(n: Int): Unit =
+    require(n <= MaxElements, s"successor_pairs: array too large to pair ($n elements)")
+
   /** All (i < j) element pairs of an array as one struct array — the
     * successor-pair emission every bucket/basket pairing site used to
     * spell as `posexplode(arr)` + `explode(slice(arr, pos + 2, size))`.
@@ -1694,9 +1703,9 @@ object SuccessorPairsImpl {
     val n = arr.numElements()
     if (n < 2)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    // n(n−1)/2 must stay an Int (and a sane allocation): every call site
-    // bounds n by construction (basket size, maxBucket, dfCap, maxDeg).
-    require(n <= 46340, s"successor_pairs: array too large to pair ($n elements)")
+    // Every call site bounds n by construction (basket size, maxBucket,
+    // dfCap, maxDeg).
+    requirePairable(n)
     val elems = arr.toObjectArray(et)
     val out = new Array[Any](n * (n - 1) / 2)
     var idx = 0

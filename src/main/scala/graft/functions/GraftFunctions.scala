@@ -102,6 +102,12 @@ object GraftFunctions {
   /** All (i<j) element pairs of an array as array<struct<a,b>> in one
     * codegen'd pass — explode this instead of the posexplode×slice
     * successor chain (see [[SuccessorPairs]]).
+    *
+    * Contract: at most 46,340 elements per array
+    * (`SuccessorPairsImpl.MaxElements`). A larger array fails the query
+    * with `successor_pairs: array too large to pair (n elements)`;
+    * callers bound n upstream (bucket caps, document-frequency caps,
+    * degree caps).
     */
   def successorPairs(arr: Column): Column =
     GraftShim.toColumn(SuccessorPairs(GraftShim.toExpression(arr)))

@@ -96,11 +96,9 @@ object KMeans {
     * distributed for both fit shapes). Inputs must be NaN/null-free
     * vectors (the embeddings contract — a NaN would cast to decimal
     * NULL distributed-side). Callers can pass an explicit bound (tests,
-    * forced-distributed bench probes); the sys-prop only sets the
-    * default.
+    * forced-distributed bench probes) instead of this default.
     */
-  private[similarity] def defaultMaxDriverVecs: Long =
-    sys.props.get("graft.kmeans.maxDriverVecs").map(_.toLong).getOrElse(200000L)
+  private[similarity] val defaultMaxDriverVecs: Long = 200000L
 
   /** count × dim within the driver element budget (bound × 64-dim ref)? */
   private def fitsDriver(n: Long, dim: Int, maxDriverVecs: Long): Boolean =

@@ -9,6 +9,30 @@ import org.apache.spark.sql.functions._
 class ExtensionsSpec extends SparkTestBase {
   import spark.implicits._
 
+  test("the shared session carries every GraftSession setting (the CLI's configuration)") {
+    // TestSession is built by the same GraftSession.apply as RunPipeline
+    // and the other mains, so this pins what the shipped CLI runs with.
+    val cores = "local\\[(\\d+)\\]".r
+      .findFirstMatchIn(spark.sparkContext.master).map(_.group(1))
+    assert(cores.contains("4"), spark.sparkContext.master)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == cores.get)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.catalog.functionExists("graft_erf"), "GraftExtensions injected")
+  }
+
+  test("GraftSession.cores trims SPARK_GRAFT_CPUS and falls back on unset or blank") {
+    assert(GraftSession.parseCores(None, 4) == 4)
+    assert(GraftSession.parseCores(Some("  "), 4) == 4)
+    assert(GraftSession.parseCores(Some(" 32 "), 4) == GraftSession.CanonicalCores)
+    assert(GraftSession.parseCores(Some("8"), 32) == 8)
+    Seq("abc", "0", "-2", "*").foreach { v =>
+      intercept[IllegalArgumentException](GraftSession.parseCores(Some(v), 4))
+    }
+  }
+
   test("all kernels resolve and evaluate through spark.sql") {
     val r = spark.sql(
       """SELECT

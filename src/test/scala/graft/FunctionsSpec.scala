@@ -305,4 +305,24 @@ class FunctionsSpec extends SparkTestBase {
     assert(spark.sql(
       "SELECT size(graft_successor_pairs(array(1, 2, 3, 4))) AS n").head().getInt(0) == 6)
   }
+
+  test("successorPairs ceiling: 46,341 elements fail with a clear message, 46,340 pass the check") {
+    import graft.functions.SuccessorPairsImpl
+    // One past the documented contract, through a real query: the
+    // require fires before any allocation, so this is neither an Int
+    // overflow nor an OOM.
+    val tooBig = spark.range(SuccessorPairsImpl.MaxElements + 1L)
+      .agg(collect_list(col("id")).as("ps"))
+      .select(size(GraftFunctions.successorPairs(col("ps"))))
+    val e = intercept[Exception](tooBig.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null &&
+      m.contains("successor_pairs: array too large to pair (46341 elements)")), msgs.mkString(" | "))
+    // At the ceiling the check passes (running it would build ~1.07e9
+    // pairs, so only the check is exercised).
+    assert(SuccessorPairsImpl.MaxElements == 46340)
+    SuccessorPairsImpl.requirePairable(46340)
+    assert(SuccessorPairsImpl.MaxElements.toLong * SuccessorPairsImpl.MaxElements <= Int.MaxValue,
+      "n² at the ceiling must fit an Int")
+  }
 }

@@ -1023,18 +1023,20 @@ class SimilaritySpec extends SparkTestBase {
     both.foreach { case (k, h) => assert(k == h, s"adc drifted: kernel=$k hof=$h") }
   }
 
-  test("SparseSim folded normalization == norm-agg+join reference, bit for bit") {
-    // r15: the per-doc L2 norm folds into the same aggregate that
-    // collects the doc's terms (one keyed exchange instead of agg+join).
-    // Exact decimal sums are order-free, so u must be BIT-identical to
-    // the old two-step formulation on the real documents table.
+  test("SparseSim agg+join normalization == independent reconstruction, bit for bit") {
+    // Regression pin: the postings' per-doc L2 normalization (norm
+    // aggregate joined back on doc — the shape kept after the r15 norm
+    // fold was measured and rejected, see SparseSim.postings) must stay
+    // BIT-identical to the independent reconstruction below on the real
+    // documents table. Exact decimal sums are order-free, so any change
+    // to the weighting or normalization shows here.
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     val got = SparseSim.postings(docs, "doc_id", "text", shingleLen = 3, dfCap = 100)
       .select("doc_id", "term", "u")
       .as[(Long, String, Double)].collect().toSet
-    // Reference: the pre-r15 shape — norm aggregation joined back on doc.
+    // Reconstruction: tf-idf weights, then the norm aggregation joined back on doc.
     val toks = graft.text.TextAnalysis.tokens(col("text"))
     val tf = docs.select(col("doc_id"),
         explode(graft.functions.GraftFunctions.wordShingles(toks, 3)).as("term"))

@@ -3,25 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session), built by
+  * the same [[GraftSession]] every main uses — so the specs run in the
+  * CLI's configuration, including the extension's real injection path
+  * (ExtensionsSpec relies on it). Fixed 4 cores, not SPARK_GRAFT_CPUS:
+  * plan-shape assertions must not depend on the environment.
+  */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // Real injection path: kernels reach SQL via the extension, not
-      // via runtime registerAll (ExtensionsSpec relies on this).
-      .withExtensions(new graft.GraftExtensions())
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", new java.io.File("target/testtmp/warehouse").getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("graft-test", cores = 4,
+    Map("spark.sql.warehouse.dir" -> new java.io.File("target/testtmp/warehouse").getAbsolutePath))
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
