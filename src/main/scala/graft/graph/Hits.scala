@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,26 +55,20 @@ object Hits {
             (col("a").cast("double") / col("mx").cast("double")).as("score_norm")))
   }
 
-  /** [[run]] with the small-graph escape hatch of the rest of the graph
-    * kit (PageRank/ShortestPath/LabelProp `runAdaptive`): under
-    * `maxDriverEdges` long-pairs the alternating h/a rounds run in
-    * driver memory — every intermediate is the same exact BIGINT sum
-    * (addExact mirrors the ANSI sum's overflow loudness), and the one
-    * closing IEEE division per row is identical, so the two paths are
-    * bit-identical (GraphSpec pins it). Non-long node ids fall through
-    * to [[run]] unchanged.
+  /** [[run]] through [[DriverTier]], which engages only on LongType ids:
+    * every intermediate is the same exact BIGINT sum (addExact mirrors the
+    * ANSI sum's overflow loudness), and the one closing IEEE division per
+    * row is identical, so the two tiers are bit-identical (GraphSpec pins
+    * it). Non-long node ids fall through to [[run]] unchanged; an empty
+    * edge set gives [[run]]'s empty result.
     */
-  def runAdaptive(edges: DataFrame, rounds: Int, maxDriverEdges: Long = 2000000L): DataFrame = {
+  def runAdaptive(edges: DataFrame, rounds: Int,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 3,
       s"rounds must be in [1, 3] (integer-growth budget, see scaladoc), got $rounds")
-    val spark = edges.sparkSession
-    val allLong = Seq("src", "dst").forall(c =>
-      edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
-    if (allLong && e.count() <= maxDriverEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      def sumBy(pairs: Array[(Long, Long)]): scala.collection.mutable.LongMap[Long] = {
-        val m = scala.collection.mutable.LongMap.empty[Long]
+    DriverTier.pairs(edges.select(col("src"), col("dst")), maxDriverEdges)(run(_, rounds)) { es =>
+      def sumBy(pairs: Array[(Long, Long)]): mutable.LongMap[Long] = {
+        val m = mutable.LongMap.empty[Long]
         pairs.foreach { case (k, v) => m(k) = Math.addExact(m.getOrElse(k, 0L), v) }
         m
       }
@@ -82,12 +78,14 @@ object Hits {
         hub = sumBy(es.flatMap { case (s, d) => auth.get(d).map(a => (s, a)) })
         auth = sumBy(es.flatMap { case (s, d) => hub.get(s).map(h => (d, h)) })
       }
-      val hm = hub.values.max.toDouble
-      val am = auth.values.max.toDouble
+      // per-role max; the 1.0 for an empty role is never divided by
+      def maxOf(m: mutable.LongMap[Long]) = m.valuesIterator.maxOption.fold(1.0)(_.toDouble)
+      val (hm, am) = (maxOf(hub), maxOf(auth))
+      val spark = edges.sparkSession
       import spark.implicits._
       (hub.toSeq.map { case (n, h) => ("hub", n, h, h.toDouble / hm) } ++
         auth.toSeq.map { case (n, a) => ("auth", n, a, a.toDouble / am) })
         .toDF("role", "node", "score", "score_norm")
-    } else run(e, rounds)
+    }
   }
 }

@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,33 +46,30 @@ object KCore {
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
-  /** [[peel]] with the small-graph escape hatch of the rest of the graph
-    * kit (PageRank/ShortestPath/LabelProp `runAdaptive`): under
-    * `maxDriverEdges` long-pairs the fixed `rounds` peels run in driver
-    * memory — pure integer degree counting and set filtering, so the
-    * two paths are bit-identical by construction (GraphSpec pins it).
-    * Non-long node ids fall through to [[peel]] unchanged.
+  /** [[peel]] through [[DriverTier]], which engages only on LongType ids:
+    * pure integer degree counting and set filtering, so the two tiers are
+    * bit-identical by construction (GraphSpec pins it). Non-long node ids
+    * fall through to [[peel]] unchanged.
     */
-  def peelAdaptive(
-      edges: DataFrame, k: Int, rounds: Int, maxDriverEdges: Long = 2000000L): DataFrame = {
+  def peelAdaptive(edges: DataFrame, k: Int, rounds: Int,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1, 32], got $rounds")
-    val spark = edges.sparkSession
-    val allLong = Seq("src", "dst").forall(c =>
-      edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    val e0 = edges.select(col("src"), col("dst")).localCheckpoint(eager = false)
-    if (allLong && e0.count() <= maxDriverEdges) {
-      var es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      for (_ <- 1 to rounds) {
-        val deg = scala.collection.mutable.LongMap.empty[Long]
-        es.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
-        val keep = deg.filter(_._2 >= k).keySet
-        es = es.filter { case (s, d) => keep(s) && keep(d) }
-      }
-      val deg = scala.collection.mutable.LongMap.empty[Long]
+    def degrees(es: Array[(Long, Long)]): mutable.LongMap[Long] = {
+      val deg = mutable.LongMap.empty[Long]
       es.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
-      import spark.implicits._
-      deg.toSeq.map { case (n, d) => (n, d) }.toDF("node", "deg")
-    } else peel(e0, k, rounds)
+      deg
+    }
+    DriverTier.pairs(edges.select(col("src"), col("dst")), maxDriverEdges)(peel(_, k, rounds)) {
+      es0 =>
+        var es = es0
+        for (_ <- 1 to rounds) {
+          val keep = degrees(es).filter(_._2 >= k).keySet
+          es = es.filter { case (s, d) => keep(s) && keep(d) }
+        }
+        val spark = edges.sparkSession
+        import spark.implicits._
+        degrees(es).toSeq.toDF("node", "deg")
+    }
   }
 }

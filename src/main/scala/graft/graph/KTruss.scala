@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,39 +52,35 @@ object KTruss {
     out
   }
 
-  /** [[peel]] with the small-graph escape hatch of the rest of the graph
-    * kit: under `maxDriverEdges` long-pairs the peels run in driver
-    * memory — support(a,b) = |N(a) ∩ N(b)| over symmetric adjacency
-    * sets, exactly the canonical triangle join's count, all integer, so
-    * the two paths are bit-identical (GraphSpec pins it). Non-long node
-    * ids fall through to [[peel]] unchanged.
+  /** [[peel]] through [[DriverTier]], which engages only on LongType ids:
+    * support(a,b) = |N(a) ∩ N(b)| over symmetric adjacency sets, exactly
+    * the canonical triangle join's count, all integer, so the two tiers
+    * are bit-identical (GraphSpec pins it). Non-long node ids fall
+    * through to [[peel]] unchanged.
     */
-  def peelAdaptive(
-      canonEdges: DataFrame, k: Int, rounds: Int, maxDriverEdges: Long = 2000000L): DataFrame = {
+  def peelAdaptive(canonEdges: DataFrame, k: Int, rounds: Int,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
     require(k >= 3, s"k must be >= 3 (edges outside any triangle drop), got $k")
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1, 32], got $rounds")
-    val spark = canonEdges.sparkSession
-    val allLong = Seq("a", "b").forall(c =>
-      canonEdges.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    val e0 = canonEdges.select(col("a"), col("b")).localCheckpoint(eager = false)
-    if (allLong && e0.count() <= maxDriverEdges) {
-      var es = e0.collect().map(r => (r.getLong(0), r.getLong(1)))
-      var out = Array.empty[(Long, Long, Long)]
-      for (_ <- 1 to rounds) {
-        val adj = scala.collection.mutable.LongMap.empty[scala.collection.mutable.HashSet[Long]]
-        def add(u: Long, v: Long): Unit =
-          adj.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty[Long]) += v
-        es.foreach { case (a, b) => add(a, b); add(b, a) }
-        out = es.flatMap { case (a, b) =>
-          val (small, large) =
-            if (adj(a).size <= adj(b).size) (adj(a), adj(b)) else (adj(b), adj(a))
-          val support = small.count(large.contains).toLong
-          if (support >= k - 2) Some((a, b, support)) else None
+    DriverTier.pairs(canonEdges.select(col("a"), col("b")), maxDriverEdges)(peel(_, k, rounds)) {
+      es0 =>
+        var es = es0
+        var out = Array.empty[(Long, Long, Long)]
+        for (_ <- 1 to rounds) {
+          val adj = mutable.LongMap.empty[mutable.HashSet[Long]]
+          def add(u: Long, v: Long): Unit = adj.getOrElseUpdate(u, mutable.HashSet.empty[Long]) += v
+          es.foreach { case (a, b) => add(a, b); add(b, a) }
+          out = es.flatMap { case (a, b) =>
+            val (small, large) =
+              if (adj(a).size <= adj(b).size) (adj(a), adj(b)) else (adj(b), adj(a))
+            val support = small.count(large.contains).toLong
+            if (support >= k - 2) Some((a, b, support)) else None
+          }
+          es = out.map { case (a, b, _) => (a, b) }
         }
-        es = out.map { case (a, b, _) => (a, b) }
-      }
-      import spark.implicits._
-      out.toSeq.toDF("a", "b", "support")
-    } else peel(e0, k, rounds)
+        val spark = canonEdges.sparkSession
+        import spark.implicits._
+        out.toSeq.toDF("a", "b", "support")
+    }
   }
 }

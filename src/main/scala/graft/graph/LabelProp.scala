@@ -1,5 +1,7 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,47 +60,38 @@ object LabelProp {
     labels
   }
 
-  /** [[run]] with the small-graph escape hatch every iterative operator
-    * in this repo has ([[PageRank.runAdaptive]], [[ShortestPath
-    * .runAdaptive]]): a graph under `maxDriverEdges` long-triples votes
-    * in driver memory instead of paying `iters` rounds of scheduler
-    * latency (each round is join + agg + window + two joins). The driver
-    * tier only engages when src/dst/weight are all LongType — exact
-    * integer masses and the deterministic (max mass, min label)
-    * tie-break make the two paths bit-identical (GraphSpec pins it);
-    * fractional weights or non-long ids fall through to [[run]]
-    * unchanged. Vote sums use addExact so overflow is as loud as the
-    * distributed path's ANSI sum.
+  /** [[run]] through [[DriverTier]], which engages only when src/dst/weight
+    * are all LongType: exact integer masses and the deterministic (max
+    * mass, min label) tie-break make the two tiers bit-identical
+    * (GraphSpec pins it); fractional weights or non-long ids fall through
+    * to [[run]] unchanged. Vote sums use addExact so overflow is as loud
+    * as the distributed path's ANSI sum.
     */
-  def runAdaptive(edges: DataFrame, iters: Int, maxDriverEdges: Long = 2000000L): DataFrame = {
-    val spark = edges.sparkSession
-    val allLong = Seq("src", "dst", "weight").forall(c =>
-      edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    val e = edges.select(col("src"), col("dst"), col("weight"))
-      .localCheckpoint(eager = false)
-    if (allLong && e.count() <= maxDriverEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  def runAdaptive(edges: DataFrame, iters: Int,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame =
+    DriverTier.triples(edges.select(col("src"), col("dst"), col("weight")), maxDriverEdges)(
+      run(_, iters)) { es =>
       val nodes = es.map(_._1).distinct
-      var labels = scala.collection.mutable.LongMap(nodes.map(n => n -> n): _*)
+      var labels = mutable.LongMap(nodes.map(n => n -> n): _*)
       for (_ <- 1 to iters) {
-        val votes = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        val votes = mutable.HashMap.empty[(Long, Long), Long]
         es.foreach { case (s, d, w) =>
           val key = (d, labels(s))
           votes(key) = Math.addExact(votes.getOrElse(key, 0L), w)
         }
         // winner per node: max mass, ties to the SMALLEST label
-        val best = scala.collection.mutable.LongMap.empty[(Long, Long)]
+        val best = mutable.LongMap.empty[(Long, Long)]
         votes.foreach { case ((n, l), m) =>
           best.get(n) match {
             case Some((bm, bl)) => if (m > bm || (m == bm && l < bl)) best(n) = (m, l)
             case None => best(n) = (m, l)
           }
         }
-        labels = scala.collection.mutable.LongMap(nodes.map(n =>
+        labels = mutable.LongMap(nodes.map(n =>
           n -> best.get(n).map(_._2).getOrElse(labels(n))): _*)
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       nodes.toSeq.map(n => (n, labels(n))).toDF("node", "label")
-    } else run(e, iters)
-  }
+    }
 }

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank by power iteration — the graph-centrality
@@ -48,7 +48,7 @@ object PageRank {
     */
   def runPersonalized(
       edges: DataFrame,
-      isSeed: org.apache.spark.sql.Column,
+      isSeed: Column,
       iters: Int,
       damping: Double = 0.85,
       checkpointEvery: Int = 3,
@@ -92,7 +92,7 @@ object PageRank {
       iters: Int,
       damping: Double,
       checkpointEvery: Int,
-      tele: org.apache.spark.sql.Column,
+      tele: Column,
       weighted: Boolean = false,
   ): DataFrame = {
     require(iters >= 0 && damping >= 0 && damping < 1 && checkpointEvery > 0,
@@ -136,112 +136,84 @@ object PageRank {
     rank
   }
 
-  /** [[run]] with the adaptive small-graph escape hatch — the same
-    * decision NearDup.connectedComponentsAdaptive makes: a graph under
-    * `maxDriverEdges` (long pairs; 2M ≈ 32 MB) iterates on the driver in
-    * microseconds instead of paying `iters` distributed rounds of
-    * scheduler latency, exactly like a broadcast join collects a small
-    * side. Bigger graphs take the distributed path unchanged.
-    *
-    * Both paths are BIT-IDENTICAL: contributions are quantized to
-    * decimal(28,12) (HALF_UP, matching Spark's double→decimal cast),
-    * summed exactly (order-free), and blended in the same double op
-    * order — PageRankAdaptiveSpec asserts equality, not approximation.
-    * The edge subtree is lazily checkpointed so the sizing count and the
-    * chosen path share one materialization.
-    *
-    * Long node ids only (the cast is ANSI — non-numeric ids throw rather
-    * than corrupt); graphs with string ids hash them first or use [[run]].
+  /** [[run]] through [[DriverTier]]: a graph under `maxDriverEdges`
+    * iterates on the driver. The tiers are BIT-IDENTICAL: contributions
+    * are quantized to decimal(28,12) (HALF_UP, matching Spark's
+    * double→decimal cast), summed exactly (order-free), and blended in
+    * the same double op order — GraphSpec asserts equality. Long node ids
+    * only (the cast is ANSI — non-numeric ids throw rather than corrupt);
+    * graphs with string ids hash them first or use [[run]].
     */
   def runAdaptive(
       edges: DataFrame,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = 2_000_000L,
-  ): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).localCheckpoint(false)
-    if (e.count() > maxDriverEdges) return run(e, iters, damping)
-    val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val deg = es.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val nodes = deg.keys.toArray.sorted
-    var rank = nodes.map(_ -> 1.0).toMap
-    for (_ <- 1 to iters) {
-      val mass = collection.mutable.Map.empty[Long, java.math.BigDecimal]
-      es.foreach { case (s, d) =>
-        val contrib = java.math.BigDecimal.valueOf(rank(s) / deg(s))
-          .setScale(12, java.math.RoundingMode.HALF_UP)
-        mass.updateWith(d)(prev => Some(prev.fold(contrib)(_.add(contrib))))
-      }
-      rank = nodes.map { n =>
-        n -> ((1.0 - damping) + damping * mass.get(n).fold(0.0)(_.doubleValue))
-      }.toMap
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.pairs(longPairs(edges), maxDriverEdges)(run(_, iters, damping)) { es =>
+      driverRanks(edges.sparkSession, unitWeights(es), iters, damping, isSeed = None)
     }
-    val spark = edges.sparkSession
-    import spark.implicits._
-    nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
-  }
 
-  /** [[runPersonalized]] with the same small-graph escape hatch as
-    * [[runAdaptive]] — identical sizing rule, identical decimal(28,12)
-    * HALF_UP contribution quantization, BIT-IDENTICAL blend order. The
-    * teleport column is evaluated by Spark itself over the collected
-    * node set (one LocalRelation projection, no shuffle), so the driver
-    * tier sees exactly the per-node teleport the distributed loop
-    * would — seed predicates cannot drift between the paths.
-    */
+  /** [[runPersonalized]] through [[DriverTier]], bit-identical like [[runAdaptive]]. */
   def runPersonalizedAdaptive(
       edges: DataFrame,
-      isSeed: org.apache.spark.sql.Column,
+      isSeed: Column,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = 2_000_000L,
-  ): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long")).localCheckpoint(false)
-    if (e.count() > maxDriverEdges) return runPersonalized(e, isSeed, iters, damping)
-    val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-    val deg = es.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val nodes = deg.keys.toArray.sorted
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val tele = nodes.toSeq.toDF("node")
-      .select(col("node"), when(isSeed, lit(1.0)).otherwise(lit(0.0)).as("tele"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    var rank = nodes.map(n => n -> tele(n)).toMap
-    for (_ <- 1 to iters) {
-      val mass = collection.mutable.Map.empty[Long, java.math.BigDecimal]
-      es.foreach { case (s, d) =>
-        val contrib = java.math.BigDecimal.valueOf(rank(s) / deg(s))
-          .setScale(12, java.math.RoundingMode.HALF_UP)
-        mass.updateWith(d)(prev => Some(prev.fold(contrib)(_.add(contrib))))
-      }
-      rank = nodes.map { n =>
-        n -> ((1.0 - damping) * tele(n) + damping * mass.get(n).fold(0.0)(_.doubleValue))
-      }.toMap
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.pairs(longPairs(edges), maxDriverEdges)(runPersonalized(_, isSeed, iters, damping)) {
+      es => driverRanks(edges.sparkSession, unitWeights(es), iters, damping, Some(isSeed))
     }
-    nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
-  }
 
-  /** [[runWeighted]] with the same small-graph escape hatch as
-    * [[runAdaptive]] — identical sizing rule, identical quantization,
-    * BIT-IDENTICAL to the distributed weighted path: the driver's
-    * `rank·w/wsum` promotes the long weight to double exactly like
-    * Spark's mixed-type arithmetic, and each contribution lands in the
-    * same HALF_UP decimal(28,12) before the order-free exact sum.
-    */
+  /** [[runWeighted]] through [[DriverTier]], bit-identical like [[runAdaptive]]. */
   def runWeightedAdaptive(
       edges: DataFrame,
       weightCol: String,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = 2_000_000L,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col(weightCol).cast("long").as("w")).localCheckpoint(false)
-    if (e.count() > maxDriverEdges) return runWeighted(e, "w", iters, damping)
-    val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      col(weightCol).cast("long").as("w"))
+    DriverTier.triples(e, maxDriverEdges)(runWeighted(_, "w", iters, damping)) { es =>
+      driverRanks(edges.sparkSession, es, iters, damping, isSeed = None)
+    }
+  }
+
+  private def longPairs(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+
+  private def unitWeights(es: Array[(Long, Long)]): Array[(Long, Long, Long)] =
+    es.map { case (s, d) => (s, d, 1L) }
+
+  /** The driver mirror of [[runWithTeleport]], shared by the three
+    * adaptive entry points: r ← (1−d)·tele + d·Σ_in r·w/Σ_out w over
+    * (src, dst, w) long triples. Unweighted callers pass w ≡ 1 (the
+    * driver's `rank·w/wsum` promotes the long weight to double exactly
+    * like Spark's mixed-type arithmetic, and rank·1/deg is an IEEE
+    * identity with rank/deg); `isSeed = None` is tele ≡ 1.0, and
+    * (1−d)·1.0 == (1−d). A seed predicate is evaluated by Spark itself
+    * over the collected node set (one LocalRelation projection, no
+    * shuffle), so the driver sees exactly the per-node teleport the
+    * distributed loop would.
+    */
+  private def driverRanks(
+      spark: SparkSession,
+      es: Array[(Long, Long, Long)],
+      iters: Int,
+      damping: Double,
+      isSeed: Option[Column],
+  ): DataFrame = {
+    import spark.implicits._
     val wsum = es.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     val nodes = wsum.keys.toArray.sorted
-    var rank = nodes.map(_ -> 1.0).toMap
+    val tele: Long => Double = isSeed.fold((_: Long) => 1.0) { seed =>
+      nodes.toSeq.toDF("node")
+        .select(col("node"), when(seed, lit(1.0)).otherwise(lit(0.0)))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    var rank = nodes.map(n => n -> tele(n)).toMap
     for (_ <- 1 to iters) {
       val mass = collection.mutable.Map.empty[Long, java.math.BigDecimal]
       es.foreach { case (s, d, w) =>
@@ -250,11 +222,9 @@ object PageRank {
         mass.updateWith(d)(prev => Some(prev.fold(contrib)(_.add(contrib))))
       }
       rank = nodes.map { n =>
-        n -> ((1.0 - damping) + damping * mass.get(n).fold(0.0)(_.doubleValue))
+        n -> ((1.0 - damping) * tele(n) + damping * mass.get(n).fold(0.0)(_.doubleValue))
       }.toMap
     }
-    val spark = edges.sparkSession
-    import spark.implicits._
     nodes.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
   }
 }

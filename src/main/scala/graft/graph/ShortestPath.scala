@@ -1,6 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed multi-source shortest paths by hop-bounded Bellman-Ford —
@@ -194,44 +196,48 @@ object ShortestPath {
     state
   }
 
-  /** [[runConverged]] with the same small-graph escape hatch as
-    * [[runAdaptive]]: under `maxDriverEdges` long-triples the fixpoint
-    * iterates in driver memory (full-edge relaxation sweeps with
-    * early-exit on an unchanged sweep — each sweep reads the previous
-    * sweep's map, exactly one distributed round) instead of paying up to
-    * `maxIters` rounds of scheduler latency. Pure long min-plus admits no
-    * accumulation-order effects and converged fixpoints are unique, so
-    * the two paths are bit-identical (GraphSpec pins it). The sizing
-    * count shares the lazily-checkpointed edge subtree with whichever
-    * path runs.
+  /** [[run]] through [[DriverTier]]: a graph under `maxDriverEdges` runs
+    * the hop-bounded relaxation as [[driverConverged]] capped at `iters`
+    * sweeps (a sweep that changes nothing leaves every later sweep
+    * unchanged, so the early exit keeps the hop-bound contract). Pure
+    * long arithmetic admits no accumulation-order effects, so the tiers
+    * are bit-identical by construction (GraphSpec asserts it anyway).
+    * Long node ids only (ANSI casts throw on non-numeric ids).
+    */
+  def runAdaptive(
+      edges: DataFrame,
+      sources: DataFrame,
+      iters: Int,
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.triples(longTriples(edges), maxDriverEdges)(run(_, sources, iters)) { es =>
+      driverConverged(edges.sparkSession, sourceStates(sources), es, iters)
+    }
+
+  /** [[runConverged]] through [[DriverTier]]. Pure long min-plus admits no
+    * accumulation-order effects and converged fixpoints are unique, so the
+    * two tiers are bit-identical (GraphSpec pins it).
     */
   def runConvergedAdaptive(
       edges: DataFrame,
       sources: DataFrame,
       maxIters: Int = 30,
       checkpointEvery: Int = 3,
-      maxDriverEdges: Long = 2000000L,
-  ): DataFrame = {
-    val e = edges
-      .select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
-      .localCheckpoint(eager = false)
-    if (e.count() <= maxDriverEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val srcs = sources.select(col("source").cast("long")).collect().map(_.getLong(0))
-      driverConverged(e.sparkSession,
-        srcs.map(s => s -> scala.collection.mutable.LongMap(s -> 0L)).toSeq, es, maxIters)
-    } else runConverged(e, sources, maxIters, checkpointEvery)
-  }
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.triples(longTriples(edges), maxDriverEdges)(
+      runConverged(_, sources, maxIters, checkpointEvery)) { es =>
+      driverConverged(edges.sparkSession, sourceStates(sources), es, maxIters)
+    }
 
-  /** [[incrementalAdd]] with the driver escape hatch: under
-    * `maxDriverEdges` the converged base state (bounded by
-    * sources × reached nodes — the same state every distributed round
-    * shuffles anyway) and the post-addition edge set collect, and
-    * relaxation sweeps run to the fixpoint in driver memory. Distances
-    * only decrease under edge addition and the fixpoint is unique, so
-    * sweeping the FULL edge set from the stale state converges to
-    * exactly what the distributed improvement wavefront converges to
-    * (GraphSpec pins driver ≡ distributed ≡ full recompute).
+  /** [[incrementalAdd]] through [[DriverTier]], sized on `edgesAll`: the
+    * converged base state (bounded by sources × reached nodes — the same
+    * state every distributed round shuffles anyway) collects, and
+    * relaxation sweeps over the FULL post-addition edge set run to the
+    * fixpoint. Distances only decrease under edge addition and the
+    * fixpoint is unique, so this converges to exactly what the
+    * distributed improvement wavefront converges to (GraphSpec pins
+    * driver ≡ distributed ≡ full recompute).
     */
   def incrementalAddAdaptive(
       dist: DataFrame,
@@ -239,31 +245,34 @@ object ShortestPath {
       newEdges: DataFrame,
       maxIters: Int = 30,
       checkpointEvery: Int = 3,
-      maxDriverEdges: Long = 2000000L,
-  ): DataFrame = {
-    val eAll = edgesAll
-      .select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
-      .localCheckpoint(eager = false)
-    if (eAll.count() <= maxDriverEdges) {
-      val es = eAll.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.triples(longTriples(edgesAll), maxDriverEdges)(
+      incrementalAdd(dist, _, newEdges, maxIters, checkpointEvery)) { es =>
       val state = dist
         .select(col("source").cast("long"), col("node").cast("long"), col("dist").cast("long"))
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (s, rows) =>
-          s -> scala.collection.mutable.LongMap(rows.map(r => r.getLong(1) -> r.getLong(2)): _*)
-        }.toSeq
-      driverConverged(eAll.sparkSession, state, es, maxIters)
-    } else incrementalAdd(dist, eAll, newEdges, maxIters, checkpointEvery)
-  }
+        .collect().groupBy(_.getLong(0)).toSeq
+        .map { case (s, rs) => s -> mutable.LongMap(rs.map(r => r.getLong(1) -> r.getLong(2)): _*) }
+      driverConverged(edgesAll.sparkSession, state, es, maxIters)
+    }
 
-  /** Shared driver-memory fixpoint: full-edge relaxation sweeps from the
+  private def longTriples(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
+
+  private def sourceStates(sources: DataFrame): Seq[(Long, mutable.LongMap[Long])] =
+    sources.select(col("source").cast("long")).collect().toSeq
+      .map(r => r.getLong(0) -> mutable.LongMap(r.getLong(0) -> 0L))
+
+  /** The one driver relaxation sweep: full-edge relaxation from the
     * given per-source state, early-exit when a sweep changes nothing,
-    * loudly capped at `maxIters` sweeps like the distributed rounds.
+    * capped at `maxIters` sweeps like the distributed rounds. Each sweep
+    * reads the PREVIOUS sweep's map (sweeps copy), so after sweep r a
+    * distance is the min cost over paths of ≤ r more edges — exactly one
+    * distributed round.
     */
   private def driverConverged(
-      spark: org.apache.spark.sql.SparkSession,
-      init: Seq[(Long, scala.collection.mutable.LongMap[Long])],
+      spark: SparkSession,
+      init: Seq[(Long, mutable.LongMap[Long])],
       es: Array[(Long, Long, Long)],
       maxIters: Int,
   ): DataFrame = {
@@ -286,54 +295,5 @@ object ShortestPath {
       }
       dist.toSeq.map { case (n, d) => (s, n, d) }
     }.toDF("source", "node", "dist")
-  }
-
-  /** [[run]] with the small-graph escape hatch every iterative operator
-    * in this repo has (NearDup.connectedComponentsAdaptive, PageRank
-    * .runAdaptive): a graph under `maxDriverEdges` long-triples iterates
-    * in driver memory instead of paying `iters` rounds of scheduler
-    * latency. Both paths are BIT-IDENTICAL by construction — pure long
-    * arithmetic admits no accumulation-order effects, so equality is
-    * structural (ShortestPathSpec asserts it anyway). EAGER: sizing the
-    * edge list runs a count job; the edge subtree is lazily
-    * checkpointed so both paths share one materialization. Long node
-    * ids only (ANSI casts throw on non-numeric ids).
-    */
-  def runAdaptive(
-      edges: DataFrame,
-      sources: DataFrame,
-      iters: Int,
-      maxDriverEdges: Long = 2000000L,
-  ): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"))
-      .localCheckpoint(eager = false)
-    if (e.count() <= maxDriverEdges) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val srcs = sources.select(col("source").cast("long")).collect().map(_.getLong(0))
-      // Per-source Bellman-Ford over a LongMap keyed by node; `iters`
-      // sweeps of full-edge relaxation reproduces the hop-bounded
-      // semantics exactly (dist after sweep r = min cost over <= r edges
-      // requires reading the PREVIOUS sweep's map, so sweeps copy).
-      import spark.implicits._
-      srcs.toSeq.flatMap { s =>
-        var dist = scala.collection.mutable.LongMap(s -> 0L)
-        var i = 0
-        while (i < iters) {
-          val next = dist.clone()
-          es.foreach { case (u, v, w) =>
-            dist.get(u).foreach { du =>
-              val cand = du + w
-              if (next.get(v).forall(_ > cand)) next(v) = cand
-            }
-          }
-          dist = next
-          i += 1
-        }
-        dist.toSeq.map { case (n, d) => (s, n, d) }
-      }.toDF("source", "node", "dist")
-    } else run(e, sources, iters)
   }
 }

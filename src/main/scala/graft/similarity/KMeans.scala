@@ -78,7 +78,7 @@ object KMeans {
       .localCheckpoint(false)
 
   /** Vector-count bound for the driver-tier fits — the KMeans sibling of
-    * the graph kit's 2M-edge escape hatch (PageRank.runAdaptive et al.):
+    * the graph kit's 2M-edge driver tier ([[graft.graph.DriverTier]]):
     * an input under the bound fits in driver memory (200k × 64 dims ≈
     * 100 MB as primitive arrays) and the Lloyd rounds run as driver
     * sweeps instead of one scheduled job each; past the bound the

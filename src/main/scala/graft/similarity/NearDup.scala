@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.simhash64
+import graft.graph.DriverTier
 import graft.text.TextAnalysis
 
 /** Near-duplicate detection at corpus scale (beyond-reference scope).
@@ -479,26 +480,19 @@ object NearDup {
     * graph). Both paths label every node with the min node id
     * (hash-space id for non-integral keys) of its component.
     *
-    * EAGER: counting the edge list runs a job at construction (the edge
-    * subtree is localCheckpointed first, so the candidate pipeline above
-    * it runs exactly once and is reused by whichever path executes). Use
-    * [[connectedComponents]] where construction must stay job-free.
-    *
-    * @param driverEdgeThreshold max edges for the driver path. Honest
-    *   driver cost: collect() materializes ~130 B per edge as Row objects
-    *   plus the union-find and label maps — the 2M default needs roughly
-    *   0.5 GB of transient driver heap. Size down for small drivers.
+    * The tier choice is [[graft.graph.DriverTier]]'s (node ids are long
+    * after normalization); it is EAGER — counting the edge list runs a
+    * job at construction. Use [[connectedComponents]] where construction
+    * must stay job-free.
     */
   def connectedComponentsAdaptive(
       edges: DataFrame,
       aCol: String,
       bCol: String,
-      driverEdgeThreshold: Long = 2000000L,
-  ): DataFrame = {
-    val spark = edges.sparkSession
-    val sym = symEdges(edges, aCol, bCol).localCheckpoint(eager = false)
-    if (sym.count() <= driverEdgeThreshold) {
-      val rows = sym.collect()
+      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
+  ): DataFrame =
+    DriverTier.pairs(symEdges(edges, aCol, bCol), maxDriverEdges)(
+      connectedComponents(_, "src", "dst", maxIter = 25, fixedIterations = false)) { es =>
       // Union-find with path halving; attaching the larger root under the
       // smaller keeps every root the min of its component, so find() alone
       // resolves the final labels.
@@ -512,21 +506,16 @@ object NearDup {
         }
         x
       }
-      rows.foreach { r =>
-        val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val labels = scala.collection.mutable.LongMap.empty[Long]
-      rows.foreach { r =>
-        val a = r.getLong(0); val b = r.getLong(1)
-        labels(a) = find(a); labels(b) = find(b)
-      }
+      es.foreach { case (a, b) => labels(a) = find(a); labels(b) = find(b) }
+      val spark = edges.sparkSession
       import spark.implicits._
       labels.toSeq.toDF("id", "label")
-    } else {
-      connectedComponents(sym, "src", "dst", maxIter = 25, fixedIterations = false)
     }
-  }
 
   /** CONTRACT variant of the MinHash pipeline, closing the oracle gap the
     * raw candidate query cannot (signatures are xxhash64-derived; no SQL

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.PageRank
+import org.apache.spark.sql.types.IntegerType
+import graft.graph.{DriverTier, PageRank}
 
 /** PageRank invariants on hand graphs — the rows-only q_pagerank query's
   * correctness anchor (no SQL oracle can express the iteration).
@@ -236,6 +238,13 @@ class GraphSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect().map(r => r._2 -> r._3).toMap
     assert(two == Map(1L -> 0L, 2L -> 10L, 3L -> 20L),
       s"round 2 must discover the cheaper 2-hop route: $two")
+    // runAdaptive keeps the same hop bound on both tiers: the driver
+    // sweep must stop after `iters` relaxations, not at the fixpoint.
+    for ((iters, want) <- Seq(1 -> one, 2 -> two); bound <- Seq(DriverTier.MaxDriverEdges, 0L)) {
+      val got = graft.graph.ShortestPath.runAdaptive(edges, srcs, iters, maxDriverEdges = bound)
+        .as[(Long, Long, Long)].collect().map(r => r._2 -> r._3).toMap
+      assert(got == want, s"runAdaptive iters=$iters maxDriverEdges=$bound: $got != $want")
+    }
   }
 
   test("sssp: multi-source rides the same rounds; unreached pairs are absent") {
@@ -399,6 +408,11 @@ class GraphSpec extends SparkTestBase {
         .as[(String, Long, Long, Double)].collect().toSet
       assert(drv == dist, s"HITS drift at rounds=$r:\n drv=$drv\n dist=$dist")
     }
+    // integer ids take the distributed path and keep their type
+    val intEdges = edges.select(col("src").cast("int"), col("dst").cast("int"))
+    val intDrv = Hits.runAdaptive(intEdges, rounds = 2)
+    assert(intDrv.schema("node").dataType == IntegerType)
+    assert(intDrv.collect().toSet == Hits.run(intEdges, rounds = 2).collect().toSet)
   }
 
   test("KCore.peelAdaptive == peel; KTruss.peelAdaptive == peel") {
@@ -418,6 +432,15 @@ class GraphSpec extends SparkTestBase {
     val ktDist = graft.graph.KTruss.peel(canon, k = 3, rounds = 2)
       .as[(Long, Long, Long)].collect().toSet
     assert(ktDrv == ktDist, s"KTruss drift:\n drv=$ktDrv\n dist=$ktDist")
+    // integer ids take the distributed path and keep their type
+    val intSym = sym.select(col("src").cast("int"), col("dst").cast("int"))
+    val kcInt = graft.graph.KCore.peelAdaptive(intSym, k = 3, rounds = 4)
+    assert(kcInt.schema("node").dataType == IntegerType)
+    assert(kcInt.collect().toSet == graft.graph.KCore.peel(intSym, k = 3, rounds = 4).collect().toSet)
+    val intCanon = canon.select(col("a").cast("int"), col("b").cast("int"))
+    val ktInt = graft.graph.KTruss.peelAdaptive(intCanon, k = 3, rounds = 2)
+    assert(Seq("a", "b").forall(c => ktInt.schema(c).dataType == IntegerType))
+    assert(ktInt.collect().toSet == graft.graph.KTruss.peel(intCanon, k = 3, rounds = 2).collect().toSet)
   }
 
   test("PageRank.runPersonalizedAdaptive == runPersonalized, bit-identical") {
@@ -428,5 +451,42 @@ class GraphSpec extends SparkTestBase {
     val dist = PageRank.runPersonalizedAdaptive(edges, seed, iters = 6,
       maxDriverEdges = 0L).as[(Long, Double)].collect().toMap
     assert(drv == dist, s"PPR drift:\n drv=$drv\n dist=$dist")
+  }
+
+  test("empty long edge set: every adaptive entry point agrees across tiers") {
+    import graft.graph.{Hits, KCore, KTruss, LabelProp, ShortestPath}
+    import graft.similarity.NearDup
+    val pairs = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val triples = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
+    val srcs = Seq(1L, 2L).toDF("source")
+    val converged = ShortestPath.runConverged(triples, srcs)
+    val entryPoints: Seq[(String, Long => DataFrame)] = Seq(
+      "PageRank.runAdaptive" -> (b => PageRank.runAdaptive(pairs, 3, maxDriverEdges = b)),
+      "PageRank.runPersonalizedAdaptive" -> (b =>
+        PageRank.runPersonalizedAdaptive(pairs, col("node") === 1L, 3, maxDriverEdges = b)),
+      "PageRank.runWeightedAdaptive" -> (b =>
+        PageRank.runWeightedAdaptive(triples, "w", 3, maxDriverEdges = b)),
+      "ShortestPath.runAdaptive" -> (b =>
+        ShortestPath.runAdaptive(triples, srcs, 3, maxDriverEdges = b)),
+      "ShortestPath.runConvergedAdaptive" -> (b =>
+        ShortestPath.runConvergedAdaptive(triples, srcs, maxDriverEdges = b)),
+      "ShortestPath.incrementalAddAdaptive" -> (b =>
+        ShortestPath.incrementalAddAdaptive(converged, triples, triples, maxDriverEdges = b)),
+      "LabelProp.runAdaptive" -> (b =>
+        LabelProp.runAdaptive(triples.withColumnRenamed("w", "weight"), 3, maxDriverEdges = b)),
+      "Hits.runAdaptive" -> (b => Hits.runAdaptive(pairs, 2, maxDriverEdges = b)),
+      "KCore.peelAdaptive" -> (b => KCore.peelAdaptive(pairs, 2, 3, maxDriverEdges = b)),
+      "KTruss.peelAdaptive" -> (b =>
+        KTruss.peelAdaptive(pairs.toDF("a", "b"), 3, 2, maxDriverEdges = b)),
+      "NearDup.connectedComponentsAdaptive" -> (b =>
+        NearDup.connectedComponentsAdaptive(pairs, "src", "dst", maxDriverEdges = b)),
+    )
+    // An empty edge set fits every bound >= 0, so -1 forces the distributed tier.
+    entryPoints.foreach { case (name, f) =>
+      val (drv, dist) = (f(DriverTier.MaxDriverEdges), f(-1L))
+      assert(drv.schema.map(c => c.name -> c.dataType) == dist.schema.map(c => c.name -> c.dataType),
+        s"$name schema: ${drv.schema.simpleString} vs ${dist.schema.simpleString}")
+      assert(drv.collect().toSet == dist.collect().toSet, s"$name rows differ")
+    }
   }
 }

@@ -349,7 +349,7 @@ class SimilaritySpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(fast == ref)
     // threshold 0 forces the distributed fallback — same labels.
-    val dist = NearDup.connectedComponentsAdaptive(edges, "a", "b", driverEdgeThreshold = 0L)
+    val dist = NearDup.connectedComponentsAdaptive(edges, "a", "b", maxDriverEdges = 0L)
       .as[(Long, Long)].collect().toMap
     assert(dist == ref)
   }
