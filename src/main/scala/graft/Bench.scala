@@ -7,16 +7,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // Five sketch queries (q_sketch_intersect, q_approx_stats,
-    // q_sketch_merge, q_quantile_sketch, q_weighted_quantile — the full
-    // list, see BENCH.md "Benched vs verified plans") carry exact
-    // contract columns that exist ONLY to satisfy the DuckDB oracle —
-    // Bench times the approx path a user would run; Verify (no property)
-    // keeps the exact shape the oracle hash-compares. Set
-    // SPARK_GRAFT_EXACT=1 to time the verified-exact shapes instead
-    // (used to produce the BENCH.md dual-plan table).
-    if (!sys.env.contains("SPARK_GRAFT_EXACT"))
-      System.setProperty("graft.bench.approxOnly", "true")
+    // Optional local profiling filter (unset → all queries): registry
+    // and `b_*` probe names.
+    val only = QueryDef.only(sys.env.get("SPARK_GRAFT_ONLY"),
+      n => SparkEntry.byName.contains(n) || SparkEntry.benchProbes.contains(n))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cores(default = GraftSession.CanonicalCores)
     val spark = GraftSession("graft-bench", cpus)
@@ -41,9 +35,6 @@ object Bench {
     // on textually-unchanged trivial queries (q_json_extract 0.33→2.69 s):
     // with two samples a single GC/container hiccup lands in the min half
     // the time; three samples make the min robust to one bad execution.
-    // Optional local profiling filter (unset in driver runs → all queries).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Self-defense against loaded gate runs (the r8 lesson: a contended
     // container reported q_date_bucket at 11× with zero code change, and
     // only a manual idle re-run cleared it): previous-round per-query
@@ -133,7 +124,11 @@ object Bench {
     // `benchProbes` keep production operator paths benched even where the
     // oracled query now times a contract harness (e.g. the LSH candidate
     // generators); they are excluded from Verify and the oracle gate.
-    val allEntries = (SparkEntry.queries ++ SparkEntry.benchProbes).toSeq.sortBy(_._1)
+    // Each registry entry is timed in its bench shape where it has one
+    // (the sketch queries' approximate path a user would run, see
+    // QueryDef), else in its verified shape.
+    val allEntries = (SparkEntry.registry.map(d => d.name -> d.bench.getOrElse(d.build)) ++
+      SparkEntry.benchProbes).sortBy(_._1)
     // Per-query WORST rep: the loaded half of the calm/loaded pair
     // persisted for every query in BENCH_FULL.json ("maxes") — min says
     // what the engine costs, max says what this container did to it, and

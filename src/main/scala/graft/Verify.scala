@@ -1,28 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each registry query's verified shape
+  * (`QueryDef.build`) → parquet, plus oracle_sql.json, for the driver's
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional subset (comma-separated registry names) for fast local
+    // iteration on new queries; the oracle json and manifest are filtered
+    // to match so tools/check.py stays consistent on partial dumps.
+    val only = QueryDef.only(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.byName.contains)
+    val selected = only.fold(SparkEntry.byName)(names => SparkEntry.byName.filter(kv => names(kv._1)))
     val spark = GraftSession("graft-verify", GraftSession.cores(default = 4))
     new java.io.File(outDir).mkdirs()
-    // Optional subset (comma-separated names) for fast local iteration on
-    // new queries; the oracle json and manifest are filtered to match so
-    // tools/check.py stays consistent on partial dumps.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selQueries = only.fold(SparkEntry.queries)(names => SparkEntry.queries.filter(kv => names(kv._1)))
-    val selOracles = only.fold(SparkEntry.oracleSql)(names => SparkEntry.oracleSql.filter(kv => names(kv._1)))
     // 4 queries in flight: the Spark scheduler is thread-safe and most
     // queries leave local[32] under-utilized (small shuffles, driver-side
     // planning); ~2× faster wall-clock than the sequential loop without
     // memory pressure. Each query writes to its own directory.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val tasks = selQueries.toSeq.map { case (name, fn) =>
+    val tasks = selected.toSeq.map { case (name, d) =>
       pool.submit(new Runnable {
         def run(): Unit =
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          try d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -43,13 +42,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = selOracles
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected
+      .map { case (k, d) => s"${q(k)}: ${q(d.oracleSql)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Manifest of executed queries so checkers can distinguish real
     // rows-only outputs from stray directories (checkpoints, leftovers).
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      selQueries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -385,6 +385,82 @@ class AsOfSpec extends SparkTestBase {
     assert(got.nonEmpty && got.forall(_.getAs[Boolean]("merged_within_3rsd")))
   }
 
+  // The bench shapes (QueryDef.bench) are what Bench times, but the
+  // oracle gate never sees them: their raw estimates are checked here
+  // against exact answers, inside the envelopes the verified shapes
+  // assert.
+  private def benchRows(name: String): Map[String, org.apache.spark.sql.Row] =
+    SparkEntry.byName(name).bench.get(spark, sf).collect()
+      .map(r => r.getAs[String]("l_returnflag") -> r).toMap
+
+  /** (flag, price, weight = truncated quantity) for every lineitem row. */
+  private lazy val linePrices: Seq[(String, Double, Long)] =
+    spark.read.parquet(s"$sf/lineitem.parquet")
+      .select($"l_returnflag", $"l_extendedprice", $"l_quantity".cast("long"))
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
+
+  private def exactDistinctOrders: Map[String, Long] =
+    spark.read.parquet(s"$sf/lineitem.parquet")
+      .groupBy("l_returnflag").agg(countDistinct($"l_orderkey"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("q_approx_stats bench shape: HLL within 6% of exact, median rank in [0.449, 0.551]") {
+    val got = benchRows("q_approx_stats")
+    val exact = exactDistinctOrders
+    assert(got.keySet == exact.keySet)
+    linePrices.groupBy(_._1).foreach { case (k, rows) =>
+      val r = got(k)
+      assert(r.getAs[Long]("n") == rows.size)
+      val est = r.getAs[Long]("approx_orders")
+      assert(math.abs(est - exact(k)) <= 0.06 * exact(k), s"$k: approx_orders $est vs exact ${exact(k)}")
+      val med = r.getAs[Double]("approx_median")
+      val (le, lt) = (rows.count(_._2 <= med).toDouble, rows.count(_._2 < med).toDouble)
+      assert(le / rows.size >= 0.449 && lt / rows.size <= 0.551,
+        s"$k: approx_median $med has rank [${lt / rows.size}, ${le / rows.size}]")
+    }
+  }
+
+  test("q_sketch_merge bench shape: merged HLL estimate within 5% of exact") {
+    val got = benchRows("q_sketch_merge")
+    val exact = exactDistinctOrders
+    assert(got.keySet == exact.keySet)
+    exact.foreach { case (k, d) =>
+      val est = got(k).getAs[Long]("approx_distinct_orders")
+      assert(math.abs(est - d) <= 0.05 * d, s"$k: approx_distinct_orders $est vs exact $d")
+    }
+  }
+
+  test("q_sketch_intersect bench shape: overlap estimate within 10% of the exact union") {
+    val rows = SparkEntry.byName("q_sketch_intersect").bench.get(spark, sf).collect()
+    assert(rows.length == 1)
+    val ev = spark.read.parquet(s"$sf/events.parquet").filter($"value" > 100)
+    def users(kind: String): Set[Long] =
+      ev.filter($"event_type" === kind).select($"user_id".cast("long")).distinct()
+        .collect().map(_.getLong(0)).toSet
+    val (a, b) = (users("purchase"), users("error"))
+    val (both, union) = ((a & b).size, (a | b).size)
+    assert(both > 0 && both < union, s"cohorts must overlap partially: both $both, union $union")
+    val est = rows.head.getAs[Long]("approx_both")
+    assert(math.abs(est - both) <= 0.10 * union, s"approx_both $est vs exact $both (union $union)")
+  }
+
+  test("q_quantile_sketch / q_weighted_quantile bench shapes: p50 (weighted) rank within 0.02 of 0.5") {
+    val byFlag = linePrices.groupBy(_._1)
+    val plain = benchRows("q_quantile_sketch")
+    val weighted = benchRows("q_weighted_quantile")
+    assert(plain.keySet == byFlag.keySet && weighted.keySet == byFlag.keySet)
+    byFlag.foreach { case (k, rows) =>
+      val p50 = plain(k).getAs[Double]("approx_p50")
+      val rank = rows.count(_._2 <= p50).toDouble / rows.size
+      assert(math.abs(rank - 0.5) <= 0.02, s"$k: approx_p50 $p50 has rank $rank")
+      val wp50 = weighted(k).getAs[Double]("approx_p50")
+      val wTotal = rows.map(_._3).sum
+      assert(weighted(k).getAs[Long]("w_total") == wTotal)
+      val wrank = rows.filter(_._2 <= wp50).map(_._3).sum.toDouble / wTotal
+      assert(math.abs(wrank - 0.5) <= 0.02, s"$k: weighted approx_p50 $wp50 has weighted rank $wrank")
+    }
+  }
+
   test("Sampling.hashSample is deterministic, partition-independent, and ~keep/16") {
     val df = spark.read.parquet(s"$sf/orders.parquet")
     val total = df.count()

@@ -213,9 +213,10 @@ class PlanShapeSpec extends SparkTestBase {
   test("registry-wide: no query plans an unpartitioned Window") {
     // The single-partition window is this engine's canonical scale-killer
     // (VERDICT r4/r5); guard the WHOLE registry so a new query cannot
-    // reintroduce one. Logical plans only — nothing executes.
+    // reintroduce one — bench shapes included. Logical plans only —
+    // nothing executes.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = (SparkEntry.queries.toSeq ++ benchShapes).sortBy(_._1).flatMap { case (name, fn) =>
       val bad = fn(spark, sf).queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
       }

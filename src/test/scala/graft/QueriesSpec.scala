@@ -6,9 +6,28 @@ class QueriesSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("QueryDef.index rejects a duplicate query name") {
+    // Each query's name and oracle are declared once, in its QueryDef; the
+    // index is what catches a second entry under the same name (a Map
+    // literal would keep the last one without a word).
+    val b: QueryDef.Builder = (s, _) => s.range(1).toDF()
+    val defs = Seq(QueryDef("q_a", b, "SELECT 1"), QueryDef("q_b", b, "SELECT 2"),
+      QueryDef("q_a", b, "SELECT 3"), QueryDef("q_c", b, "SELECT 4"), QueryDef("q_c", b, "SELECT 5"))
+    val e = intercept[IllegalArgumentException](QueryDef.index(defs))
+    assert(e.getMessage.contains("duplicate query names: q_a, q_c"), e.getMessage)
+    assert(QueryDef.index(defs.distinctBy(_.name)).keySet == Set("q_a", "q_b", "q_c"))
+    assert(SparkEntry.byName.size == SparkEntry.registry.size)
+  }
+
+  test("QueryDef.only: a SPARK_GRAFT_ONLY value naming an unknown query fails, naming it") {
+    val known = Set("q_pagerank", "q_ppr", "b_pagerank_dist")
+    assert(QueryDef.only(None, known).isEmpty)
+    assert(QueryDef.only(Some(" q_pagerank, ,q_ppr,"), known).contains(Set("q_pagerank", "q_ppr")))
+    val e = intercept[IllegalArgumentException](
+      QueryDef.only(Some("q_pagernk,q_ppr,q_zzz"), known))
+    assert(e.getMessage.contains("unknown queries: q_pagernk, q_zzz"), e.getMessage)
+    assert(intercept[IllegalArgumentException](QueryDef.only(Some(" , "), known))
+      .getMessage.contains("names no query"))
   }
 
   test("q_join_full keeps unmatched rows from BOTH sides") {
@@ -22,8 +41,8 @@ class QueriesSpec extends SparkTestBase {
     // r10: no allowlist — every registered query must be non-vacuous,
     // including the former zero-row trio (q_join_anti, q_bonferroni,
     // q_neardup_jaccard), whose predicates now leave survivors at
-    // every SF.
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // every SF. The bench shapes Bench times run here too.
+    (SparkEntry.queries ++ benchShapes).foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       assert(n > 0, s"$name returned 0 rows")
     }

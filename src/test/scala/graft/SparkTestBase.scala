@@ -18,6 +18,12 @@ abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** The registry's bench shapes (`QueryDef.bench`), keyed "name (bench)",
+    * for the registry-wide sweeps that must cover what Bench times.
+    */
+  def benchShapes: Seq[(String, QueryDef.Builder)] =
+    SparkEntry.registry.flatMap(d => d.bench.map(s"${d.name} (bench)" -> _))
+
   /** Scratch dir inside the repo target (never outside /root/repo).
     * Always starts EMPTY: append-mode writers (the streaming specs'
     * micro-batch files) must not see files left by a previous sbt run —
