@@ -31,17 +31,22 @@ object QueryDef {
     defs.map(d => d.name -> d).toMap
   }
 
-  /** The subset named by a `SPARK_GRAFT_ONLY` value (comma-separated,
-    * trimmed, blanks dropped); None when unset. Fails naming every name
-    * outside `known`, and on a value that names nothing — a typo must not
-    * turn into an empty run that a gate counts as green.
+  /** The subset named by a `SPARK_GRAFT_ONLY` value (comma-separated);
+    * None when unset. Checked by [[checked]].
     */
   def only(raw: Option[String], known: String => Boolean): Option[Set[String]] =
-    raw.map { value =>
-      val names = value.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      val unknown = names.filterNot(known).toSeq.sorted
-      require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-      require(names.nonEmpty, s"SPARK_GRAFT_ONLY names no query: '$value'")
-      names
-    }
+    raw.map(value => checked("SPARK_GRAFT_ONLY", value.split(",").toSeq, known).toSet)
+
+  /** `names` trimmed, blanks and repeats dropped, in order. Fails naming
+    * every name outside `known`, and on a list that names nothing — a
+    * typo must not turn into an empty run that a gate counts as green.
+    * `source` names where the list came from in the message.
+    */
+  def checked(source: String, names: Seq[String], known: String => Boolean): Seq[String] = {
+    val kept = names.map(_.trim).filter(_.nonEmpty).distinct
+    val unknown = kept.filterNot(known).sorted
+    require(unknown.isEmpty, s"$source names unknown queries: ${unknown.mkString(", ")}")
+    require(kept.nonEmpty, s"$source names no query: '${names.mkString(",")}'")
+    kept
+  }
 }

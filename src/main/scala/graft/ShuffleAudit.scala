@@ -43,10 +43,17 @@ object ShuffleAudit {
     "q_ivm_quantile_retract", "q_ivm_topk_bounded",
     "q_asof_salted")
 
+  /** The queries to audit: the command line's names, or
+    * [[defaultQueries]] when it names none. Fails, before any session
+    * starts, naming every name the registry does not know.
+    */
+  def queryNames(args: Seq[String]): Seq[String] =
+    QueryDef.checked("ShuffleAudit", if (args.nonEmpty) args else defaultQueries, SparkEntry.byName.contains)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sys.error(
       "ShuffleAudit: set SPARK_GRAFT_SF_DIR to the parquet scale dir to audit"))
-    val names = if (args.nonEmpty) args.toSeq else defaultQueries
+    val names = queryNames(args.toSeq)
     val spark = GraftSession("graft-shuffle-audit", GraftSession.cores(default = 32))
 
     val shuffleBytes = new LongAdder
@@ -66,26 +73,22 @@ object ShuffleAudit {
     val preexisting = spark.sparkContext.getPersistentRDDs.keySet
     val measured = Seq.newBuilder[(String, Double, Long, Long, Long)]
     names.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case None => System.err.println(s"[audit] unknown query: $name")
-        case Some(fn) =>
-          shuffleBytes.reset(); shuffleRows.reset(); inputBytes.reset()
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            // listener events are posted async; drain before reading
-            org.apache.spark.sql.GraftShim.drainListenerBus(spark)
-            val in = inputBytes.sum(); val sh = shuffleBytes.sum()
-            val amp = if (in > 0) sh.toDouble / in else Double.NaN
-            println(f"""{"q":"$name","sec":$sec%.2f,"input_mb":${in / 1048576.0}%.1f,"shuffle_mb":${sh / 1048576.0}%.1f,"shuffle_rows":${shuffleRows.sum()},"amplification":$amp%.3f}""")
-            measured += ((name, sec, in, sh, shuffleRows.sum()))
-          } catch {
-            case e: Throwable => System.err.println(s"[audit] $name failed: $e")
-          }
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!preexisting.contains(id)) rdd.unpersist(blocking = false)
-          }
+      shuffleBytes.reset(); shuffleRows.reset(); inputBytes.reset()
+      val t0 = System.nanoTime()
+      try {
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        // listener events are posted async; drain before reading
+        org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+        val in = inputBytes.sum(); val sh = shuffleBytes.sum()
+        val amp = if (in > 0) sh.toDouble / in else Double.NaN
+        println(f"""{"q":"$name","sec":$sec%.2f,"input_mb":${in / 1048576.0}%.1f,"shuffle_mb":${sh / 1048576.0}%.1f,"shuffle_rows":${shuffleRows.sum()},"amplification":$amp%.3f}""")
+        measured += ((name, sec, in, sh, shuffleRows.sum()))
+      } catch {
+        case e: Throwable => System.err.println(s"[audit] $name failed: $e")
+      }
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!preexisting.contains(id)) rdd.unpersist(blocking = false)
       }
     }
     persist(new java.io.File(sfDir).getName, measured.result())

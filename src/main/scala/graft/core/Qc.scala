@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions._
   */
 object Qc {
 
-  final case class QcException(msg: String) extends RuntimeException(msg)
+  /** @param written what the K1 sink left, when the check that failed
+    *                ran during that write
+    */
+  final case class QcException(msg: String, written: Option[Writers.Written] = None)
+      extends RuntimeException(msg)
 
   def assertCountBetween(df: DataFrame, lo: Long, hi: Long, what: String = "rows"): Long = {
     val n = df.count()
@@ -174,9 +178,9 @@ object Qc {
   def contractCounts(metrics: Row): Map[String, Long] =
     metrics.schema.fieldNames.map(f => f -> metrics.getAs[Long](f)).toMap
 
-  def failOnViolations(counts: Map[String, Long]): Unit = {
+  def failOnViolations(counts: Map[String, Long], written: Option[Writers.Written] = None): Unit = {
     val bad = counts.toSeq.sortBy(_._1).collect { case (l, n) if n != 0 => s"$l=$n" }
-    if (bad.nonEmpty) throw QcException(s"evidence contract violations: ${bad.mkString(", ")}")
+    if (bad.nonEmpty) throw QcException(s"evidence contract violations: ${bad.mkString(", ")}", written)
   }
 
   /** Several boolean invariants in ONE job: each predicate is counted in a

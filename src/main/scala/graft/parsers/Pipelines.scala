@@ -3,6 +3,7 @@ package graft.parsers
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Qc.EvidenceContract
+import graft.core.Writers
 
 /** The engine-level pipeline registry — the Spark-native counterpart of
   * the reference's Snakemake DAG (`Snakefile:60-86`): ~25 independent
@@ -220,10 +221,15 @@ object Pipelines {
   /** Run one pipeline and write its evidence with the K1 sink, the
     * pipeline's contract validated DURING the write (observe — the
     * reference's pre-accept JSON Schema gate, at zero extra scans).
+    * Returns the sink's report: rows, bytes and violation counts.
     */
-  def runToFile(spark: SparkSession, name: String, inputs: Map[String, DataFrame], outFile: String): Unit = {
+  def runToFile(
+      spark: SparkSession,
+      name: String,
+      inputs: Map[String, DataFrame],
+      outFile: String): Writers.Written = {
     val p = byName(name)
-    graft.core.Writers.writeJsonGzSingle(p.run(spark, inputs), outFile,
+    Writers.writeJsonGzSingle(p.run(spark, inputs), outFile,
       if (p.contract.isEmpty) None else Some(p.contract))
   }
 }

@@ -51,6 +51,59 @@ class CoreSpec extends SparkTestBase {
     assert(back.columns.sorted.toSeq == Seq("score", "target"))
   }
 
+  /** Every line of a gzip file, read with the JDK's reader (which, like
+    * Hadoop's codec, reads every member of a multi-member file).
+    */
+  private def gzLines(path: String): Vector[String] = {
+    val src = scala.io.Source.fromInputStream(
+      new java.util.zip.GZIPInputStream(new java.io.FileInputStream(path)), "UTF-8")
+    try src.getLines().toVector finally src.close()
+  }
+
+  test("Writers.writeJsonGzSingle joins parallel parts in partition order into one file (K1)") {
+    val dir = tmpDir("sink_parts")
+    val out = s"$dir/ordered.json.gz"
+    // 7919 is coprime to 50000, so k is a permutation of the ids. A range
+    // repartition plus a partition-local sort is orderBy's plan with a
+    // fixed partition count (orderBy leaves the count to AQE, which may
+    // coalesce a small output to one); 13 parts put indices past 9 into
+    // the join.
+    val df = spark.range(0, 50000, 1, 7)
+      .select(($"id" * 7919 % 50000).as("k"), concat(lit("g"), $"id").as("target"))
+      .repartitionByRange(13, $"k").sortWithinPartitions("k")
+    assert(df.rdd.getNumPartitions == 13)
+    val expected = df.toJSON.collect().toVector
+    assert(expected.size == 50000)
+    Writers.writeJsonGzSingle(df, out)
+    // Compared line by line: a failure names the first line out of order.
+    def firstMismatch(lines: Vector[String]) =
+      if (lines.size != expected.size) Some(s"${lines.size} lines, expected ${expected.size}")
+      else lines.indices.find(i => lines(i) != expected(i)).map(i => s"line $i out of partition order: ${lines(i)}")
+    val jdk = gzLines(out)
+    assert(firstMismatch(jdk).isEmpty, firstMismatch(jdk))
+    val hadoop = spark.read.text(out).as[String].collect().toVector
+    assert(firstMismatch(hadoop).isEmpty, firstMismatch(hadoop))
+    // One non-hidden file, no temp dir.
+    assert(new java.io.File(dir).listFiles().filterNot(_.getName.startsWith(".")).map(_.getName).toSeq ==
+      Seq("ordered.json.gz"))
+    assert(!new java.io.File(out + "_tmp").exists())
+  }
+
+  test("Writers.writeJsonGzSingle: zero rows over many partitions is a valid empty gzip; a rewrite overwrites") {
+    val dir = tmpDir("sink_empty")
+    val out = s"$dir/evidence.json.gz"
+    val empty = spark.range(0, 1000, 1, 5).filter($"id" < 0).select($"id".as("k"))
+    assert(empty.rdd.getNumPartitions == 5)
+    val w = Writers.writeJsonGzSingle(empty, out)
+    assert(gzLines(out).isEmpty)
+    assert(spark.read.text(out).count() == 0)
+    assert(w.bytes == new java.io.File(out).length() && w.bytes > 0)
+    val again = spark.range(0, 30, 1, 3).select($"id".as("k"))
+    Writers.writeJsonGzSingle(again, out)
+    assert(gzLines(out) == again.toJSON.collect().toVector)
+    assert(!new java.io.File(out + "_tmp").exists())
+  }
+
   test("Union.unionByNameAll tolerates missing columns (U1)") {
     val a = Seq((1, "x")).toDF("id", "only_a")
     val b = Seq((2, 9.9)).toDF("id", "only_b")

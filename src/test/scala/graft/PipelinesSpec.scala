@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.parsers.Pipelines
 import graft.streaming.{EventsStream, EvidenceSink}
@@ -16,10 +18,21 @@ class PipelinesSpec extends SparkTestBase {
   test("runToFile executes a pipeline end-to-end through the K1 sink") {
     val dir = tmpDir("pipe")
     val raw = Seq(("SLC12A4/SLC12A6", "Neuro", "d")).toDF("Gene", "Therapeutic Area", "Description")
-    Pipelines.runToFile(spark, "tep", Map("raw" -> raw), s"$dir/tep.json.gz")
+    val written = Pipelines.runToFile(spark, "tep", Map("raw" -> raw), s"$dir/tep.json.gz")
     val back = spark.read.json(s"$dir/tep.json.gz")
     assert(back.count() == 2)
     assert(back.columns.contains("targetFromSourceId"))
+    // RunPipeline's report: rows from the write's metric, bytes from the
+    // file, one count per contract rule.
+    assert(written.rows.contains(2L))
+    assert(written.bytes == new java.io.File(s"$dir/tep.json.gz").length())
+    val report = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(RunPipeline.report("tep", s"$dir/tep.json.gz", written))
+    assert(report.get("pipeline").asText == "tep" && report.get("rows_written").asLong == 2L)
+    assert(report.get("bytes_written").asLong == written.bytes)
+    val rules = Pipelines.byName("tep").contract
+    assert(report.get("violations").size == graft.core.Qc.contractViolations(rules).size)
+    assert(report.get("violations").elements().asScala.forall(_.asLong == 0L))
   }
 
   test("evidence contract validates a full parser pipeline output at the K1 sink") {

@@ -30,6 +30,15 @@ class QueriesSpec extends SparkTestBase {
       .getMessage.contains("names no query"))
   }
 
+  test("ShuffleAudit: an unknown query name on the command line fails before any session, naming it") {
+    assert(ShuffleAudit.queryNames(Nil) == ShuffleAudit.defaultQueries)
+    assert(ShuffleAudit.queryNames(Seq("q_pagerank", " q_ppr ")) == Seq("q_pagerank", "q_ppr"))
+    val e = intercept[IllegalArgumentException](ShuffleAudit.queryNames(Seq("q_pagernk", "q_ppr", "q_zzz")))
+    assert(e.getMessage.contains("ShuffleAudit names unknown queries: q_pagernk, q_zzz"), e.getMessage)
+    assert(intercept[IllegalArgumentException](ShuffleAudit.queryNames(Seq(" ")))
+      .getMessage.contains("names no query"))
+  }
+
   test("q_join_full keeps unmatched rows from BOTH sides") {
     val sides = SparkEntry.queries("q_join_full")(spark, sf)
       .groupBy("side").count().collect()

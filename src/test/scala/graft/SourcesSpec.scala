@@ -143,14 +143,26 @@ class SourcesSpec extends SparkTestBase {
     val contract = Qc.EvidenceContract(
       required = Seq("targetFromSourceId"),
       enums = Map("datasourceId" -> Seq("clingen")))
-    Writers.writeJsonGzSingle(good, s"$dir/good.json.gz", Some(contract))
+    val clean = Writers.writeJsonGzSingle(good, s"$dir/good.json.gz", Some(contract))
     assert(spark.read.json(s"$dir/good.json.gz").count() == 2)
-    val planted = good.unionByName(
-      Seq((null: String, "not_clingen", 0.1)).toDF("targetFromSourceId", "datasourceId", "score"))
+    assert(clean.rows.contains(2L) && clean.violations.values.forall(_ == 0L))
+    // The two violations sit in different partitions (1 and 6 of 8), so
+    // each partition's counters must be summed into the one observed row.
+    val planted = spark.range(0, 4000, 1, 8).select(
+      when($"id" === 700, lit(null)).otherwise(concat(lit("ENSG"), $"id")).as("targetFromSourceId"),
+      when($"id" === 3300, "not_clingen").otherwise("clingen").as("datasourceId"),
+      ($"id" / 4000.0).as("score"))
+    assert(planted.rdd.getNumPartitions == 8)
     val ex = intercept[Qc.QcException](
       Writers.writeJsonGzSingle(planted, s"$dir/bad.json.gz", Some(contract)))
-    assert(ex.getMessage.contains("required:targetFromSourceId=1") &&
-      ex.getMessage.contains("enum:datasourceId=1"))
+    assert(ex.getMessage.contains("enum:datasourceId=1,") &&
+      ex.getMessage.endsWith("required:targetFromSourceId=1"), ex.getMessage)
+    val written = ex.written.get
+    assert(written.violations == Map("required:targetFromSourceId" -> 1L, "enum:datasourceId" -> 1L))
+    // The bytes landed before the throw, and the report describes them.
+    assert(written.rows.contains(4000L))
+    assert(written.bytes == new java.io.File(s"$dir/bad.json.gz").length())
+    assert(spark.read.text(s"$dir/bad.json.gz").count() == 4000)
   }
 
   // A genuine .xlsx built from its OOXML parts (ECMA-376: zip + XML) —
