@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim}
 import org.apache.spark.sql.functions._
 
 /** String/regex cleanup library — SURVEY.md §2.9.
@@ -35,9 +35,11 @@ object Cleanup {
   def normalizeText(c: Column): Column =
     lower(trim(regexp_replace(c, "\\s+", " ")))
 
-  /** Conditional-null scrub: empty string → null (`PanelApp.py:213-216`). */
+  /** Conditional-null scrub: blank string → null (`PanelApp.py:213-216`),
+    * `when(trim(c) =!= "", c)` with `c` evaluated once per row.
+    */
   def emptyToNull(c: Column): Column =
-    when(trim(c) =!= "", c)
+    GraftShim.emptyToNull(c)
 
   /** Dictionary replace with exact-match semantics (reference
     * `df.replace(dict)` — `AzGeneBurden.py:255`, `CvdiGeneBurden.py:194`):

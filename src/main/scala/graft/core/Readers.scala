@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{DataFrame, Dataset, GraftShim, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source readers — SURVEY.md §2.1 (S1–S9, S13).
@@ -11,10 +13,11 @@ import org.apache.spark.sql.types.StructType
   * `common/evidence.py:156-157`, nullValue `IMPC.py:179-190`, metadata-row
   * skip `ClinGen.py:66-70`), re-expressed on `DataFrameReader`.
   *
-  * Scale notes: all readers return lazy scans; schema-forced CSV avoids the
-  * extra inference pass over the data (inference reads the whole file once
-  * before the real scan — at 100 TB that is a full extra job, so parsers
-  * that know their schema must pass one).
+  * Scale notes: all readers return lazy scans. An inferred CSV/TSV schema
+  * costs one Spark job that reads every input line before the real scan
+  * (at 100 TB that is a full extra pass over the data), so parsers that
+  * know their schema must pass one; [[readPath]] takes the header from the
+  * files' first lines on the driver, so inference is that one job only.
   */
 object Readers {
 
@@ -29,17 +32,21 @@ object Readers {
       nullValue: Option[String] = None,
       inferSchema: Boolean = false,
   ): DataFrame = {
-    var r = spark.read
-      .option("sep", sep)
-      .option("header", header.toString)
-      .option("multiLine", multiLine.toString)
-      .option("quote", "\"")
-      .option("escape", "\"")
+    var r = spark.read.options(csvOptions(sep, header, multiLine))
     schema.foreach(s => r = r.schema(s))
     if (schema.isEmpty && inferSchema) r = r.option("inferSchema", "true")
     nullValue.foreach(v => r = r.option("nullValue", v))
     r.csv(path)
   }
+
+  /** The scan options [[csv]] sets on every delimited read. */
+  private def csvOptions(sep: String, header: Boolean, multiLine: Boolean): Map[String, String] = Map(
+    "sep" -> sep,
+    "header" -> header.toString,
+    "multiLine" -> multiLine.toString,
+    "quote" -> "\"",
+    "escape" -> "\"",
+  )
 
   /** TSV shorthand (the dominant delimited format in the reference). */
   def tsv(
@@ -47,9 +54,8 @@ object Readers {
       path: String,
       schema: Option[StructType] = None,
       header: Boolean = true,
-      inferSchema: Boolean = false,
   ): DataFrame =
-    csv(spark, path, sep = "\t", header = header, schema = schema, inferSchema = inferSchema)
+    csv(spark, path, sep = "\t", header = header, schema = schema)
 
   /** S4: skip N leading metadata lines, then parse as CSV with a forced
     * schema (reference: ClinGen's 6 junk header lines, `ClinGen.py:66-70`).
@@ -98,7 +104,8 @@ object Readers {
 
   /** S8: format auto-detect by extension (reference `read_path`,
     * `common/evidence.py:230-285`). Directories default to parquet unless
-    * they contain JSON parts.
+    * they contain JSON parts; the directory is listed through the Hadoop
+    * FS, so `file:`, `hdfs://` and plain paths behave alike.
     */
   def readPath(spark: SparkSession, path: String): DataFrame = {
     val lower = path.toLowerCase.stripSuffix(".gz").stripSuffix(".bz2")
@@ -108,14 +115,53 @@ object Readers {
       Xlsx.read(spark, path, Xlsx.sheetNames(path).head)
     else if (lower.endsWith(".json") || lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
       json(spark, path)
-    else if (lower.endsWith(".tsv") || lower.endsWith(".tab")) tsv(spark, path, inferSchema = true)
-    else if (lower.endsWith(".csv")) csv(spark, path, inferSchema = true)
+    else if (lower.endsWith(".tsv") || lower.endsWith(".tab")) inferred(spark, path, "\t")
+    else if (lower.endsWith(".csv")) inferred(spark, path, ",")
     else {
-      val f = new java.io.File(path)
-      if (f.isDirectory && Option(f.list()).exists(_.exists(_.contains(".json"))))
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p) && fs.getFileStatus(p).isDirectory &&
+          fs.listStatus(p).exists(_.getPath.getName.contains(".json")))
         json(spark, path, recursive = true)
       else parquet(spark, path)
     }
+  }
+
+  /** [[csv]] with Spark's own inferred schema, in one Spark job instead of
+    * two. Spark's inference runs a `take(1)` job for the header line, then
+    * the inference scan. Here each file's first non-blank line is read on
+    * the driver instead; when every file that has one gives the same line,
+    * that line is the header Spark would pick, whatever its split order,
+    * and only the inference scan runs. Otherwise (the files disagree, or
+    * none has a line) the plain `inferSchema` read decides, as before.
+    */
+  private def inferred(spark: SparkSession, path: String, sep: String): DataFrame = {
+    val lines = spark.read.textFile(path)
+    lines.inputFiles.toSeq.flatMap(f => firstLine(spark, f)).distinct match {
+      case Seq(header) =>
+        val options = csvOptions(sep, header = true, multiLine = false) + ("inferSchema" -> "true")
+        csv(spark, path, sep = sep, schema = Some(GraftShim.inferCsvSchema(spark, lines, header, options)))
+      case _ => csv(spark, path, sep = sep, inferSchema = true)
+    }
+  }
+
+  /** The first line of one file that is not all spaces (Spark's header
+    * pick trims spaces only, so a tab-only line counts), as the text scan
+    * reads it: the codec chosen by extension, UTF-8, a leading byte-order
+    * mark dropped (as Hadoop's `LineRecordReader` does) and `\n`, `\r\n` or
+    * `\r` ending a line. Read through the Hadoop FS on the driver: no
+    * Spark job.
+    */
+  private def firstLine(spark: SparkSession, file: String): Option[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(new java.net.URI(file))
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+    try Iterator.continually(reader.readLine()).takeWhile(_ != null).zipWithIndex
+      .map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
+      .find(_.exists(_ != ' '))
+    finally reader.close()
   }
 
   /** S10: multi-row-header delimited scan (reference CvdiGeneBurden Excel

@@ -235,38 +235,46 @@ object EncoreParser {
 }
 
 /** Cancer-biomarkers parser (reference `modules/cancerBiomarkers.py`):
-  * the F1 gDNA→variant-ID native chain (translate + regexp_extract,
+  * the F1 gDNA→variant-ID native chain (regexp_extract + concat_ws,
   * `:301-316`) and the R9 zip-with-pad of alterations × types (`:318-331`).
   */
 object CancerBiomarkersParser {
 
-  /** `chr7:g.140453136A>T`-ish gDNA HGVS → `7_140453136_A_T`
-    * (no UDF: translate + regexp_extract + concat_ws).
+  /** The groups of a `chr7:g.140453136A>T`-ish gDNA HGVS, in variant-ID
+    * order (`7_140453136_A_T`): chromosome, position, reference, alternate.
     */
-  def variantId(gdna: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val chr = regexp_extract(gdna, "^chr([0-9XYM]+):", 1)
-    val pos = regexp_extract(gdna, "g\\.(\\d+)", 1)
-    val ref = regexp_extract(gdna, "\\d+([ACGT]+)>", 1)
-    val alt = regexp_extract(gdna, ">([ACGT]+)$", 1)
-    when(chr =!= "" && pos =!= "" && ref =!= "" && alt =!= "",
-      concat_ws("_", chr, pos, ref, alt))
-  }
+  private val gdnaGroups: Seq[(String, String)] = Seq(
+    "chr" -> "^chr([0-9XYM]+):",
+    "pos" -> "g\\.(\\d+)",
+    "ref" -> "\\d+([ACGT]+)>",
+    "alt" -> ">([ACGT]+)$",
+  )
 
-  def apply(raw: DataFrame): DataFrame =
+  /** The gDNA groups and both `;` splits are bound in one projection, so
+    * each regex and split runs once per row: the variant ID's `CASE WHEN`
+    * reads every group in its condition and again in its value, and the
+    * zip reads the types twice per alteration. The ID is null unless all
+    * four groups match.
+    */
+  def apply(raw: DataFrame): DataFrame = {
+    val groups = gdnaGroups.map { case (name, _) => col(name) }
     raw
-      .withColumn("variantId", variantId(col("gDNA")))
-      .withColumn("alterationEntries",
-        Reshape.zipWithPad(split(col("alterations"), ";"), split(col("alterationTypes"), ";")))
+      .select(Seq(
+        col("gene"), col("tumorType"), col("drug"),
+        split(col("alterations"), ";").as("alterations"),
+        split(col("alterationTypes"), ";").as("alterationTypes"),
+      ) ++ gdnaGroups.map { case (name, re) => regexp_extract(col("gDNA"), re, 1).as(name) }: _*)
       .select(
         lit("cancer_biomarkers").as("datasourceId"),
         col("gene").as("targetFromSourceId"),
         col("tumorType").as("diseaseFromSource"),
         col("drug").as("drugFromSource"),
-        col("variantId"),
-        transform(col("alterationEntries"),
+        when(groups.map(_ =!= "").reduce(_ && _), concat_ws("_", groups: _*)).as("variantId"),
+        transform(Reshape.zipWithPad(col("alterations"), col("alterationTypes")),
           e => struct(e.getField("value").as("name"), e.getField("type").as("type")))
           .as("biomarkers"),
       )
+  }
 }
 
 /** Target-safety parser (reference `modules/TargetSafety.py:69-141`):

@@ -3,11 +3,9 @@ package graft.parsers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Reshape, Stats}
-
 /** Baseline-expression metrics parser (reference
   * `modules/baseline_expression/{baseline.py,metrics.py}`): the GTEx
-  * gene×tissue matrix (pandas there) becomes melt → per-gene tissue
+  * gene×tissue matrix (pandas there) becomes a per-gene tissue
   * vector → Gini + HPA specificity/distribution classifiers, all as
   * higher-order column expressions (no UDF, no driver loop).
   *
@@ -27,11 +25,16 @@ object BaselineExpressionParser {
       lowExpressionThreshold: Double = 1.0,
       adatissLut: Option[DataFrame] = None,
   ): DataFrame = {
-    val molten = Reshape.melt(wide, Seq(geneCol), varName = "tissueName", valName = "expression")
-    val vectors = molten
+    // One tissue array per input row, grouped by gene: the same vector as
+    // melting to gene × tissue rows and collecting them back, without the
+    // rows (a gene listed twice gets both rows' tissues, a null cell a
+    // null expression).
+    val tissueNames = wide.columns.filterNot(_ == geneCol).toSeq
+    val vectors = wide
       .groupBy(geneCol)
       .agg(
-        sort_array(collect_list(struct(col("tissueName"), col("expression").cast("double").as("expression"))))
+        sort_array(flatten(collect_list(array(tissueNames.map(t =>
+          struct(lit(t).as("tissueName"), col(t).cast("double").as("expression"))): _*))))
           .as("tissues"))
       .withColumn("expr_vec", transform(col("tissues"), _.getField("expression")))
     val hpa = graft.functions.GraftFunctions.hpaClassify(col("expr_vec"), lowExpressionThreshold)

@@ -170,30 +170,28 @@ object ChemicalProbesParser {
 
 /** Brain-CRISPR parser, description-splitting core (reference
   * `modules/BrainCRISPR.py:118-175` — an F5 struct-returning Python UDF
-  * over a markdown-ish experiment description; here a native
-  * regexp_extract chain into a struct).
+  * over a markdown-ish experiment description; here native
+  * regexp_extracts).
   */
 object BrainCrisprParser {
 
-  /** "TITLE | experiment: EXP | analysis: AN" → struct(title, experiment,
-    * analysis), tolerant of missing tails.
+  /** One `|`-delimited part of "TITLE | experiment: EXP | analysis: AN",
+    * trimmed; null when missing or blank.
     */
-  def parseDescription(desc: Column): Column = struct(
-    graft.core.Cleanup.emptyToNull(trim(regexp_extract(desc, "^([^|]+)", 1))).as("title"),
-    graft.core.Cleanup.emptyToNull(trim(regexp_extract(desc, "experiment:\\s*([^|]+)", 1))).as("experiment"),
-    graft.core.Cleanup.emptyToNull(trim(regexp_extract(desc, "analysis:\\s*([^|]+)", 1))).as("analysis"),
-  )
+  private def part(desc: Column, re: String): Column =
+    graft.core.Cleanup.emptyToNull(trim(regexp_extract(desc, re, 1)))
 
   def apply(raw: DataFrame, diseaseLut: DataFrame): DataFrame =
     raw
-      .withColumn("desc", parseDescription(col("description")))
+      .withColumn("studyOverview", part(col("description"), "^([^|]+)"))
+      .withColumn("experimentDescription", part(col("description"), "experiment:\\s*([^|]+)"))
       .join(broadcast(diseaseLut), Seq("screenId"), "left")
       .select(
         lit("crispr_brain").as("datasourceId"),
         col("targetFromSourceId"),
         col("screenId").as("studyId"),
-        col("desc.title").as("studyOverview"),
-        col("desc.experiment").as("experimentDescription"),
+        col("studyOverview"),
+        col("experimentDescription"),
         col("diseaseFromSourceMappedId"),
         col("resourceScore").cast("double").as("resourceScore"),
       )

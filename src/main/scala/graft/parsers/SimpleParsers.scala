@@ -220,27 +220,33 @@ object PanelAppParser {
       .withColumn("phenotype", explode(split(col("phenotype"), ";")))
     val cleaned = Cleanup.applyRegexRules(exploded, "phenotype", phenotypeRulesAfterSplit)
     cleaned
-      .withColumn("omimId", Cleanup.emptyToNull(regexp_extract(col("phenotype"), omimRe, 2)))
-      .withColumn("ontologyId", Cleanup.emptyToNull(
-        when(regexp_extract(col("phenotype"), otherRe, 2) =!= "",
-          concat(
-            // Normalize source tag to its canonical prefix.
-            when(upper(regexp_extract(col("phenotype"), otherRe, 1)).contains("ORPHA"), lit("Orphanet"))
-              .otherwise(regexp_extract(col("phenotype"), otherRe, 1)),
-            lit(":"),
-            regexp_extract(col("phenotype"), otherRe, 2)))
-          .otherwise(lit(""))))
-      .withColumn("cleanPhenotype",
-        Cleanup.emptyToNull(trim(regexp_replace(regexp_replace(col("phenotype"), omimRe, ""), otherRe, ""))))
+      // Only a blank phenotype yields no disease name and no ID (both ID
+      // patterns need digits), so blanks are dropped before any extract.
+      .filter(trim(col("phenotype")) =!= "")
+      // Each regex runs once per row: the extracts are bound in one
+      // projection before the `CASE WHEN`s read them.
+      .select(
+        col("gene_symbol"), col("panel_name"),
+        regexp_extract(col("phenotype"), omimRe, 2).as("omim"),
+        regexp_extract(col("phenotype"), otherRe, 1).as("otherTag"),
+        regexp_extract(col("phenotype"), otherRe, 2).as("otherId"),
+        trim(regexp_replace(regexp_replace(col("phenotype"), omimRe, ""), otherRe, "")).as("rest"),
+      )
       .select(
         lit("genomics_england").as("datasourceId"),
         col("gene_symbol").as("targetFromSourceId"),
         col("panel_name").as("studyId"),
-        col("cleanPhenotype").as("diseaseFromSource"),
-        col("omimId"),
-        col("ontologyId"),
+        Cleanup.emptyToNull(col("rest")).as("diseaseFromSource"),
+        Cleanup.emptyToNull(col("omim")).as("omimId"),
+        // Normalize source tag to its canonical prefix; the ":" keeps the
+        // ID non-blank.
+        when(col("otherId") =!= "",
+          concat(
+            when(upper(col("otherTag")).contains("ORPHA"), lit("Orphanet")).otherwise(col("otherTag")),
+            lit(":"),
+            col("otherId")))
+          .as("ontologyId"),
       )
-      .filter(col("diseaseFromSource").isNotNull || col("omimId").isNotNull || col("ontologyId").isNotNull)
       .distinct()
   }
 }

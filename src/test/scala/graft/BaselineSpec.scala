@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.{Readers, Stats}
 import graft.parsers.BaselineExpressionParser
@@ -81,6 +81,38 @@ class BaselineSpec extends SparkTestBase {
     assert(g2.getAs[Double]("gini") == 0.0)
     assert(g2.getAs[String]("hpaDistribution") == "Detected in all")
     assert(g2.getAs[Any]("adatissScores") == null)
+  }
+
+  /** The baseline parser's metrics as first written: melt to one row per
+    * gene and tissue, then collect the rows back by gene.
+    */
+  private def baselineReference(wide: DataFrame, geneCol: String = "gene_id"): DataFrame = {
+    val molten = graft.core.Reshape.melt(wide, Seq(geneCol), varName = "tissueName", valName = "expression")
+    val vectors = molten
+      .groupBy(geneCol)
+      .agg(
+        sort_array(collect_list(struct(col("tissueName"), col("expression").cast("double").as("expression"))))
+          .as("tissues"))
+      .withColumn("expr_vec", transform(col("tissues"), _.getField("expression")))
+    val hpa = graft.functions.GraftFunctions.hpaClassify(col("expr_vec"), 1.0)
+    vectors.select(
+      col(geneCol),
+      col("tissues"),
+      round(graft.functions.GraftFunctions.gini(col("expr_vec")), 6).as("gini"),
+      hpa.getField("specificity").as("hpaSpecificity"),
+      hpa.getField("distribution").as("hpaDistribution"),
+    )
+  }
+
+  test("BaselineExpressionParser equals the melt formulation: duplicate gene rows, null cells, int columns") {
+    val wide = Seq[(String, java.lang.Double, java.lang.Double, Integer)](
+      ("ENSG1", 0.0, 0.0, 50),
+      ("ENSG2", 5.0, 5.0, 5),
+      ("ENSG1", 3.5, null, 1),
+      ("ENSG3", null, null, null),
+      ("ENSG4", 1.25, 900.0, 0),
+    ).toDF("gene_id", "Lung", "Liver", "Brain").repartition(3)
+    assert(jsonLines(BaselineExpressionParser(wide)) == jsonLines(baselineReference(wide)))
   }
 
   test("csvMultiHeader flattens multiindex headers with ffill (S10)") {

@@ -41,6 +41,84 @@ class CoreSpec extends SparkTestBase {
     assert(Readers.readPath(spark, s"$dir/t.json").count() == 1)
   }
 
+  test("Readers.readPath lists a directory through the Hadoop FS: a file: URI of JSON parts reads as JSON") {
+    val dir = tmpDir("auto_uri")
+    Seq(("a", 1), ("b", 2)).toDF("k", "v").write.json(s"$dir/parts")
+    val df = Readers.readPath(spark, s"file://$dir/parts")
+    assert(df.columns.toSeq == Seq("k", "v"))
+    assert(df.orderBy("k").collect().map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("a", 1L), ("b", 2L)))
+  }
+
+  /** Spark's own inferred read with the options [[Readers.csv]] sets. */
+  private def sparkInferred(path: String, sep: String) =
+    spark.read.option("sep", sep).option("header", "true").option("multiLine", "false")
+      .option("quote", "\"").option("escape", "\"").option("inferSchema", "true").csv(path)
+
+  /** The value `body` returns and the Spark jobs it ran on this thread. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobs") == tag)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+      (out, jobs.get)
+    } finally {
+      spark.sparkContext.setLocalProperty("graft.test.jobs", null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** `readPath` gives Spark's own inferred schema and rows, in `jobs` jobs. */
+  private def assertInfersLikeSpark(path: String, sep: String, jobs: Int): Unit = {
+    val (got, n) = withJobCount(Readers.readPath(spark, path))
+    val want = sparkInferred(path, sep)
+    assert(got.schema == want.schema, path)
+    assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq, path)
+    assert(n == jobs, s"$path: $n Spark jobs to read, expected $jobs")
+  }
+
+  private def write(path: String, text: String): String = {
+    val f = new java.io.File(path)
+    f.getParentFile.mkdirs()
+    java.nio.file.Files.write(f.toPath, text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    path
+  }
+
+  test("Readers.readPath infers TSV/CSV schemas like Spark does, in one job when the first lines agree") {
+    val dir = tmpDir("infer")
+    val body = "gene\tscore\tn\nBRCA1\t1.5\t3\nTP53\t\t4\nEGFR\t2e-3\t\n"
+    assertInfersLikeSpark(write(s"$dir/single.tsv", body), "\t", jobs = 1)
+    Seq(("BRCA1", 1.5, 3), ("TP53", 2.0, 4), ("EGFR", 0.5, 5), ("KRAS", 1.0, 6)).toDF("gene", "score", "n")
+      .repartition(3).write.option("sep", "\t").option("header", "true").csv(s"$dir/multi.tsv")
+    assertInfersLikeSpark(s"$dir/multi.tsv", "\t", jobs = 1)
+    val gz = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(s"$dir/packed.tsv.gz"))
+    try gz.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally gz.close()
+    assertInfersLikeSpark(s"$dir/packed.tsv.gz", "\t", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/blank.tsv", "\n  \n" + body), "\t", jobs = 1)
+    // Spark's header pick trims spaces only: a tab-only line is the header.
+    assertInfersLikeSpark(write(s"$dir/tab_line.tsv", "\t\n" + body), "\t", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/crlf.csv", "a,b\r\n1,x\r\n2,y\r\n"), ",", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/cr.csv", "a,b\r1,x\r2,y\r"), ",", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/bom.csv", "\uFEFFgene,score\nBRCA1,1\n"), ",", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/quoted.csv", "\"a,b\",c\n1,2.5\n3,4\n"), ",", jobs = 1)
+    assertInfersLikeSpark(write(s"$dir/header_only.tsv", "gene\tscore\n"), "\t", jobs = 1)
+    write(s"$dir/with_empty.tsv/part-0.tsv", body)
+    write(s"$dir/with_empty.tsv/part-1.tsv", "")
+    write(s"$dir/with_empty.tsv/part-2.tsv", body)
+    assertInfersLikeSpark(s"$dir/with_empty.tsv", "\t", jobs = 1)
+    // First lines differ: the header is whichever line Spark reads first,
+    // so Spark's own two-job inference decides.
+    write(s"$dir/differ.tsv/part-0.tsv", "a\tb\n1\t2\n")
+    write(s"$dir/differ.tsv/part-1.tsv", "x\ty\n3\t4.5\n")
+    assertInfersLikeSpark(s"$dir/differ.tsv", "\t", jobs = 2)
+  }
+
   test("Writers.writeJsonGzSingle produces exactly one gz json file (K1)") {
     val dir = tmpDir("sink")
     val out = s"$dir/evidence.json.gz"
@@ -134,6 +212,17 @@ class CoreSpec extends SparkTestBase {
     ).toDF("id", "text")
     val out = Dedup.exactTextDedup(df, "id", "text")
     assert(out.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+  }
+
+  test("Cleanup.emptyToNull equals when(trim(c) =!= \"\", c) and evaluates c once") {
+    val df = Seq[(String, Integer)](("x", 1), ("  ", 2), ("", 3), (null, null), (" a b ", 0), ("\t", 5))
+      .toDF("s", "i").repartition(2)
+    val c = regexp_extract(col("s"), "^(.*)$", 1)
+    val got = df.select(Cleanup.emptyToNull(c).as("e"), Cleanup.emptyToNull(col("i")).as("n"))
+    val want = df.select(when(trim(c) =!= "", c).as("e"), when(trim(col("i")) =!= "", col("i")).as("n"))
+    assert(got.schema == want.schema)
+    assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+    assert(regexpExtracts(got) == Map(("^(.*)$", 1) -> 1))
   }
 
   test("Cleanup.dictReplace only replaces exact matches (R11)") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.parsers._
 
@@ -90,6 +91,43 @@ class Parsers3Spec extends SparkTestBase {
     val r2 = out.filter($"studyId" === "S2").head()
     assert(r2.getAs[String]("studyOverview") == "Bare title")
     assert(r2.getAs[Any]("experimentDescription") == null)
+  }
+
+  /** The Brain-CRISPR parser as first written: a struct of all three
+    * description parts, each scrubbed with the two-sided empty-to-null.
+    */
+  private def brainCrisprReference(raw: DataFrame, diseaseLut: DataFrame): DataFrame = {
+    def emptyToNull(c: Column): Column = when(trim(c) =!= "", c)
+    def parseDescription(desc: Column): Column = struct(
+      emptyToNull(trim(regexp_extract(desc, "^([^|]+)", 1))).as("title"),
+      emptyToNull(trim(regexp_extract(desc, "experiment:\\s*([^|]+)", 1))).as("experiment"),
+      emptyToNull(trim(regexp_extract(desc, "analysis:\\s*([^|]+)", 1))).as("analysis"),
+    )
+    raw
+      .withColumn("desc", parseDescription(col("description")))
+      .join(broadcast(diseaseLut), Seq("screenId"), "left")
+      .select(
+        lit("crispr_brain").as("datasourceId"),
+        col("targetFromSourceId"),
+        col("screenId").as("studyId"),
+        col("desc.title").as("studyOverview"),
+        col("desc.experiment").as("experimentDescription"),
+        col("diseaseFromSourceMappedId"),
+        col("resourceScore").cast("double").as("resourceScore"),
+      )
+  }
+
+  test("BrainCrisprParser equals its three-part struct formulation: blanks, missing tails, nulls") {
+    val raw = Seq[(String, String, String, String)](
+      ("S1", "G1", "0.5", "Neuron survival screen | experiment: CRISPRi KO | analysis: MAGeCK"),
+      ("S2", "G2", "0.7", "Bare title"),
+      ("S3", "G3", "0.1", "   | experiment:    | analysis: BAGEL"),
+      ("S4", "G4", "0.2", "Title only | analysis: casTLE"),
+      ("S5", "G5", null, null),
+      ("S6", "G6", "1", ""),
+    ).toDF("screenId", "targetFromSourceId", "resourceScore", "description").repartition(2)
+    val lut = Seq(("S1", "EFO_X"), ("S3", "EFO_Y")).toDF("screenId", "diseaseFromSourceMappedId")
+    assert(jsonLines(BrainCrisprParser(raw, lut)) == jsonLines(brainCrisprReference(raw, lut)))
   }
 
   test("CvdiGeneBurdenParser: OR (95% CI) parsing + per-mask cutoff + EFO join") {

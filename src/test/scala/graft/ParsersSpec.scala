@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.core.{Cleanup, Reshape}
 import graft.parsers._
 
 class ParsersSpec extends SparkTestBase {
@@ -241,6 +242,117 @@ class ParsersSpec extends SparkTestBase {
     assert(bms.map(b => (b.getAs[String]("name"), b.getAs[String]("type"))) ==
       Seq(("V600E", "MUT"), ("V600K", "MUT")), "second alteration padded with first type")
     assert(out.filter($"targetFromSourceId" === "KRAS").head().getAs[Any]("variantId") == null)
+  }
+
+  /** The cancer-biomarkers parser as first written, each gDNA group
+    * extracted twice per row: the reference for the bound projection.
+    */
+  private def cancerBiomarkersReference(raw: DataFrame): DataFrame = {
+    val gdna = col("gDNA")
+    val chr = regexp_extract(gdna, "^chr([0-9XYM]+):", 1)
+    val pos = regexp_extract(gdna, "g\\.(\\d+)", 1)
+    val ref = regexp_extract(gdna, "\\d+([ACGT]+)>", 1)
+    val alt = regexp_extract(gdna, ">([ACGT]+)$", 1)
+    raw
+      .withColumn("variantId", when(chr =!= "" && pos =!= "" && ref =!= "" && alt =!= "",
+        concat_ws("_", chr, pos, ref, alt)))
+      .withColumn("alterationEntries",
+        Reshape.zipWithPad(split(col("alterations"), ";"), split(col("alterationTypes"), ";")))
+      .select(
+        lit("cancer_biomarkers").as("datasourceId"),
+        col("gene").as("targetFromSourceId"),
+        col("tumorType").as("diseaseFromSource"),
+        col("drug").as("drugFromSource"),
+        col("variantId"),
+        transform(col("alterationEntries"),
+          e => struct(e.getField("value").as("name"), e.getField("type").as("type")))
+          .as("biomarkers"),
+      )
+  }
+
+  test("CancerBiomarkersParser equals its unbound formulation: malformed gDNA, alterations beyond types") {
+    val raw = Seq[(String, String, String, String, String, String)](
+      ("BRAF", "Melanoma", "Vemurafenib", "chr7:g.140453136A>T", "V600E;V600K", "MUT"),
+      ("KRAS", "CRC", "X", "not-gdna", "G12D", "MUT"),
+      ("EGFR", "NSCLC", "Y", "chr7:g.55259515T>", "L858R;T790M;C797S", "MUT;AMP"),
+      ("TP53", "BRCA", "Z", "chrZ:g.7577120C>T", "R175H", "MUT;AMP;DEL"),
+      ("MYC", "AML", "W", "chrX:g.12ACG>TT", null, "AMP"),
+      ("ALK", "NB", "V", null, "F1174L;R1275Q", null),
+      ("RET", "MTC", "U", "", "M918T", ""),
+    ).toDF("gene", "tumorType", "drug", "gDNA", "alterations", "alterationTypes").repartition(2)
+    assert(jsonLines(CancerBiomarkersParser(raw)) == jsonLines(cancerBiomarkersReference(raw)))
+  }
+
+  /** The PanelApp parser as first written, the regex extracts repeated in
+    * each `CASE WHEN` and doubled by the two-sided empty-to-null scrub.
+    */
+  private def panelAppReference(raw: DataFrame): DataFrame = {
+    import PanelAppParser.{omimRe, otherRe}
+    def emptyToNull(c: Column): Column = when(trim(c) =!= "", c)
+    val preCleaned = Cleanup.applyRegexRules(
+      raw
+        .filter(col("phenotypes").isNotNull && col("confidence_level").isin("2", "3"))
+        .withColumn("phenotype", col("phenotypes")),
+      "phenotype", PanelAppParser.phenotypeRulesBeforeSplit)
+    val exploded = preCleaned.withColumn("phenotype", explode(split(col("phenotype"), ";")))
+    Cleanup.applyRegexRules(exploded, "phenotype", PanelAppParser.phenotypeRulesAfterSplit)
+      .withColumn("omimId", emptyToNull(regexp_extract(col("phenotype"), omimRe, 2)))
+      .withColumn("ontologyId", emptyToNull(
+        when(regexp_extract(col("phenotype"), otherRe, 2) =!= "",
+          concat(
+            when(upper(regexp_extract(col("phenotype"), otherRe, 1)).contains("ORPHA"), lit("Orphanet"))
+              .otherwise(regexp_extract(col("phenotype"), otherRe, 1)),
+            lit(":"),
+            regexp_extract(col("phenotype"), otherRe, 2)))
+          .otherwise(lit(""))))
+      .withColumn("cleanPhenotype",
+        emptyToNull(trim(regexp_replace(regexp_replace(col("phenotype"), omimRe, ""), otherRe, ""))))
+      .select(
+        lit("genomics_england").as("datasourceId"),
+        col("gene_symbol").as("targetFromSourceId"),
+        col("panel_name").as("studyId"),
+        col("cleanPhenotype").as("diseaseFromSource"),
+        col("omimId"),
+        col("ontologyId"),
+      )
+      .filter(col("diseaseFromSource").isNotNull || col("omimId").isNotNull || col("ontologyId").isNotNull)
+      .distinct()
+  }
+
+  test("PanelAppParser equals its unbound formulation across tag shapes, blanks and nulls") {
+    val raw = Seq[(String, String, String, String)](
+      ("BRCA2", "Breast cancer panel", "3",
+        "{Breast cancer susceptibility} 600185;Ovarian cancer, HP:0100615"),
+      ("GLUE", "P", "3", "Aarskog-Scott syndrome, 305400Mental retardation, X-linked syndromic 16, 305400"),
+      ("MIMPFX", "P", "2", "Some disease MIM# 123456; Another (no OMIM number)"),
+      ("ORPHA", "P", "3", "ORPHA:558 Marfan; Orphanet_1234 thing; OrphaNet: ORPHA99 x"),
+      ("MONDO", "P", "2", "MONDO_0007739 related anomaly; HP:0000118"),
+      ("BLANK", "P", "3", " ; ;  "),
+      ("NULLPH", "P", "3", null),
+      ("LOWCONF", "P", "1", "whatever 123456"),
+      ("PLAIN", "P", "2", "Plain disease name"),
+    ).toDF("gene_symbol", "panel_name", "confidence_level", "phenotypes").repartition(2)
+    assert(jsonLines(PanelAppParser(raw)) == jsonLines(panelAppReference(raw)))
+  }
+
+  test("each regexp_extract runs once per row: one per pattern and group in the executed plan") {
+    // Repartitioned, so the projections are planned rather than folded
+    // into a local relation.
+    val cb = Seq(("BRAF", "Melanoma", "V", "chr7:g.140453136A>T", "V600E", "MUT"))
+      .toDF("gene", "tumorType", "drug", "gDNA", "alterations", "alterationTypes").repartition(2)
+    val pa = Seq(("BRCA2", "P", "3", "Ovarian cancer, HP:0100615 600185"))
+      .toDF("gene_symbol", "panel_name", "confidence_level", "phenotypes").repartition(2)
+    val br = Seq(("S1", "G1", 0.5, "T | experiment: E | analysis: A"))
+      .toDF("screenId", "targetFromSourceId", "resourceScore", "description").repartition(2)
+    val lut = Seq(("S1", "EFO_X")).toDF("screenId", "diseaseFromSourceMappedId")
+    for ((name, df, extracts) <- Seq(
+        ("cancer_biomarkers", CancerBiomarkersParser(cb), 4),
+        ("panelapp", PanelAppParser(pa), 3),
+        ("crispr_brain", BrainCrisprParser(br, lut), 2))) {
+      val counts = regexpExtracts(df)
+      assert(counts.size == extracts, s"$name: $counts")
+      assert(counts.values.forall(_ == 1), s"$name evaluates a regexp_extract more than once per row: $counts")
+    }
   }
 
   test("TargetSafetyParser: union + collect_set + A7 null repair + R6 rewrite") {

@@ -24,6 +24,27 @@ abstract class SparkTestBase extends AnyFunSuite {
   def benchShapes: Seq[(String, QueryDef.Builder)] =
     SparkEntry.registry.flatMap(d => d.bench.map(s"${d.name} (bench)" -> _))
 
+  /** `df`'s rows as sorted JSON lines: equal output whatever the row order. */
+  def jsonLines(df: org.apache.spark.sql.DataFrame): Seq[String] = df.toJSON.collect().sorted.toSeq
+
+  /** How often each `regexp_extract(_, pattern, group)` appears in `df`'s
+    * executed plan, AQE stages included: one per pattern and group means
+    * each is evaluated once per row.
+    */
+  def regexpExtracts(df: org.apache.spark.sql.DataFrame): Map[(String, Int), Int] = {
+    import org.apache.spark.sql.catalyst.expressions.RegExpExtract
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    nodes(df.queryExecution.executedPlan).flatMap(_.expressions)
+      .flatMap(_.collect { case r: RegExpExtract => (r.regexp.eval().toString, r.idx.eval().asInstanceOf[Int]) })
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+  }
+
   /** Scratch dir inside the repo target (never outside /root/repo).
     * Always starts EMPTY: append-mode writers (the streaming specs'
     * micro-batch files) must not see files left by a previous sbt run —
