@@ -42,6 +42,206 @@ object SparkEntry {
   private def tsUs(c: Column): Column = unix_micros(c.cast("timestamp"))
   private def tsNs(c: Column): Column = tsUs(c) * 1000
 
+  /** One row (a, b) per order and pair of distinct parts a < b in it.
+    * `collect_set` dedups repeated parts inside the basket during the
+    * aggregation itself — one shuffle on l_orderkey, not a distinct
+    * shuffle on (order, part) followed by a second on order. Pairing
+    * happens inside each order (r15: one codegen'd successor-pairs kernel
+    * + one explode — the posexplode×slice chain duplicated the basket per
+    * position), so output is bounded by Σ basket², never a corpus-wide
+    * self-join.
+    */
+  private def basketPairs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .groupBy("l_orderkey")
+      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+      .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
+      .select(col("pr.a").as("a"), col("pr.b").as("b"))
+
+  /** The part co-purchase graph: [[basketPairs]] that share ≥ 2 orders,
+    * with their co-basket count (a, b, n).
+    */
+  private def copurchasePairs(s: SparkSession, dir: String): DataFrame =
+    basketPairs(s, dir)
+      .groupBy("a", "b")
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2)
+
+  /** Undirected edges (src, dst) from (a, b) pairs: both directions. */
+  private def bothDirections(pairs: DataFrame): DataFrame =
+    pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+
+  /** [[copurchasePairs]] with the path cost w = floor(1000/n): strong
+    * partnerships (high co-basket count n) are cheap, one-off pairings
+    * expensive.
+    */
+  private def copurchaseCostPairs(s: SparkSession, dir: String): DataFrame =
+    copurchasePairs(s, dir)
+      .withColumn("w", floor(lit(1000.0) / col("n").cast("double")).cast("long"))
+
+  /** [[copurchasePairs]]' variant that deduplicates (order, part) in its
+    * own shuffle before the baskets are built: a, b and their co-basket
+    * count nab, kept where nab ≥ 2.
+    */
+  private def itemPairs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("item")).distinct()
+      .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
+      .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
+      .select(col("pr.a").as("a"), col("pr.b").as("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("nab"))
+      .filter(col("nab") >= 2)
+
+  /** Per-user pre/post totals (user_id, x, y) split at the integer
+    * midpoint day of the events: each value quantizes to decimal(12,3),
+    * sums exactly on its side of the split (x: day < mid), then floors to
+    * integer units, so every moment downstream is an exact BIGINT.
+    */
+  private def userPrePost(s: SparkSession, dir: String): DataFrame = {
+    val e = t(s, dir, "events").select(
+      col("user_id"),
+      floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"),
+      col("value").cast("decimal(12,3)").as("v"))
+    val mid = e.agg(floor((min(col("day")) + max(col("day"))).cast("double") / lit(2.0))
+      .cast("long").as("mid"))
+    e.crossJoin(broadcast(mid))
+      .groupBy("user_id")
+      .agg(
+        floor(coalesce(sum(when(col("day") < col("mid"), col("v"))),
+          lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("x"),
+        floor(coalesce(sum(when(col("day") >= col("mid"), col("v"))),
+          lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("y"))
+  }
+
+  /** Each event type's daily series (event_type, day, v): the integer
+    * epoch day and the exact decimal(12,3) sum of that day's values.
+    */
+  private def dailyEventTotals(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .groupBy(col("event_type"),
+        floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
+      .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+
+  /** The as-of queries' left side: events (event_id, user_id, ts), ts in
+    * epoch ns.
+    */
+  private def asofEvents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
+
+  /** The as-of queries' right side: the latest order per (customer,
+    * order date) as (o_custkey, odn, asof_orderkey) — unique (key, time),
+    * so every match is deterministic. odn is the order date in epoch ns:
+    * orderdate is TIMESTAMP_NTZ and the session TZ is UTC, so the cast to
+    * (local) TIMESTAMP is exact and matches DuckDB epoch_ns.
+    */
+  private def asofOrders(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy("o_custkey", "o_orderdate")
+      .agg(max("o_orderkey").as("asof_orderkey"))
+      .select(
+        col("o_custkey"),
+        (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
+        col("asof_orderkey"))
+
+  /** A deterministic typo of each customer name, its class picked by
+    * c_custkey % 3 — dropped char / doubled char / transposition, the
+    * classic linkage error classes. The last 4 characters stay intact
+    * under all three, so they are a sound blocking key.
+    */
+  private def typoCustomerName: Column =
+    when(pmod(col("c_custkey"), lit(3)) === 0,
+      concat(lit("C"), substring(col("c_name"), 3, 64)))
+      .when(pmod(col("c_custkey"), lit(3)) === 1,
+        concat(substring(col("c_name"), 1, 6), lit("m"), substring(col("c_name"), 7, 64)))
+      .otherwise(concat(lit("Cuts"), substring(col("c_name"), 5, 64)))
+
+  /** The daily order-revenue series (day, kilo) in KILODOLLAR integer
+    * units: exact decimal daily sum → one IEEE division → exact floor,
+    * which keeps every moment sum over it under 2⁵³ (see Stats.autocorr).
+    */
+  private def dailyRevenueKilo(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "orders")
+      .groupBy(floor(tsUs(col("o_orderdate")) / 86400000000L).cast("long").as("day"))
+      .agg(sum(col("o_totalprice").cast("decimal(12,3)")).as("v"))
+      .select(col("day"),
+        floor(col("v").cast("double") / lit(1000.0)).cast("long").as("kilo"))
+
+  /** Each user's exact decimal(12,3) value total per event type
+    * (event_type, user_id, v), with the arm `pos` = odd user_id.
+    */
+  private def userTotalsByParity(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .groupBy(col("event_type"), col("user_id"))
+      .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      .withColumn("pos", pmod(col("user_id"), lit(2)) === 1)
+
+  /** Per event type, the count, exact sum and exact sum of squares of
+    * [[userTotalsByParity]]' v in each arm: n1/n0, s1/s0, q1/q0.
+    */
+  private def parityMoments(u: DataFrame): DataFrame =
+    u.groupBy("event_type").agg(
+      sum(when(col("pos"), 1L).otherwise(0L)).as("n1"),
+      sum(when(!col("pos"), 1L).otherwise(0L)).as("n0"),
+      sum(when(col("pos"), col("v"))).as("s1"),
+      sum(when(!col("pos"), col("v"))).as("s0"),
+      sum(when(col("pos"), col("v") * col("v"))).as("q1"),
+      sum(when(!col("pos"), col("v") * col("v"))).as("q0"))
+
+  /** One split side's Gini impurity weighted by its size: nc rows, pc of
+    * them positive (0 for an empty side).
+    */
+  private def giniSide(nc: Column, pc: Column): Column = {
+    val d = (c: Column) => c.cast("double")
+    when(nc === 0L, lit(0.0)).otherwise(
+      d(nc) * (lit(1.0) - (d(pc) / d(nc)) * (d(pc) / d(nc)) -
+        (d(nc - pc) / d(nc)) * (d(nc - pc) / d(nc))))
+  }
+
+  /** The IVM retraction queries' changelog over `ev`'s day of month
+    * `day`: two insert batches (days ≤ 15, then the rest; op = 1) and one
+    * delete batch (TTL-expire days 1-10, retract 'error' entirely;
+    * op = -1).
+    */
+  private def retractChangelog(ev: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    (ev.filter(col("day") <= 15).withColumn("op", lit(1)),
+      ev.filter(col("day") > 15).withColumn("op", lit(1)),
+      ev.filter(col("day") <= 10 || col("event_type") === "error")
+        .withColumn("op", lit(-1)))
+
+  /** The three lowest-id nodes of a src/dst edge list, as `source`. */
+  private def lowestSources(edges: DataFrame): DataFrame =
+    edges.select(col("src")).distinct()
+      .orderBy(col("src")).limit(3).select(col("src").as("source"))
+
+  /** 6-hop shortest paths from the three lowest parts over the cost-
+    * weighted co-purchase graph: source, node, dist. r14: the substrate
+    * feeds three jobs (the sources collect, the sizing count, the edge
+    * collect/driver-BF input), so it is checkpointed once.
+    */
+  private def copurchaseShortestPaths(s: SparkSession, dir: String): DataFrame = {
+    val pairs = copurchaseCostPairs(s, dir)
+    val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      .localCheckpoint(eager = false)
+    graft.graph.ShortestPath.runAdaptive(edges, lowestSources(edges), iters = 6)
+  }
+
+  /** Per-node triangle participation (part, n_tri) over a canonical
+    * (pa < pb) edge list. The compact "forward" join: edges meet on the
+    * middle vertex, then one membership join closes (a,c) — candidate
+    * pairs stay bounded by Σ deg², never the n³ triple cross; each
+    * triangle then credits its three corners via one explode. The edge
+    * list feeds three consumers, so callers checkpoint it once.
+    */
+  private def triangleCounts(edges: DataFrame): DataFrame =
+    edges.select(col("pa").as("a"), col("pb").as("b"))
+      .join(edges.select(col("pa").as("b"), col("pb").as("c")), Seq("b"))
+      .join(edges.select(col("pa").as("a"), col("pb").as("c")), Seq("a", "c"))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("part"))
+      .groupBy("part").agg(count(lit(1)).as("n_tri"))
+
   /** Deterministic multi-line corpus for the line-dedup queries: the flat
     * token stream becomes two 8-token content lines, with boilerplate
     * lines injected by doc_id arithmetic ("subscribe…" in every 3rd doc,
@@ -225,18 +425,7 @@ object SparkEntry {
     // to the bench. One probe each pins them: bound 0 forces the
     // distributed path on the same substrate/fit the oracled queries use.
     "b_pagerank_dist" -> ((s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      PageRank.runAdaptive(edges, iters = 8, maxDriverEdges = 0L)
+      PageRank.runAdaptive(bothDirections(copurchasePairs(s, dir)), iters = 8, maxDriverEdges = 0L)
         .select(col("node").as("part"), round(col("rank"), 6).as("rank"))
     }),
     "b_kmeans_dist" -> ((s, dir) =>
@@ -939,24 +1128,7 @@ object SparkEntry {
       )
       NearDup.jaccardVerify(cands, docs, "doc_id", "text", shingleLen = 3, minJaccard = 0.7)
     }, oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs)
-        |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) >= 0.7""".stripMargin),
+      jaccardPairsSql("documents WHERE doc_id % 2 = 0", minJaccard = 0.7, extraCols = Nil)),
 
     // --- beyond-reference: SimHash near-dup (CONTRACT oracle) ---------
     // Row set = exact-Jaccard ≥ 0.7 pairs (DuckDB all-pairs reproducible;
@@ -971,25 +1143,7 @@ object SparkEntry {
       // SimHash contract: same all-pairs row set at >= 0.7; the 64-bit
       // fingerprint is certified by the hamming <= 28 envelope boolean.
       oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs)
-        |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard,
-        |  TRUE AS sh_within_envelope
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) >= 0.7""".stripMargin),
+      jaccardPairsSql("documents", minJaccard = 0.7, extraCols = Seq("TRUE AS sh_within_envelope"))),
 
     // --- beyond-reference: MinHash near-dup (CONTRACT oracle) ---------
     // Same contract pattern: exact-Jaccard ≥ 0.8 row set, MinHash
@@ -1001,25 +1155,7 @@ object SparkEntry {
       // reproducible; the xxhash64 MinHash estimate arrives as an envelope
       // boolean DuckDB expects TRUE (NearDup.minhashContract scaladoc).
       oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs)
-        |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
-        |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard,
-        |  TRUE AS mh_within_envelope
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8""".stripMargin),
+      jaccardPairsSql("documents", minJaccard = 0.8, extraCols = Seq("TRUE AS mh_within_envelope"))),
 
     // --- beyond-reference: near-dup CLUSTERS (pairs → components) -----
     // Duplicate groups are transitive; connected components over the
@@ -1047,28 +1183,7 @@ object SparkEntry {
       NearDup.connectedComponentsAdaptive(pairs, "doc_id_a", "doc_id_b")
         .select(col("id").as("doc_id"), col("label").as("cluster"))
     }, oracleSql =
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' ')))
-        |    ELSE [] END AS sh FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5),
-        |edges AS (
-        |  SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
-        |  UNION SELECT a, a FROM pairs UNION SELECT b, b FROM pairs),
-        |reach(s, t) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.t = e.a)
-        |SELECT s AS doc_id, min(t) AS cluster FROM reach GROUP BY s""".stripMargin),
+      dedupClustersSql),
 
     // --- beyond-reference: dedup CLUSTERS under ingest ------------------
     // Incremental components: the base corpus's clusters collapse to a
@@ -1108,28 +1223,7 @@ object SparkEntry {
       // Incremental clusters: bit-equal to the full recompute (star
       // compression), so the oracle IS the full-corpus closure.
       oracleSql =
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' ')))
-        |    ELSE [] END AS sh FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.5),
-        |edges AS (
-        |  SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
-        |  UNION SELECT a, a FROM pairs UNION SELECT b, b FROM pairs),
-        |reach(s, t) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.t = e.a)
-        |SELECT s AS doc_id, min(t) AS cluster FROM reach GROUP BY s""".stripMargin),
+      dedupClustersSql),
 
     // --- J4: right outer join -----------------------------------------
     QueryDef("q_join_right", (s, dir) => {
@@ -1696,8 +1790,8 @@ object SparkEntry {
       // small-vocabulary corpus exceeds dfCap everywhere); dl is the
       // shingle count, avgdl counts every doc (sub-2-token docs as 0).
       oracleSql =
-      """WITH base AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
+      s"""WITH base AS (
+        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
         |  FROM documents),
         |tf AS (
         |  SELECT doc_id, toks[i] || ' ' || toks[i+1] AS term, count(*) AS tf
@@ -1711,19 +1805,7 @@ object SparkEntry {
         |  FROM tf JOIN dl USING (doc_id) JOIN dfx USING (term), stats
         |  WHERE dfx.df <= 100),
         |qterms AS (SELECT DISTINCT doc_id AS q_id, term FROM tf WHERE doc_id % 17 = 0),
-        |scored AS (
-        |  SELECT q.q_id, p.doc_id AS doc_b, count(*) AS n_shared,
-        |    CAST(sum(CAST(
-        |      ln(1 + (p.n_docs - p.df + 0.5) / (p.df + 0.5)) *
-        |      (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / p.avgdl))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS score
-        |  FROM qterms q JOIN post p USING (term)
-        |  WHERE p.doc_id <> q.q_id
-        |  GROUP BY q.q_id, p.doc_id)
-        |SELECT q_id, doc_b, n_shared, score, rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_b ASC) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5""".stripMargin),
+        |$bm25Top5Sql""".stripMargin),
 
     // --- beyond-reference: HYBRID retrieval via reciprocal-rank fusion --
     // The two lexical rankers this library ships — Okapi BM25 and
@@ -1884,8 +1966,8 @@ object SparkEntry {
       // model, unseen terms dropping out. Same decimal(28,12) per-term
       // quantization -> hash-exact.
       oracleSql =
-      """WITH base AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
+      s"""WITH base AS (
+        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
         |  FROM documents),
         |ctf AS (
         |  SELECT doc_id, toks[i] || ' ' || toks[i+1] AS term, count(*) AS tf
@@ -1903,19 +1985,7 @@ object SparkEntry {
         |  SELECT DISTINCT doc_id AS q_id, toks[i] || ' ' || toks[i+1] AS term
         |  FROM base, unnest(range(1, len(toks))) AS r(i)
         |  WHERE len(toks) >= 2 AND doc_id % 10 = 0),
-        |scored AS (
-        |  SELECT q.q_id, p.doc_id AS doc_b, count(*) AS n_shared,
-        |    CAST(sum(CAST(
-        |      ln(1 + (p.n_docs - p.df + 0.5) / (p.df + 0.5)) *
-        |      (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / p.avgdl))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS score
-        |  FROM qterms q JOIN post p USING (term)
-        |  WHERE p.doc_id <> q.q_id
-        |  GROUP BY q.q_id, p.doc_id)
-        |SELECT q_id, doc_b, n_shared, score, rn FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_b ASC) AS rn
-        |  FROM scored)
-        |WHERE rn <= 5""".stripMargin),
+        |$bm25Top5Sql""".stripMargin),
 
     // --- beyond-reference: deterministic weighted sampling (A-ES) ------
     // Efraimidis–Spirakis exponential-race keys drawn from content
@@ -1976,15 +2046,7 @@ object SparkEntry {
       // cells are zval >> 18, so each output row is one 512x512 rectangle
       // of (custkey, day) space with its occupancy and bounding box.
       oracleSql =
-      """WITH d AS (
-        |  SELECT o_custkey,
-        |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day
-        |  FROM orders),
-        |b AS (SELECT *, o_custkey & 65535 AS xb, day & 65535 AS yb FROM d),
-        |s1 AS (SELECT *, ((xb | (xb << 8)) & 16711935) AS x1, ((yb | (yb << 8)) & 16711935) AS y1 FROM b),
-        |s2 AS (SELECT *, ((x1 | (x1 << 4)) & 252645135) AS x2, ((y1 | (y1 << 4)) & 252645135) AS y2 FROM s1),
-        |s3 AS (SELECT *, ((x2 | (x2 << 2)) & 858993459) AS x3, ((y2 | (y2 << 2)) & 858993459) AS y3 FROM s2),
-        |s4 AS (SELECT *, ((x3 | (x3 << 1)) & 1431655765) AS x4, ((y3 | (y3 << 1)) & 1431655765) AS y4 FROM s3),
+      s"""WITH $mortonSpreadCtes
         |z AS (SELECT o_custkey, day, (x4 | (y4 << 1)) AS zval FROM s4)
         |SELECT zval >> 18 AS cell, CAST(count(*) AS BIGINT) AS n,
         |  min(o_custkey) AS min_ck, max(o_custkey) AS max_ck,
@@ -2033,32 +2095,7 @@ object SparkEntry {
       // the corpus-element-type cast Ann.ivfTopK applies — before the
       // assignment / probe / score / top-k dataflow. Full fitted-IVF
       // pipeline, engine-exact.
-      oracleSql = {
-      s"""WITH ${lloydCtes(k = 16, iters = 3, dim = 64)},
-         |cf AS MATERIALIZED (
-         |  SELECT cid, list_transform(cv, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS cv
-         |  FROM c3),
-         |assigned AS MATERIALIZED (
-         |  SELECT vec_id, v, cid FROM (
-         |    SELECT e.vec_id, e.v, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-         |    FROM e, cf c)
-         |  WHERE rn = 1),
-         |probed AS MATERIALIZED (
-         |  SELECT vec_id AS qid, v AS qv, cid FROM (
-         |    SELECT e.vec_id, e.v, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-         |    FROM e, cf c WHERE e.vec_id < 8)
-         |  WHERE rn <= 4),
-         |scored AS (
-         |  SELECT DISTINCT q.qid, a.vec_id, list_cosine_similarity(q.qv, a.v) AS sim
-         |  FROM probed q JOIN assigned a USING (cid) WHERE a.vec_id <> q.qid),
-         |ranked AS (SELECT qid, vec_id, sim,
-         |  row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn FROM scored)
-         |SELECT qid, vec_id, round(sim, 6) AS sim, rn FROM ranked WHERE rn <= 5""".stripMargin
-    }),
+      oracleSql = ivfOracleSql(fitWhere = "TRUE")),
 
     // --- beyond-reference: STANDING IVF index (incremental ANN) --------
     // The IVF member of the standing-index family: cells fit ONCE on the
@@ -2083,32 +2120,7 @@ object SparkEntry {
       )
     },
       // Standing-index IVF: same pipeline, Lloyd fit on the base slice only.
-      oracleSql = {
-      s"""WITH ${lloydCtes(k = 16, iters = 3, dim = 64, fitWhere = "vec_id % 4 <> 0")},
-         |cf AS MATERIALIZED (
-         |  SELECT cid, list_transform(cv, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS cv
-         |  FROM c3),
-         |assigned AS MATERIALIZED (
-         |  SELECT vec_id, v, cid FROM (
-         |    SELECT e.vec_id, e.v, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-         |    FROM e, cf c)
-         |  WHERE rn = 1),
-         |probed AS MATERIALIZED (
-         |  SELECT vec_id AS qid, v AS qv, cid FROM (
-         |    SELECT e.vec_id, e.v, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
-         |    FROM e, cf c WHERE e.vec_id < 8)
-         |  WHERE rn <= 4),
-         |scored AS (
-         |  SELECT DISTINCT q.qid, a.vec_id, list_cosine_similarity(q.qv, a.v) AS sim
-         |  FROM probed q JOIN assigned a USING (cid) WHERE a.vec_id <> q.qid),
-         |ranked AS (SELECT qid, vec_id, sim,
-         |  row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn FROM scored)
-         |SELECT qid, vec_id, round(sim, 6) AS sim, rn FROM ranked WHERE rn <= 5""".stripMargin
-    }),
+      oracleSql = ivfOracleSql(fitWhere = "vec_id % 4 <> 0")),
 
     // --- beyond-reference: product-quantization ANN (ORACLED) ----------
     // The memory-bounded 100 TB embedding-scan path: 8 subspace
@@ -2475,27 +2487,13 @@ object SparkEntry {
     // time axes normalize to epoch-ns longs (tsNs) so the as-of
     // comparison is integer, matching DuckDB epoch_ns.
     QueryDef("q_asof_join", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("asof_orderkey")) // unique (key,time): deterministic match
-        // orderdate is TIMESTAMP_NTZ; session TZ is UTC, so the cast to
-        // (local) TIMESTAMP is exact and matches DuckDB epoch_ns.
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("asof_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir)
       graft.core.AsOf
         .asOfJoin(ev, ord, "user_id", "ts", "o_custkey", "odn", Seq("asof_orderkey"))
         .select("event_id", "user_id", "asof_orderkey")
     }, oracleSql =
-      """WITH o AS (
-        |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS asof_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
-        |SELECT e.event_id, e.user_id, o.asof_orderkey
-        |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn >= o.odn""".stripMargin),
+      asofLatestOrderSql),
 
     // --- beyond-reference: as-of join as a FIRST-CLASS plan node --------
     // The same as-of semantics through the injected physical operator
@@ -2508,15 +2506,8 @@ object SparkEntry {
     // custom exec is hash-checked against a genuinely independent
     // implementation.
     QueryDef("q_asof_physical", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("asof_orderkey"))
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("asof_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir)
       graft.core.AsOf
         .asOfJoinExec(ev, ord, "user_id", "ts", "o_custkey", "odn", Seq("asof_orderkey"))
         .select("event_id", "user_id", "asof_orderkey")
@@ -2524,26 +2515,14 @@ object SparkEntry {
       // Same independent oracle for the physical operator: the custom exec
       // must reproduce DuckDB's native ASOF LEFT JOIN bit-for-bit.
       oracleSql =
-      """WITH o AS (
-        |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS asof_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
-        |SELECT e.event_id, e.user_id, o.asof_orderkey
-        |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn >= o.odn""".stripMargin),
+      asofLatestOrderSql),
 
     // Forward direction (pandas merge_asof direction='forward'): earliest
     // order at-or-after each event — same physical operator, peek-not-
     // carry merge; DuckDB oracles it natively with ASOF ... ON l.t <= r.t.
     QueryDef("q_asof_forward", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("next_orderkey"))
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("next_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir).withColumnRenamed("asof_orderkey", "next_orderkey")
       graft.core.AsOf
         .asOfJoinExec(ev, ord, "user_id", "ts", "o_custkey", "odn",
           Seq("next_orderkey"), forward = true)
@@ -2551,12 +2530,7 @@ object SparkEntry {
     },
       // Forward as-of: DuckDB's native ASOF with the inequality flipped.
       oracleSql =
-      """WITH o AS (
-        |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS next_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
-        |SELECT e.event_id, e.user_id, o.next_orderkey
-        |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn <= o.odn""".stripMargin),
+      asofNextOrderSql),
 
     // Tolerance bound (merge_asof tolerance, the stale-quote guard): a
     // matched order older than 30 days yields null payload — in-operator,
@@ -2564,15 +2538,8 @@ object SparkEntry {
     // ASOF match, which is semantically identical because the asof
     // candidate is unique per left row.
     QueryDef("q_asof_tolerance", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("asof_orderkey"))
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("asof_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir)
       graft.core.AsOf
         .asOfJoinExec(ev, ord, "user_id", "ts", "o_custkey", "odn",
           Seq("asof_orderkey"), toleranceNs = Some(30L * 86400 * 1000000000L))
@@ -2599,15 +2566,8 @@ object SparkEntry {
     // AsOfSpec additionally pins the no-single-task-serialization claim
     // on a synthetic 50%-hot key.
     QueryDef("q_asof_salted", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("asof_orderkey"))
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("asof_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir)
       graft.core.AsOf
         .asOfJoinExecSalted(ev, ord, "user_id", "ts", "o_custkey", "odn",
           Seq("asof_orderkey"), chunks = 8)
@@ -2616,12 +2576,7 @@ object SparkEntry {
       // And for the salted skew path: salting is internal plumbing — the
       // answer must stay bit-identical to DuckDB's native ASOF.
       oracleSql =
-      """WITH o AS (
-        |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS asof_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
-        |SELECT e.event_id, e.user_id, o.asof_orderkey
-        |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn >= o.odn""".stripMargin),
+      asofLatestOrderSql),
 
     // FORWARD salted as-of: the seed here propagates BACKWARD (earliest
     // right row from chunks > c), the direction the r14 bucketizer
@@ -2631,15 +2586,8 @@ object SparkEntry {
     // hash-checks the whole path cross-engine at gate scale (AsOfSpec
     // pins the synthetic extreme-domain shapes).
     QueryDef("q_asof_salted_forward", (s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), tsNs(col("ts")).as("ts"))
-      val ord = t(s, dir, "orders")
-        .groupBy("o_custkey", "o_orderdate")
-        .agg(max("o_orderkey").as("next_orderkey"))
-        .select(
-          col("o_custkey"),
-          (unix_micros(col("o_orderdate").cast("timestamp")) * 1000).as("odn"),
-          col("next_orderkey"))
+      val ev = asofEvents(s, dir)
+      val ord = asofOrders(s, dir).withColumnRenamed("asof_orderkey", "next_orderkey")
       graft.core.AsOf
         .asOfJoinExecSalted(ev, ord, "user_id", "ts", "o_custkey", "odn",
           Seq("next_orderkey"), forward = true, chunks = 8)
@@ -2648,12 +2596,7 @@ object SparkEntry {
       // Forward + salted: salting stays internal plumbing in the flipped
       // direction too.
       oracleSql =
-      """WITH o AS (
-        |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS next_orderkey
-        |  FROM orders GROUP BY 1, 2),
-        |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
-        |SELECT e.event_id, e.user_id, o.next_orderkey
-        |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn <= o.odn""".stripMargin),
+      asofNextOrderSql),
 
     // --- beyond-reference: lead/lag + frame spec (time-series deltas) --
     // SURVEY §2.6 notes the reference never uses lead/lag/frames; a
@@ -2982,27 +2925,10 @@ object SparkEntry {
           (coalesce(col("label"), col("doc_id")) === col("doc_id")).as("is_survivor"),
         )
     }, oracleSql =
-      """WITH RECURSIVE docs AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
+      s"""WITH RECURSIVE docs AS (
+        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
         |  FROM documents WHERE doc_id % 5 = 0),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' ')))
-        |    ELSE [] END AS sh FROM docs),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        |  SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
-        |  UNION SELECT a, a FROM pairs UNION SELECT b, b FROM pairs),
-        |reach(s, t) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.t = e.a),
+        |${shingleClosureCtes("docs", minJaccard = 0.8)},
         |labels AS (SELECT s AS doc_id, min(t) AS cluster FROM reach GROUP BY s)
         |SELECT d.doc_id, coalesce(l.cluster, d.doc_id) AS rep,
         |  coalesce(l.cluster, d.doc_id) = d.doc_id AS is_survivor
@@ -3030,28 +2956,11 @@ object SparkEntry {
       // Keep-best survivors: all-pairs closure at >= 0.8 on the %5 slice,
       // singleton fallback to own id, argmax (n_chars DESC, doc_id ASC).
       oracleSql =
-      """WITH RECURSIVE d0 AS (
+      s"""WITH RECURSIVE d0 AS (
         |  SELECT doc_id, n_chars,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
+        |    list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
         |  FROM documents WHERE doc_id % 5 = 0),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(toks) >= 3
-        |    THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |      i -> array_to_string(toks[i:i+2], ' ')))
-        |    ELSE [] END AS sh FROM d0),
-        |pairs AS (
-        |  SELECT a.doc_id AS a, b.doc_id AS b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
-        |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        |  SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
-        |  UNION SELECT a, a FROM pairs UNION SELECT b, b FROM pairs),
-        |reach(s, t) AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.t = e.a),
+        |${shingleClosureCtes("d0", minJaccard = 0.8)},
         |lab AS (SELECT s AS doc_id, min(t) AS cluster FROM reach GROUP BY s),
         |cl AS (
         |  SELECT d0.doc_id, d0.n_chars, COALESCE(lab.cluster, d0.doc_id) AS cluster
@@ -3345,20 +3254,7 @@ object SparkEntry {
     QueryDef("q_substring_dedup", (s, dir) =>
       SubstringDedup.sharedSpans(t(s, dir, "documents"), "doc_id", "text",
         gramLen = 40, minSpan = 60), oracleSql =
-      """WITH grams AS (
-        |  SELECT doc_id, i AS pos, substr(text, i, 40) AS gram
-        |  FROM documents,
-        |       unnest(generate_series(1, greatest(length(text) - 39, 0))) AS t(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-        |flagged AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN pos > lag(pos) OVER w + 40 THEN 1 ELSE 0 END AS brk
-        |  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        |grp AS (
-        |  SELECT doc_id, pos,
-        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM flagged)
+      s"""WITH $sharedGramRunCtes
         |SELECT doc_id, min(pos) AS span_start, max(pos) + 39 AS span_end,
         |  max(pos) + 40 - min(pos) AS span_len, count(*) AS n_grams
         |FROM grp GROUP BY doc_id, g
@@ -3373,20 +3269,7 @@ object SparkEntry {
         .select(col("doc_id"), col("n_cuts"), col("chars_removed"),
           length(col("text_clean")).cast("long").as("out_len"),
           md5(col("text_clean")).as("out_md5")), oracleSql =
-      """WITH grams AS (
-        |  SELECT doc_id, i AS pos, substr(text, i, 40) AS gram
-        |  FROM documents,
-        |       unnest(generate_series(1, greatest(length(text) - 39, 0))) AS t(i)),
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-        |hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
-        |flagged AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN pos > lag(pos) OVER w + 40 THEN 1 ELSE 0 END AS brk
-        |  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        |grp AS (
-        |  SELECT doc_id, pos,
-        |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-        |  FROM flagged),
+      s"""WITH $sharedGramRunCtes,
         |spans AS (
         |  SELECT doc_id, min(pos) AS span_start, max(pos) + 39 AS span_end,
         |    max(pos) + 40 - min(pos) AS span_len
@@ -3450,15 +3333,7 @@ object SparkEntry {
         .select(col("doc_id"), col("n_boiler"), col("n_grams"),
           (col("n_boiler").cast("double") / col("n_grams").cast("double")).as("boiler_frac"))
     }, oracleSql =
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT doc_id, gram FROM (
-        |    SELECT doc_id, unnest(CASE WHEN len(t) >= 5
-        |      THEN list_transform(range(1, len(t) - 3), i -> array_to_string(t[i:i+4], ' '))
-        |      ELSE [] END) AS gram
-        |    FROM toks)),
+      s"""WITH $docWord5GramCtes
         |hot AS (SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 3)
         |SELECT doc_id,
         |  CAST(sum(CASE WHEN gram IN (SELECT gram FROM hot) THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
@@ -3630,15 +3505,7 @@ object SparkEntry {
           sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
         .withColumn("contaminated", col("n_contaminated") > 0)
     }, oracleSql =
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |grams AS (
-        |  SELECT DISTINCT doc_id, gram FROM (
-        |    SELECT doc_id, unnest(CASE WHEN len(t) >= 5
-        |      THEN list_transform(range(1, len(t) - 3), i -> array_to_string(t[i:i+4], ' '))
-        |      ELSE [] END) AS gram
-        |    FROM toks)),
+      s"""WITH $docWord5GramCtes
         |bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 10 = 0)
         |SELECT doc_id, count(*) AS n_grams,
         |  CAST(sum(CASE WHEN gram IN (SELECT gram FROM bench) THEN 1 ELSE 0 END) AS BIGINT)
@@ -3652,22 +3519,13 @@ object SparkEntry {
     // bounded by Σ basket², never the corpus-wide O(n²) a self-join
     // builds; the oracle self-join is only viable because DuckDB runs at
     // toy scale.
-    QueryDef("q_cooccur", (s, dir) => {
-      // collect_set dedups repeated parts inside the basket during the
-      // aggregation itself — one shuffle on l_orderkey, not a distinct
-      // shuffle on (order, part) followed by a second on order.
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("part_a"), col("pr.b").as("part_b"))
+    QueryDef("q_cooccur", (s, dir) =>
+      basketPairs(s, dir)
+        .select(col("a").as("part_a"), col("b").as("part_b"))
         .groupBy("part_a", "part_b")
         .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-    }, oracleSql =
+        .filter(col("n_orders") >= 2),
+      oracleSql =
       """WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
         |SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, count(*) AS n_orders
         |FROM lp a JOIN lp b
@@ -4087,14 +3945,7 @@ object SparkEntry {
           min(col("p")).as("min_p"),
         )
     }, oracleSql =
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
-        |    THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |    ELSE [] END) AS bg
-        |  FROM toks),
+      s"""WITH $docBigramCtes
         |bgc AS (SELECT bg, count(*) AS c_bg FROM bi WHERE doc_id % 10 <> 9 GROUP BY 1),
         |pfx AS (SELECT split_part(bg, ' ', 1) AS pfx, count(*) AS c_pfx
         |  FROM bi WHERE doc_id % 10 <> 9 GROUP BY 1),
@@ -4638,48 +4489,13 @@ object SparkEntry {
     // merge sequence on a hand corpus.
     QueryDef("q_bpe_merges", (s, dir) =>
       graft.text.Bpe.learnMerges(t(s, dir, "documents"), "text", nMerges = 8),
-      // Generated, not hand-written: eight unrolled BPE merge rounds. The
-      // greedy left-to-right merge scan is expressed as string replace()
-      // over a BRACKETED symbol encoding (chr(30) sym chr(31) per symbol):
-      // replace consumes matches leftmost-first without overlap — exactly
-      // the Bpe.mergePair fold — and the brackets make a match mid-symbol
-      // impossible. Pair counts, the >= 2 floor, and the (n DESC, a, b)
-      // argmax mirror Bpe.learnMerges; an early-stopped round yields an
-      // empty mk CTE and contributes no row, like the Scala loop break.
+      // Generated: the eight unrolled merge rounds of [[bpeMergeCtes]],
+      // then one row per round's merge.
       oracleSql = {
-      val so = "chr(30)"
-      val sc = "chr(31)"
-      def round(k: Int): String =
-        s"""p$k AS MATERIALIZED (
-           |  SELECT s[CAST(i AS INT)] AS a, s[CAST(i AS INT) + 1] AS b,
-           |         CAST(sum(freq) AS BIGINT) AS n
-           |  FROM (SELECT freq,
-           |          string_split(substr(symstr, 2, length(symstr) - 2), $sc || $so) AS s
-           |        FROM w${k - 1}),
-           |       unnest(range(1, len(s))) AS t(i)
-           |  GROUP BY a, b HAVING n >= 2),
-           |m$k AS MATERIALIZED (SELECT a, b, n FROM p$k ORDER BY n DESC, a, b LIMIT 1),
-           |w$k AS MATERIALIZED (
-           |  SELECT freq,
-           |    CASE WHEN (SELECT count(*) FROM m$k) = 0 THEN symstr
-           |         ELSE replace(symstr,
-           |           $so || (SELECT a FROM m$k) || $sc || $so || (SELECT b FROM m$k) || $sc,
-           |           $so || (SELECT a FROM m$k) || (SELECT b FROM m$k) || $sc)
-           |    END AS symstr
-           |  FROM w${k - 1})""".stripMargin
-      val rounds = (1 to 8).map(round).mkString(",\n")
       val readout = (1 to 8).map(k =>
         s"""SELECT ${k - 1} AS merge_rank, a AS "left", b AS "right", n AS pair_count FROM m$k""")
         .mkString("\nUNION ALL ")
-      s"""WITH w0 AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS BIGINT) AS freq,
-         |    list_aggregate(list_transform(range(1, length(w) + 1),
-         |      i -> $so || substr(w, CAST(i AS INT), 1) || $sc), 'string_agg', '') AS symstr
-         |  FROM (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-         |                x -> x <> '')) AS w
-         |        FROM documents)
-         |  GROUP BY w),
-         |$rounds
+      s"""WITH ${bpeMergeCtes("documents")}
          |$readout""".stripMargin
     }),
 
@@ -4710,24 +4526,6 @@ object SparkEntry {
       oracleSql = {
       val so = "chr(30)"
       val sc = "chr(31)"
-      def round(k: Int): String =
-        s"""p$k AS MATERIALIZED (
-           |  SELECT s[CAST(i AS INT)] AS a, s[CAST(i AS INT) + 1] AS b,
-           |         CAST(sum(freq) AS BIGINT) AS n
-           |  FROM (SELECT freq,
-           |          string_split(substr(symstr, 2, length(symstr) - 2), $sc || $so) AS s
-           |        FROM w${k - 1}),
-           |       unnest(range(1, len(s))) AS t(i)
-           |  GROUP BY a, b HAVING n >= 2),
-           |m$k AS MATERIALIZED (SELECT a, b, n FROM p$k ORDER BY n DESC, a, b LIMIT 1),
-           |w$k AS MATERIALIZED (
-           |  SELECT freq,
-           |    CASE WHEN (SELECT count(*) FROM m$k) = 0 THEN symstr
-           |         ELSE replace(symstr,
-           |           $so || (SELECT a FROM m$k) || $sc || $so || (SELECT b FROM m$k) || $sc,
-           |           $so || (SELECT a FROM m$k) || (SELECT b FROM m$k) || $sc)
-           |    END AS symstr
-           |  FROM w${k - 1})""".stripMargin
       def enc(k: Int): String =
         s"""e$k AS MATERIALIZED (
            |  SELECT doc_id, word_pos,
@@ -4737,15 +4535,7 @@ object SparkEntry {
            |           $so || (SELECT a FROM m$k) || (SELECT b FROM m$k) || $sc)
            |    END AS symstr
            |  FROM e${k - 1})""".stripMargin
-      s"""WITH w0 AS MATERIALIZED (
-         |  SELECT CAST(count(*) AS BIGINT) AS freq,
-         |    list_aggregate(list_transform(range(1, length(w) + 1),
-         |      i -> $so || substr(w, CAST(i AS INT), 1) || $sc), 'string_agg', '') AS symstr
-         |  FROM (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-         |                x -> x <> '')) AS w
-         |        FROM documents WHERE doc_id % 3 <> 0)
-         |  GROUP BY w),
-         |${(1 to 8).map(round).mkString(",\n")},
+      s"""WITH ${bpeMergeCtes("documents WHERE doc_id % 3 <> 0")},
          |tw AS MATERIALIZED (
          |  SELECT doc_id, CAST(i - 1 AS INT) AS word_pos, toks[CAST(i AS INT)] AS w
          |  FROM (SELECT doc_id,
@@ -4786,18 +4576,7 @@ object SparkEntry {
       // oracle replays it exactly (md5-rank shard + order, cumulative
       // token stream, floor-division bins).
       oracleSql =
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS n_tokens,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
-        |  FROM documents),
-        |f AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, rnk, rnk % 16 AS shard
-        |      FROM d WHERE n_tokens > 0),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens + 1) OVER (PARTITION BY shard ORDER BY rnk, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_end
-        |  FROM f)
+      s"""WITH $packSequencesCtes
         |SELECT doc_id, shard, n_tokens,
         |  tok_end - (n_tokens + 1) AS tok_start,
         |  (tok_end - (n_tokens + 1)) // 256 AS bin_first,
@@ -4811,18 +4590,7 @@ object SparkEntry {
     QueryDef("q_pack_stats", (s, dir) =>
       graft.text.Packing.packStats(graft.text.Packing.packSequences(
         t(s, dir, "documents"), "doc_id", "text", ctxLen = 256, shards = 16)), oracleSql =
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS n_tokens,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
-        |  FROM documents),
-        |f AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, rnk, rnk % 16 AS shard
-        |      FROM d WHERE n_tokens > 0),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens + 1) OVER (PARTITION BY shard ORDER BY rnk, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_end
-        |  FROM f),
+      s"""WITH $packSequencesCtes,
         |p AS (
         |  SELECT shard,
         |    (tok_end - (n_tokens + 1)) // 256 AS bin_first,
@@ -4850,25 +4618,7 @@ object SparkEntry {
       // Next-fit is a sequential fold — the oracle replays it as a
       // per-shard recursive CTE (one recursion step per shard row).
       oracleSql =
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, n_tokens, rnk % 16 AS shard,
-        |    least(n_tokens, 256) AS n_eff,
-        |    row_number() OVER (PARTITION BY rnk % 16 ORDER BY rnk, doc_id) AS rn
-        |  FROM d WHERE n_tokens > 0),
-        |r AS (
-        |  SELECT shard, rn, doc_id, n_tokens,
-        |    CAST(0 AS BIGINT) AS bin, n_eff AS fill
-        |  FROM f WHERE rn = 1
-        |  UNION ALL
-        |  SELECT f.shard, f.rn, f.doc_id, f.n_tokens,
-        |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.bin ELSE r.bin + 1 END,
-        |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.fill + f.n_eff ELSE f.n_eff END
-        |  FROM r JOIN f ON f.shard = r.shard AND f.rn = r.rn + 1)
+      s"""WITH RECURSIVE $packGreedyCtes
         |SELECT doc_id, shard, n_tokens, bin, n_tokens > 256 AS truncated
         |FROM r""".stripMargin),
 
@@ -4884,25 +4634,7 @@ object SparkEntry {
           count(lit(1)).as("n_docs"),
           sum(least(col("n_tokens"), lit(256L))).as("fill"),
           (lit(256L) - sum(least(col("n_tokens"), lit(256L)))).as("waste")), oracleSql =
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens,
-        |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, n_tokens, rnk % 16 AS shard,
-        |    least(n_tokens, 256) AS n_eff,
-        |    row_number() OVER (PARTITION BY rnk % 16 ORDER BY rnk, doc_id) AS rn
-        |  FROM d WHERE n_tokens > 0),
-        |r AS (
-        |  SELECT shard, rn, doc_id, n_tokens,
-        |    CAST(0 AS BIGINT) AS bin, n_eff AS fill
-        |  FROM f WHERE rn = 1
-        |  UNION ALL
-        |  SELECT f.shard, f.rn, f.doc_id, f.n_tokens,
-        |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.bin ELSE r.bin + 1 END,
-        |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.fill + f.n_eff ELSE f.n_eff END
-        |  FROM r JOIN f ON f.shard = r.shard AND f.rn = r.rn + 1)
+      s"""WITH RECURSIVE $packGreedyCtes
         |SELECT shard, bin, count(*) AS n_docs,
         |  CAST(sum(least(n_tokens, 256)) AS BIGINT) AS fill,
         |  256 - CAST(sum(least(n_tokens, 256)) AS BIGINT) AS waste
@@ -5671,20 +5403,7 @@ object SparkEntry {
     // of paying 8 distributed rounds of scheduler latency; a 100 TB
     // basket graph exceeds the threshold and takes the distributed path.
     QueryDef("q_pagerank", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      PageRank.runAdaptive(edges, iters = 8)
+      PageRank.runAdaptive(bothDirections(copurchasePairs(s, dir)), iters = 8)
         .select(col("node").as("part"), round(col("rank"), 6).as("rank"))
     },
       // Power iteration as a recursive CTE: the working table is one
@@ -5695,34 +5414,15 @@ object SparkEntry {
       // whose 0.15 cast to double is one ulp below Spark's
       // lit(1.0 - 0.85) = 0.15000000000000002.
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
+      s"""WITH RECURSIVE
+        |$basketCandCtes
         |pairs AS (SELECT a, b FROM cand GROUP BY a, b HAVING count(*) >= 2),
         |edges AS (SELECT a AS src, b AS dst FROM pairs UNION ALL SELECT b, a FROM pairs),
         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
         |nodes AS (SELECT src AS node FROM deg),
-        |pr AS (
-        |  SELECT node, CAST(1.0 AS DOUBLE) AS rank, 0 AS it FROM nodes
-        |  UNION ALL
-        |  SELECT n.node,
-        |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE) AS rank,
-        |         i.nit
-        |  FROM nodes n
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM pr GROUP BY it) i
-        |  LEFT JOIN (
-        |    SELECT e.dst AS node, sum(CAST(p.rank / d.deg AS DECIMAL(28,12))) AS mass
-        |    FROM pr p JOIN edges e ON e.src = p.node JOIN deg d ON d.src = e.src
-        |    GROUP BY e.dst) m ON m.node = n.node
-        |  WHERE i.nit <= 8)
-        |SELECT node AS part, round(rank, 6) AS rank FROM pr WHERE it = 8""".stripMargin),
+        |${pageRankCte(init = "CAST(1.0 AS DOUBLE)",
+          rank = "(CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE)",
+          contrib = "p.rank / d.deg")}""".stripMargin),
 
     // --- beyond-reference: personalized PageRank -------------------------
     // "Related to THESE items": teleport mass lands only on the seed
@@ -5732,56 +5432,25 @@ object SparkEntry {
     // 8 unrolled recursive-CTE rounds in the oracle). Nodes unreachable
     // from any seed read exactly 0.
     QueryDef("q_ppr", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-      PageRank.runPersonalizedAdaptive(edges, isSeed = col("node") % 50 === 0, iters = 8)
+      PageRank.runPersonalizedAdaptive(bothDirections(copurchasePairs(s, dir)),
+        isSeed = col("node") % 50 === 0, iters = 8)
         .select(col("node").as("part"), round(col("rank"), 6).as("rank"))
     },
       // Personalized variant: identical recursion with the seed-masked
       // teleport (init = teleport; floor = (1-d)*tele).
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
+      s"""WITH RECURSIVE
+        |$basketCandCtes
         |pairs AS (SELECT a, b FROM cand GROUP BY a, b HAVING count(*) >= 2),
         |edges AS (SELECT a AS src, b AS dst FROM pairs UNION ALL SELECT b, a FROM pairs),
         |deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
         |nodes AS (SELECT src AS node,
         |  CASE WHEN src % 50 = 0 THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS tele
         |  FROM deg),
-        |pr AS (
-        |  SELECT node, tele AS rank, 0 AS it FROM nodes
-        |  UNION ALL
-        |  SELECT n.node,
-        |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * n.tele
-        |           + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE) AS rank,
-        |         i.nit
-        |  FROM nodes n
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM pr GROUP BY it) i
-        |  LEFT JOIN (
-        |    SELECT e.dst AS node, sum(CAST(p.rank / d.deg AS DECIMAL(28,12))) AS mass
-        |    FROM pr p JOIN edges e ON e.src = p.node JOIN deg d ON d.src = e.src
-        |    GROUP BY e.dst) m ON m.node = n.node
-        |  WHERE i.nit <= 8)
-        |SELECT node AS part, round(rank, 6) AS rank FROM pr WHERE it = 8""".stripMargin),
+        |${pageRankCte(init = "tele",
+          rank = "(CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * n.tele\n" +
+            "           + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE)",
+          contrib = "p.rank / d.deg")}""".stripMargin),
 
     // --- beyond-reference: two-sample Kolmogorov-Smirnov drift test ------
     // Distribution-drift QC between data slices (the training-mix
@@ -5943,25 +5612,7 @@ object SparkEntry {
         tiebreak = col("event_id"))
         .withColumnRenamed("k", "user_id")
         .withColumnRenamed("attr", "tier"), oracleSql =
-      """WITH p AS (
-        |  SELECT user_id AS k, CAST(floor(value / 25.0) AS BIGINT) AS attr,
-        |    epoch_us(ts) AS ts, event_id AS tb
-        |  FROM events WHERE event_type = 'purchase'),
-        |lg AS (
-        |  SELECT k, attr, ts, tb,
-        |    lag(attr) OVER w AS prev, lag(1) OVER w AS prev_seen
-        |  FROM p WINDOW w AS (PARTITION BY k ORDER BY ts, tb)),
-        |ch AS (
-        |  SELECT k, attr, ts, tb FROM lg
-        |  WHERE prev_seen IS NULL OR attr IS DISTINCT FROM prev),
-        |iv AS (
-        |  SELECT k, attr, ts AS valid_from,
-        |    lead(ts) OVER w2 AS valid_to,
-        |    CAST(row_number() OVER w2 AS INT) AS version
-        |  FROM ch WINDOW w2 AS (PARTITION BY k ORDER BY ts, tb))
-        |SELECT k AS user_id, attr AS tier, valid_from, valid_to, version,
-        |  valid_to IS NULL AS is_current
-        |FROM iv""".stripMargin),
+      scd2TierSql),
 
     // --- beyond-reference: INCREMENTAL SCD2 maintenance ------------------
     // The warehouse-dimension member of the incremental family: the
@@ -5989,25 +5640,7 @@ object SparkEntry {
       // Fold == full rebuild: the incremental query's oracle IS the
       // one-shot recompute over the union.
       oracleSql =
-      """WITH p AS (
-        |  SELECT user_id AS k, CAST(floor(value / 25.0) AS BIGINT) AS attr,
-        |    epoch_us(ts) AS ts, event_id AS tb
-        |  FROM events WHERE event_type = 'purchase'),
-        |lg AS (
-        |  SELECT k, attr, ts, tb,
-        |    lag(attr) OVER w AS prev, lag(1) OVER w AS prev_seen
-        |  FROM p WINDOW w AS (PARTITION BY k ORDER BY ts, tb)),
-        |ch AS (
-        |  SELECT k, attr, ts, tb FROM lg
-        |  WHERE prev_seen IS NULL OR attr IS DISTINCT FROM prev),
-        |iv AS (
-        |  SELECT k, attr, ts AS valid_from,
-        |    lead(ts) OVER w2 AS valid_to,
-        |    CAST(row_number() OVER w2 AS INT) AS version
-        |  FROM ch WINDOW w2 AS (PARTITION BY k ORDER BY ts, tb))
-        |SELECT k AS user_id, attr AS tier, valid_from, valid_to, version,
-        |  valid_to IS NULL AS is_current
-        |FROM iv""".stripMargin),
+      scd2TierSql),
 
     // --- beyond-reference: blocked entity resolution (record linkage) ----
     // Fuzzy-match dirtied customer names back to the clean roster: a
@@ -6023,28 +5656,12 @@ object SparkEntry {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
       val dirty = c.select(
         col("c_custkey").as("d_key"),
-        when(pmod(col("c_custkey"), lit(3)) === 0,
-          concat(lit("C"), substring(col("c_name"), 3, 64)))
-          .when(pmod(col("c_custkey"), lit(3)) === 1,
-            concat(substring(col("c_name"), 1, 6), lit("m"), substring(col("c_name"), 7, 64)))
-          .otherwise(concat(lit("Cuts"), substring(col("c_name"), 5, 64)))
-          .as("d_name"))
+        typoCustomerName.as("d_name"))
       graft.core.Linkage.bestMatch(
         dirty, "d_key", "d_name", c, "c_custkey", "c_name",
         blockLen = 4, minSim = 0.85)
     }, oracleSql =
-      """WITH c AS (SELECT c_custkey, c_name FROM customer),
-        |d AS (
-        |  SELECT c_custkey AS d_key,
-        |    CASE WHEN c_custkey % 3 = 0 THEN 'C' || substr(c_name, 3, 64)
-        |         WHEN c_custkey % 3 = 1 THEN substr(c_name, 1, 6) || 'm' || substr(c_name, 7, 64)
-        |         ELSE 'Cuts' || substr(c_name, 5, 64) END AS d_name
-        |  FROM c),
-        |j AS (
-        |  SELECT d.d_key, d.d_name, c.c_custkey,
-        |    jaro_winkler_similarity(d.d_name, c.c_name) AS sim
-        |  FROM d JOIN c ON right(d.d_name, 4) = right(c.c_name, 4)
-        |  WHERE jaro_winkler_similarity(d.d_name, c.c_name) >= 0.85),
+      s"""WITH $typoMatchCtes
         |r AS (
         |  SELECT d_key, d_name, c_custkey, sim,
         |    row_number() OVER (PARTITION BY d_key ORDER BY sim DESC, c_custkey) AS rn
@@ -6063,12 +5680,7 @@ object SparkEntry {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
       val dirty = c.select(
         col("c_custkey").as("d_key"),
-        when(pmod(col("c_custkey"), lit(3)) === 0,
-          concat(lit("C"), substring(col("c_name"), 3, 64)))
-          .when(pmod(col("c_custkey"), lit(3)) === 1,
-            concat(substring(col("c_name"), 1, 6), lit("m"), substring(col("c_name"), 7, 64)))
-          .otherwise(concat(lit("Cuts"), substring(col("c_name"), 5, 64)))
-          .as("d_name"))
+        typoCustomerName.as("d_name"))
       graft.core.Linkage.reciprocalBestMatch(
         dirty, "d_key", "d_name", c, "c_custkey", "c_name",
         blockLen = 4, minSim = 0.85)
@@ -6076,18 +5688,7 @@ object SparkEntry {
       // Mutual argmax: the q_entity_match candidate CTE with row_number
       // in BOTH directions, both filtered to 1.
       oracleSql =
-      """WITH c AS (SELECT c_custkey, c_name FROM customer),
-        |d AS (
-        |  SELECT c_custkey AS d_key,
-        |    CASE WHEN c_custkey % 3 = 0 THEN 'C' || substr(c_name, 3, 64)
-        |         WHEN c_custkey % 3 = 1 THEN substr(c_name, 1, 6) || 'm' || substr(c_name, 7, 64)
-        |         ELSE 'Cuts' || substr(c_name, 5, 64) END AS d_name
-        |  FROM c),
-        |j AS (
-        |  SELECT d.d_key, d.d_name, c.c_custkey,
-        |    jaro_winkler_similarity(d.d_name, c.c_name) AS sim
-        |  FROM d JOIN c ON right(d.d_name, 4) = right(c.c_name, 4)
-        |  WHERE jaro_winkler_similarity(d.d_name, c.c_name) >= 0.85),
+      s"""WITH $typoMatchCtes
         |r AS (
         |  SELECT d_key, d_name, c_custkey, sim,
         |    row_number() OVER (PARTITION BY d_key ORDER BY sim DESC, c_custkey) AS rp,
@@ -6109,12 +5710,7 @@ object SparkEntry {
       val dirty = c.select(
         col("c_custkey"), col("c_name"),
         pmod(col("c_custkey"), lit(3)).as("cls"),
-        when(pmod(col("c_custkey"), lit(3)) === 0,
-          concat(lit("C"), substring(col("c_name"), 3, 64)))
-          .when(pmod(col("c_custkey"), lit(3)) === 1,
-            concat(substring(col("c_name"), 1, 6), lit("m"), substring(col("c_name"), 7, 64)))
-          .otherwise(concat(lit("Cuts"), substring(col("c_name"), 5, 64)))
-          .as("d_name"))
+        typoCustomerName.as("d_name"))
       dirty
         .withColumn("dl", graft.functions.GraftFunctions
           .damerauLevenshtein(col("d_name"), col("c_name")))
@@ -6226,38 +5822,15 @@ object SparkEntry {
     // --- beyond-reference: triangle counting -----------------------------
     // Per-node triangle participation over the part co-purchase graph
     // (q_cooccur's edge rule: canonical a<b pairs in >= 2 baskets) — the
-    // clustering-coefficient numerator beside q_pagerank's centrality.
-    // The compact "forward" join: edges meet on the middle vertex, then
-    // one membership join closes (a,c) — candidate pairs stay bounded by
-    // Σ deg², never the n³ triple cross. The edge list feeds three
-    // consumers, so it's checkpointed once (the q_mad_outliers pattern);
-    // each triangle then credits its three corners via one explode.
+    // clustering-coefficient numerator beside q_pagerank's centrality,
+    // through [[triangleCounts]]; the edge list is checkpointed once (the
+    // q_mad_outliers pattern).
     QueryDef("q_triangles", (s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("pa"), col("pr.b").as("pb"))
-        .groupBy("pa", "pb")
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select(col("pa"), col("pb"))
-        .localCheckpoint(false)
-      val tris = edges.select(col("pa").as("a"), col("pb").as("b"))
-        .join(edges.select(col("pa").as("b"), col("pb").as("c")), Seq("b"))
-        .join(edges.select(col("pa").as("a"), col("pb").as("c")), Seq("a", "c"))
-      tris
-        .select(explode(array(col("a"), col("b"), col("c"))).as("part"))
-        .groupBy("part")
-        .agg(count(lit(1)).as("n_tri"))
+      triangleCounts(copurchasePairs(s, dir)
+        .select(col("a").as("pa"), col("b").as("pb"))
+        .localCheckpoint(false))
     }, oracleSql =
-      """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e AS (
-        |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM op a JOIN op b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $copurchaseEdgeCtes
         |tri AS (
         |  SELECT e1.pa AS a, e1.pb AS b, e2.pb AS c
         |  FROM e e1
@@ -6275,24 +5848,12 @@ object SparkEntry {
     // degree agg), one IEEE tree; nodes of degree < 2 are excluded
     // (coefficient undefined).
     QueryDef("q_clustering_coef", (s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("pa"), col("pr.b").as("pb"))
-        .groupBy("pa", "pb")
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select(col("pa"), col("pb"))
+      val edges = copurchasePairs(s, dir)
+        .select(col("a").as("pa"), col("b").as("pb"))
         .localCheckpoint(false) // degree + triangle consumers
       val deg = edges.select(col("pa").as("part")).unionByName(edges.select(col("pb").as("part")))
         .groupBy("part").agg(count(lit(1)).as("deg"))
-      val tris = edges.select(col("pa").as("a"), col("pb").as("b"))
-        .join(edges.select(col("pa").as("b"), col("pb").as("c")), Seq("b"))
-        .join(edges.select(col("pa").as("a"), col("pb").as("c")), Seq("a", "c"))
-        .select(explode(array(col("a"), col("b"), col("c"))).as("part"))
-        .groupBy("part").agg(count(lit(1)).as("n_tri"))
+      val tris = triangleCounts(edges)
       deg.filter(col("deg") >= 2)
         .join(tris, Seq("part"), "left")
         .select(col("part"), col("deg"),
@@ -6301,12 +5862,7 @@ object SparkEntry {
             (col("deg").cast("double") * (col("deg") - 1).cast("double")), 9)
             .as("clustering"))
     }, oracleSql =
-      """WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |e AS (
-        |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        |  FROM op a JOIN op b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      s"""WITH $copurchaseEdgeCtes
         |deg AS (
         |  SELECT part, count(*) AS deg FROM (
         |    SELECT pa AS part FROM e UNION ALL SELECT pb FROM e)
@@ -6690,17 +6246,9 @@ object SparkEntry {
     // integer-exact sum aggregate + one argmax window, both keyed on
     // the destination node; localCheckpoint caps plan growth.
     QueryDef("q_communities", (s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("pa"), col("pr.b").as("pb"))
-        .groupBy("pa", "pb")
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-      val edges = pairs.select(col("pa").as("src"), col("pb").as("dst"), col("n_orders").as("weight"))
-        .union(pairs.select(col("pb").as("src"), col("pa").as("dst"), col("n_orders").as("weight")))
+      val pairs = copurchasePairs(s, dir)
+      val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("n").as("weight"))
+        .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("n").as("weight")))
       graft.graph.LabelProp.runAdaptive(edges, iters = 4)
         .groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("n_nodes"),
@@ -6819,32 +6367,9 @@ object SparkEntry {
     // scaling recipe breaks on daily aggregates (DuckDB's int128→double
     // cast is 1-ulp off past 53 bits).
     QueryDef("q_acf", (s, dir) => {
-      val daily = t(s, dir, "orders")
-        .groupBy(floor(tsUs(col("o_orderdate")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("o_totalprice").cast("decimal(12,3)")).as("v"))
-        .select(col("day"),
-          floor(col("v").cast("double") / lit(1000.0)).cast("long").as("kilo"))
-      Stats.autocorr(daily, time = col("day"), value = col("kilo"), maxLag = 7)
+      Stats.autocorr(dailyRevenueKilo(s, dir), time = col("day"), value = col("kilo"), maxLag = 7)
     }, oracleSql =
-      """WITH daily AS (
-        |  SELECT day, CAST(floor(CAST(v AS DOUBLE) / 1000.0) AS BIGINT) AS kilo
-        |  FROM (
-        |    SELECT CAST(floor(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS day,
-        |      sum(CAST(o_totalprice AS DECIMAL(12,3))) AS v
-        |    FROM orders GROUP BY 1)),
-        |pairs AS (
-        |  SELECT CAST(g.gs AS INT) AS lag_d, a.kilo AS x, b.kilo AS y
-        |  FROM daily a
-        |  CROSS JOIN (SELECT unnest(range(1, 8)) AS gs) g
-        |  JOIN daily b ON b.day = a.day + g.gs),
-        |m AS (
-        |  SELECT lag_d, count(*) AS n,
-        |    CAST(CAST(sum(x) AS BIGINT) AS DOUBLE) AS sx,
-        |    CAST(CAST(sum(y) AS BIGINT) AS DOUBLE) AS sy,
-        |    CAST(CAST(sum(x * x) AS BIGINT) AS DOUBLE) AS sxx,
-        |    CAST(CAST(sum(y * y) AS BIGINT) AS DOUBLE) AS syy,
-        |    CAST(CAST(sum(x * y) AS BIGINT) AS DOUBLE) AS sxy
-        |  FROM pairs GROUP BY 1)
+      s"""WITH ${acfMomentCtes(maxLag = 7)}
         |SELECT lag_d, n,
         |  (n * sxy - sx * sy) /
         |    (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS acf
@@ -6869,17 +6394,7 @@ object SparkEntry {
       // deliberately NOT the prefix-filtered plan, so a green row proves
       // the Spark-side prefix filter is lossless.
       oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs),
+      s"""WITH $shingleSetCtes
         |sz AS (SELECT doc_id, len(sh) AS m FROM sh WHERE len(sh) > 0),
         |ov AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -6910,7 +6425,7 @@ object SparkEntry {
       val baskets = ip.join(ic.select("item"), "item")
         .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
       val pairs = baskets
-        // r15: successor-pairs kernel (see q_cooccur).
+        // r15: successor-pairs kernel (see basketPairs).
         .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
         .select(col("pr.a").as("ia"), col("pr.b").as("ib"))
         .groupBy("ia", "ib").agg(count(lit(1)).as("nab"))
@@ -6957,17 +6472,7 @@ object SparkEntry {
     // node; the oracle replays the identical chain as unrolled
     // MATERIALIZED CTEs.
     QueryDef("q_kcore", (s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("item")).distinct()
-        .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
-        .select(col("pr.a").as("ia"), col("pr.b").as("ib"))
-        .groupBy("ia", "ib").agg(count(lit(1)).as("nab"))
-        .filter(col("nab") >= 2)
-      val edges = pairs.select(col("ia").as("src"), col("ib").as("dst"))
-        .union(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-      graft.graph.KCore.peelAdaptive(edges, k = 3, rounds = 6)
+      graft.graph.KCore.peelAdaptive(bothDirections(itemPairs(s, dir)), k = 3, rounds = 6)
     }, oracleSql = kcoreOracleSql(k = 3, rounds = 6)),
 
     // --- beyond-reference: k-truss peeling (triangle cohesion) ---------
@@ -6979,15 +6484,7 @@ object SparkEntry {
     // fixed-round contract as KCore, oracle = the identical chain
     // unrolled as MATERIALIZED CTEs.
     QueryDef("q_ktruss", (s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("item")).distinct()
-        .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("nab"))
-        .filter(col("nab") >= 2)
-        .select(col("a"), col("b"))
+      val pairs = itemPairs(s, dir).select(col("a"), col("b"))
       graft.graph.KTruss.peelAdaptive(pairs, k = 3, rounds = 2)
         .select(col("a").as("part_a"), col("b").as("part_b"), col("support"))
     }, oracleSql = ktrussOracleSql(k = 3, rounds = 2)),
@@ -7001,16 +6498,7 @@ object SparkEntry {
     // nothing: decimal moment sums (order-free), one fixed IEEE tree.
     // Scale: a degree aggregation + two stats-sized joins back to edges.
     QueryDef("q_assortativity", (s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("item")).distinct()
-        .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("nab"))
-        .filter(col("nab") >= 2)
-      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+      val sym = bothDirections(itemPairs(s, dir))
         .localCheckpoint(eager = false) // degree agg + two rejoin consumers
       val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val pairsDeg = sym
@@ -7253,17 +6741,7 @@ object SparkEntry {
     // maxDeg hub cap bounding the two-hop fan-out, one left-anti to
     // drop existing edges.
     QueryDef("q_adamic_adar", (s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("item")).distinct()
-        .groupBy("ok").agg(sort_array(collect_set(col("item"))).as("items"))
-        // r15: successor-pairs kernel (see q_cooccur).
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("items"))).as("pr"))
-        .select(col("pr.a").as("ia"), col("pr.b").as("ib"))
-        .groupBy("ia", "ib").agg(count(lit(1)).as("nab"))
-        .filter(col("nab") >= 2)
-      val edges = pairs.select(col("ia").as("src"), col("ib").as("dst"))
-        .union(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-      graft.graph.LinkPred.adamicAdar(edges, minCommon = 2, maxDeg = 200)
+      graft.graph.LinkPred.adamicAdar(bothDirections(itemPairs(s, dir)), minCommon = 2, maxDeg = 200)
     }, oracleSql =
       """WITH ip AS MATERIALIZED (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS item FROM lineitem),
@@ -7303,17 +6781,7 @@ object SparkEntry {
       SetSimJoin.selfJoinIncrement(
         docs.filter(col("doc_id") % 4 === 0), col("doc_id"), shingles, idx, t = 0.5)
     }, oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs),
+      s"""WITH $shingleSetCtes
         |bs AS (SELECT doc_id, sh, len(sh) AS m FROM sh WHERE doc_id % 4 = 0 AND len(sh) > 0),
         |ix AS (SELECT doc_id, sh, len(sh) AS m FROM sh WHERE doc_id % 4 <> 0 AND len(sh) > 0),
         |pairs AS (
@@ -7988,10 +7456,6 @@ object SparkEntry {
         .join(broadcast(stats.select("source", "n", "p")), "source")
         .withColumn("nr", col("n") - col("nl"))
         .withColumn("pr", col("p") - col("pl"))
-      def giniSide(nc: Column, pc: Column) =
-        when(nc === 0L, lit(0.0)).otherwise(
-          d(nc) * (lit(1.0) - (d(pc) / d(nc)) * (d(pc) / d(nc)) -
-            (d(nc - pc) / d(nc)) * (d(nc - pc) / d(nc))))
       val w = Window.partitionBy("source").orderBy(col("score").asc, col("cut").asc)
       sides
         .withColumn("score",
@@ -7999,7 +7463,7 @@ object SparkEntry {
         .withColumn("rk", row_number().over(w))
         .select("source", "rk", "cut", "nl", "pl", "nr", "pr", "score")
     }, oracleSql =
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT source, n_chars,
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
         |  FROM documents),
@@ -8025,19 +7489,7 @@ object SparkEntry {
         |  FROM sides s JOIN stats t USING (source)),
         |g AS (
         |  SELECT source, cut, nl, pl, nr, pr,
-        |    ((CASE WHEN nl = 0 THEN 0.0 ELSE
-        |        CAST(nl AS DOUBLE) * (1.0
-        |          - (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |            * (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |          - (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |            * (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))) END)
-        |     + (CASE WHEN nr = 0 THEN 0.0 ELSE
-        |        CAST(nr AS DOUBLE) * (1.0
-        |          - (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |            * (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |          - (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |            * (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))) END))
-        |      / CAST(n AS DOUBLE) AS score
+        |    $giniScoreSql AS score
         |  FROM sc)
         |SELECT source, rk, cut, nl, pl, nr, pr, score FROM (
         |  SELECT *, row_number() OVER (PARTITION BY source ORDER BY score, cut) AS rk
@@ -8054,19 +7506,7 @@ object SparkEntry {
     // variant the raw and adjusted means plus the shared θ and ρ²
     // (ρ² IS the variance-reduction fraction CUPED delivers).
     QueryDef("q_cuped", (s, dir) => {
-      val e = t(s, dir, "events").select(
-        col("user_id"),
-        floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"),
-        col("value").cast("decimal(12,3)").as("v"))
-      val mid = e.agg(floor((min(col("day")) + max(col("day"))).cast("double") / lit(2.0))
-        .cast("long").as("mid"))
-      val u = e.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-          floor(coalesce(sum(when(col("day") < col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("x"),
-          floor(coalesce(sum(when(col("day") >= col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("y"))
+      val u = userPrePost(s, dir)
         .withColumn("variant", pmod(col("user_id"), lit(2)).cast("int"))
         .localCheckpoint(false) // two consumers: pooled moments + per-variant means
       val d = (c: Column) => c.cast("double")
@@ -8093,14 +7533,7 @@ object SparkEntry {
             ((d(col("n")) * d(col("sxx")) - d(col("sx")) * d(col("sx"))) *
               (d(col("n")) * d(col("syy")) - d(col("sy")) * d(col("sy"))))).as("rho2"))
     }, oracleSql =
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    CAST(value AS DECIMAL(12,3)) AS v
-        |  FROM events),
-        |md AS (
-        |  SELECT CAST(floor(CAST(min(day) + max(day) AS DOUBLE) / 2.0) AS BIGINT) AS mid
-        |  FROM e),
+      s"""WITH $userDayCtes
         |u AS (
         |  SELECT user_id,
         |    CAST(floor(CAST(coalesce(sum(CASE WHEN day < mid THEN v END),
@@ -9387,17 +8820,7 @@ object SparkEntry {
       // BRUTE FORCE directed all-pairs — the losslessness gate for the
       // asymmetric prefix filter.
       oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs),
+      s"""WITH $shingleSetCtes
         |ov AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |    CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS inter,
@@ -9409,12 +8832,6 @@ object SparkEntry {
         |FROM ov
         |WHERE CAST(inter AS DOUBLE) >= 0.5 * CAST(size_a AS DOUBLE)""".stripMargin),
 
-    // --- beyond-reference: incremental containment vs the standing index -
-    // The ingest-time quote detector ([[SetSimJoin.containmentIncrement]]):
-    // both directions against the frozen store plus batch-internal
-    // pairs; index×index pairs never re-form. The oracle is the
-    // brute-force directed join over batch-touching pairs — frozen-order
-    // pruning can never change the result set, only its cost.
     // --- beyond-reference: paired t-test (pre/post per user) --------------
     // The within-subject sibling of q_welch_t: each user's post-minus-pre
     // gap (the q_cuped split: integer midpoint day, floored integer
@@ -9423,19 +8840,7 @@ object SparkEntry {
     // q_welch_t has to carry.
     QueryDef("q_paired_t", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val e = t(s, dir, "events").select(
-        col("user_id"),
-        floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"),
-        col("value").cast("decimal(12,3)").as("v"))
-      val mid = e.agg(floor((min(col("day")) + max(col("day"))).cast("double") / lit(2.0))
-        .cast("long").as("mid"))
-      e.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-          floor(coalesce(sum(when(col("day") < col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("x"),
-          floor(coalesce(sum(when(col("day") >= col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("y"))
+      userPrePost(s, dir)
         .select((col("y") - col("x")).as("dd"))
         .agg(count(lit(1)).as("n"), sum(col("dd")).as("sd"),
           sum(col("dd") * col("dd")).as("sdd"))
@@ -9448,14 +8853,7 @@ object SparkEntry {
     },
       // Three exact BIGINT moments of the per-user post-minus-pre gap.
       oracleSql =
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    CAST(value AS DECIMAL(12,3)) AS v
-        |  FROM events),
-        |md AS (
-        |  SELECT CAST(floor(CAST(min(day) + max(day) AS DOUBLE) / 2.0) AS BIGINT) AS mid
-        |  FROM e),
+      s"""WITH $userDayCtes
         |u AS (
         |  SELECT user_id,
         |    CAST(floor(CAST(coalesce(sum(CASE WHEN day >= mid THEN v END),
@@ -9483,18 +8881,7 @@ object SparkEntry {
     // pooled-moment arithmetic.
     QueryDef("q_mde", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
-        .withColumn("pos", pmod(col("user_id"), lit(2)) === 1)
-        .groupBy("event_type")
-        .agg(
-          sum(when(col("pos"), 1L).otherwise(0L)).as("n1"),
-          sum(when(!col("pos"), 1L).otherwise(0L)).as("n0"),
-          sum(when(col("pos"), col("v"))).as("s1"),
-          sum(when(!col("pos"), col("v"))).as("s0"),
-          sum(when(col("pos"), col("v") * col("v"))).as("q1"),
-          sum(when(!col("pos"), col("v") * col("v"))).as("q0"))
+      parityMoments(userTotalsByParity(s, dir))
         .withColumn("sp",
           sqrt(((d(col("q1")) - d(col("s1")) * d(col("s1")) / d(col("n1"))) +
             (d(col("q0")) - d(col("s0")) * d(col("s0")) / d(col("n0")))) /
@@ -9510,19 +8897,7 @@ object SparkEntry {
       // Shared z constants (1.959964 + 0.841621 = 2.801585); pooled-moment
       // arithmetic identical to q_effect_size's.
       oracleSql =
-      """WITH u AS (
-        |  SELECT event_type, user_id, sum(CAST(value AS DECIMAL(12,3))) AS v,
-        |    user_id % 2 = 1 AS pos
-        |  FROM events GROUP BY 1, 2),
-        |mo AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    sum(CASE WHEN pos THEN v END) AS s1,
-        |    sum(CASE WHEN NOT pos THEN v END) AS s0,
-        |    sum(CASE WHEN pos THEN v * v END) AS q1,
-        |    sum(CASE WHEN NOT pos THEN v * v END) AS q0
-        |  FROM u GROUP BY 1),
+      s"""WITH $parityMomentCtes
         |sp AS (
         |  SELECT event_type, n1, n0, s0,
         |    sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) +
@@ -9631,10 +9006,7 @@ object SparkEntry {
     // Exact decimal comparisons inside type-partitioned frame windows;
     // emits only the peak rows.
     QueryDef("q_peaks", (s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
       val wOrd = Window.partitionBy("event_type").orderBy(col("day"))
       val wb = wOrd.rowsBetween(-2, -1)
       val wa = wOrd.rowsBetween(1, 2)
@@ -9649,11 +9021,7 @@ object SparkEntry {
     },
       // Identical frame windows; decimal comparisons.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |n AS (
         |  SELECT event_type, day, v,
         |    max(v) OVER (PARTITION BY event_type ORDER BY day
@@ -9673,12 +9041,7 @@ object SparkEntry {
     // just lag-1 echo?". The recursion is pure scalar arithmetic on the
     // three ACF values (identical doubles both engines).
     QueryDef("q_pacf", (s, dir) => {
-      val daily = t(s, dir, "orders")
-        .groupBy(floor(tsUs(col("o_orderdate")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("o_totalprice").cast("decimal(12,3)")).as("v"))
-        .select(col("day"),
-          floor(col("v").cast("double") / lit(1000.0)).cast("long").as("kilo"))
-      Stats.autocorr(daily, time = col("day"), value = col("kilo"), maxLag = 3)
+      Stats.autocorr(dailyRevenueKilo(s, dir), time = col("day"), value = col("kilo"), maxLag = 3)
         .agg(
           max(when(col("lag_d") === 1, col("acf"))).as("r1"),
           max(when(col("lag_d") === 2, col("acf"))).as("r2"),
@@ -9698,25 +9061,7 @@ object SparkEntry {
       // The q_acf moment machinery at lags 1..3, then the scalar
       // Durbin-Levinson tree.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT day, CAST(floor(CAST(v AS DOUBLE) / 1000.0) AS BIGINT) AS kilo
-        |  FROM (
-        |    SELECT CAST(floor(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS day,
-        |      sum(CAST(o_totalprice AS DECIMAL(12,3))) AS v
-        |    FROM orders GROUP BY 1)),
-        |pairs AS (
-        |  SELECT CAST(g.gs AS INT) AS lag_d, a.kilo AS x, b.kilo AS y
-        |  FROM daily a
-        |  CROSS JOIN (SELECT unnest(range(1, 4)) AS gs) g
-        |  JOIN daily b ON b.day = a.day + g.gs),
-        |m AS (
-        |  SELECT lag_d, count(*) AS n,
-        |    CAST(CAST(sum(x) AS BIGINT) AS DOUBLE) AS sx,
-        |    CAST(CAST(sum(y) AS BIGINT) AS DOUBLE) AS sy,
-        |    CAST(CAST(sum(x * x) AS BIGINT) AS DOUBLE) AS sxx,
-        |    CAST(CAST(sum(y * y) AS BIGINT) AS DOUBLE) AS syy,
-        |    CAST(CAST(sum(x * y) AS BIGINT) AS DOUBLE) AS sxy
-        |  FROM pairs GROUP BY 1),
+      s"""WITH ${acfMomentCtes(maxLag = 3)},
         |acf AS (
         |  SELECT lag_d,
         |    (n * sxy - sx * sy) /
@@ -9815,10 +9160,7 @@ object SparkEntry {
     // motif-searchable; thresholds compare identical doubles.
     QueryDef("q_sax", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
       val w = Window.partitionBy("event_type").orderBy(col("day"))
       val seg = daily
         .withColumn("segi", ((row_number().over(w) - 1) / lit(8)).cast("int"))
@@ -9848,11 +9190,7 @@ object SparkEntry {
     },
       // Same PAA segmentation; symbol thresholds on identical doubles.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |seg AS (
         |  SELECT event_type,
         |    CAST(trunc((row_number() OVER (PARTITION BY event_type ORDER BY day) - 1) / 8.0) AS INT)
@@ -9890,19 +9228,7 @@ object SparkEntry {
     // BIGINT moments per variant.
     QueryDef("q_did", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val e = t(s, dir, "events").select(
-        col("user_id"),
-        floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"),
-        col("value").cast("decimal(12,3)").as("v"))
-      val mid = e.agg(floor((min(col("day")) + max(col("day"))).cast("double") / lit(2.0))
-        .cast("long").as("mid"))
-      val u = e.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-          floor(coalesce(sum(when(col("day") < col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("x"),
-          floor(coalesce(sum(when(col("day") >= col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("y"))
+      val u = userPrePost(s, dir)
         .withColumn("g", pmod(col("user_id"), lit(2)).cast("int"))
         .withColumn("dd", col("y") - col("x"))
       u.groupBy("g")
@@ -9928,14 +9254,7 @@ object SparkEntry {
     },
       // The q_cuped per-user split; five exact BIGINT moments per variant.
       oracleSql =
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    CAST(value AS DECIMAL(12,3)) AS v
-        |  FROM events),
-        |md AS (
-        |  SELECT CAST(floor(CAST(min(day) + max(day) AS DOUBLE) / 2.0) AS BIGINT) AS mid
-        |  FROM e),
+      s"""WITH $userDayCtes
         |u AS (
         |  SELECT user_id,
         |    CAST(floor(CAST(coalesce(sum(CASE WHEN day >= mid THEN v END),
@@ -9979,19 +9298,7 @@ object SparkEntry {
     // via a broadcast scalar.
     QueryDef("q_att_strata", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val e = t(s, dir, "events").select(
-        col("user_id"),
-        floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"),
-        col("value").cast("decimal(12,3)").as("v"))
-      val mid = e.agg(floor((min(col("day")) + max(col("day"))).cast("double") / lit(2.0))
-        .cast("long").as("mid"))
-      val u = e.crossJoin(broadcast(mid))
-        .groupBy("user_id")
-        .agg(
-          floor(coalesce(sum(when(col("day") < col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("x"),
-          floor(coalesce(sum(when(col("day") >= col("mid"), col("v"))),
-            lit(java.math.BigDecimal.ZERO)).cast("double")).cast("long").as("y"))
+      val u = userPrePost(s, dir)
         .withColumn("g", pmod(col("user_id"), lit(2)).cast("int"))
         .localCheckpoint(eager = false) // bin bounds + stratum aggregates
       val mm = u.agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
@@ -10020,14 +9327,7 @@ object SparkEntry {
       // Fixed-width pre-activity bins (the calibration binning), CEM
       // prune, treated-weighted gap sum with decimal-quantized terms.
       oracleSql =
-      """WITH e AS (
-        |  SELECT user_id,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    CAST(value AS DECIMAL(12,3)) AS v
-        |  FROM events),
-        |md AS (
-        |  SELECT CAST(floor(CAST(min(day) + max(day) AS DOUBLE) / 2.0) AS BIGINT) AS mid
-        |  FROM e),
+      s"""WITH $userDayCtes
         |u AS (
         |  SELECT user_id,
         |    CAST(floor(CAST(coalesce(sum(CASE WHEN day < mid THEN v END),
@@ -10500,10 +9800,7 @@ object SparkEntry {
     // real signal. Lags are observation lags over the daily rollup
     // (rows, not calendar — identical framing both engines).
     QueryDef("q_forecast_eval", (s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
       val w = Window.partitionBy("event_type").orderBy(col("day"))
       daily
         .withColumn("l1", lag(col("v"), 1).over(w))
@@ -10521,11 +9818,7 @@ object SparkEntry {
       // Observation lags over the same daily rollup; exact decimal
       // absolute-error sums.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |lagged AS (
         |  SELECT event_type, v,
         |    lag(v, 1) OVER w AS l1, lag(v, 7) OVER w AS l7
@@ -10691,10 +9984,7 @@ object SparkEntry {
     // scale-stable by construction.
     QueryDef("q_mannkendall", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
         .localCheckpoint(eager = false) // pair join (both sides) + tie groups
       val pairs = daily.select(col("event_type"), col("day").as("da"), col("v").as("va"))
         .join(daily.select(col("event_type"), col("day").as("db"), col("v").as("vb")),
@@ -10721,11 +10011,7 @@ object SparkEntry {
       // sign() on exact decimals; tie-corrected variance from exact
       // integer group sizes; one division by 18.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |pr AS (
         |  SELECT a.event_type,
         |    CAST(sum(CAST(sign(b.v - a.v) AS BIGINT)) AS BIGINT) AS s_stat,
@@ -10760,10 +10046,7 @@ object SparkEntry {
     // partitioned rank windows.
     QueryDef("q_theil_sen", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
         .localCheckpoint(eager = false) // slopes + residual pass
       val slopes = daily.select(col("event_type"), col("day").as("da"), col("v").as("va"))
         .join(daily.select(col("event_type"), col("day").as("db"), col("v").as("vb")),
@@ -10790,11 +10073,7 @@ object SparkEntry {
       // Lower-median order statistics (never interpolated) for slope and
       // intercept, under total orders shared with the Spark windows.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |slopes AS (
         |  SELECT a.event_type, a.day AS da, b.day AS db,
         |    CAST(b.v - a.v AS DOUBLE) / CAST(b.day - a.day AS DOUBLE) AS sl
@@ -10835,10 +10114,7 @@ object SparkEntry {
     // one small aggregate — no extra scans.
     QueryDef("q_stl_lite", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          floor(tsUs(col("ts")) / 86400000000L).cast("long").as("day"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
+      val daily = dailyEventTotals(s, dir)
       val w7 = Window.partitionBy("event_type").orderBy(col("day"))
         .rowsBetween(-3, 3)
       val det = daily
@@ -10858,11 +10134,7 @@ object SparkEntry {
       // Identical 7-row centered frames; detrended values quantize before
       // the day-of-week means.
       oracleSql =
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
-        |    sum(CAST(value AS DECIMAL(12,3))) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyEventCte
         |det AS (
         |  SELECT event_type, day, v,
         |    CAST(sum(v) OVER w7 AS DOUBLE) / CAST(count(*) OVER w7 AS DOUBLE) AS trend,
@@ -10893,18 +10165,9 @@ object SparkEntry {
     // One aggregation for moments + one partitioned rank window.
     QueryDef("q_effect_size", (s, dir) => {
       val d = (c: Column) => c.cast("double")
-      val u = t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(col("value").cast("decimal(12,3)")).as("v"))
-        .withColumn("pos", pmod(col("user_id"), lit(2)) === 1)
+      val u = userTotalsByParity(s, dir)
         .localCheckpoint(eager = false) // moment branch + rank branch
-      val cohen = u.groupBy("event_type").agg(
-          sum(when(col("pos"), 1L).otherwise(0L)).as("n1"),
-          sum(when(!col("pos"), 1L).otherwise(0L)).as("n0"),
-          sum(when(col("pos"), col("v"))).as("s1"),
-          sum(when(!col("pos"), col("v"))).as("s0"),
-          sum(when(col("pos"), col("v") * col("v"))).as("q1"),
-          sum(when(!col("pos"), col("v") * col("v"))).as("q0"))
+      val cohen = parityMoments(u)
         .select(col("event_type"), col("n1"), col("n0"),
           ((d(col("s1")) / d(col("n1"))) - (d(col("s0")) / d(col("n0")))).as("mean_gap"),
           sqrt(((d(col("q1")) - d(col("s1")) * d(col("s1")) / d(col("n1"))) +
@@ -10920,19 +10183,7 @@ object SparkEntry {
       // Exact decimal moments for d; the rocAuc doubled-rank convention
       // for delta (2·AUC − 1), rank on the DOUBLE cast both engines share.
       oracleSql =
-      """WITH u AS (
-        |  SELECT event_type, user_id, sum(CAST(value AS DECIMAL(12,3))) AS v,
-        |    user_id % 2 = 1 AS pos
-        |  FROM events GROUP BY 1, 2),
-        |mo AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    sum(CASE WHEN pos THEN v END) AS s1,
-        |    sum(CASE WHEN NOT pos THEN v END) AS s0,
-        |    sum(CASE WHEN pos THEN v * v END) AS q1,
-        |    sum(CASE WHEN NOT pos THEN v * v END) AS q0
-        |  FROM u GROUP BY 1),
+      s"""WITH $parityMomentCtes
         |cohen AS (
         |  SELECT event_type, n1, n0,
         |    (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) - (CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE)) AS mean_gap,
@@ -10960,6 +10211,12 @@ object SparkEntry {
         |  round(a.auc * 2.0 - 1.0, 6) + 0 AS cliffs_delta
         |FROM cohen c JOIN a2 a USING (event_type)""".stripMargin),
 
+    // --- beyond-reference: incremental containment vs the standing index -
+    // The ingest-time quote detector ([[SetSimJoin.containmentIncrement]]):
+    // both directions against the frozen store plus batch-internal
+    // pairs; index×index pairs never re-form. The oracle is the
+    // brute-force directed join over batch-touching pairs — frozen-order
+    // pruning can never change the result set, only its cost.
     QueryDef("q_containment_incremental", (s, dir) => {
       val docs = t(s, dir, "documents")
       val shingles = TextAnalysis.wordShingles(col("text"), 3)
@@ -10971,17 +10228,7 @@ object SparkEntry {
       // Brute force over batch-touching directed pairs, side-tagged by
       // index membership (doc_id % 4 splits exactly as the query does).
       oracleSql =
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    CASE WHEN len(toks) >= 3
-        |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
-        |        i -> array_to_string(toks[i:i+2], ' ')))
-        |      ELSE [] END AS sh
-        |  FROM docs),
+      s"""WITH $shingleSetCtes
         |mz AS (
         |  SELECT doc_id, sh, len(sh) AS m, doc_id % 4 = 0 AS isb
         |  FROM sh WHERE len(sh) > 0),
@@ -11023,10 +10270,6 @@ object SparkEntry {
         .withColumn("cut", col("mn") +
           floor(d(col("i")) * d(col("mx") - col("mn")) / lit(16.0)).cast("long"))
         .select("source", "f", "cut").distinct()
-      def giniSide(nc: Column, pc: Column) =
-        when(nc === 0L, lit(0.0)).otherwise(
-          d(nc) * (lit(1.0) - (d(pc) / d(nc)) * (d(pc) / d(nc)) -
-            (d(nc - pc) / d(nc)) * (d(nc - pc) / d(nc))))
       val w = Window.partitionBy("source", "f").orderBy(col("score").asc, col("cut").asc)
       val best = train.join(cuts, Seq("source", "f"))
         .groupBy("source", "f", "cut")
@@ -11058,7 +10301,7 @@ object SparkEntry {
       // The q_stump fit with one extra (fold) key, then held-out scoring
       // under the train-side majority rule; md5 fold membership.
       oracleSql =
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT source, n_chars,
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos,
         |    CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 3 AS INT)
@@ -11088,19 +10331,7 @@ object SparkEntry {
         |  FROM sides s JOIN stats t USING (source, f)),
         |g AS (
         |  SELECT source, f, cut, nl, pl, nr, pr,
-        |    ((CASE WHEN nl = 0 THEN 0.0 ELSE
-        |        CAST(nl AS DOUBLE) * (1.0
-        |          - (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |            * (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |          - (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))
-        |            * (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))) END)
-        |     + (CASE WHEN nr = 0 THEN 0.0 ELSE
-        |        CAST(nr AS DOUBLE) * (1.0
-        |          - (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |            * (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |          - (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))
-        |            * (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))) END))
-        |      / CAST(n AS DOUBLE) AS score
+        |    $giniScoreSql AS score
         |  FROM sc),
         |best AS (
         |  SELECT source, f, cut, score,
@@ -11786,10 +11017,7 @@ object SparkEntry {
           (col("user_id") % 10).cast("int").as("ubucket"),
           col("value").cast("decimal(18,6)").as("v"),
           dayofmonth(col("ts")).as("day"))
-      val ins1 = ev.filter(col("day") <= 15).withColumn("op", lit(1))
-      val ins2 = ev.filter(col("day") > 15).withColumn("op", lit(1))
-      val dels = ev.filter(col("day") <= 10 || col("event_type") === "error")
-        .withColumn("op", lit(-1))
+      val (ins1, ins2, dels) = retractChangelog(ev)
       val scalarSt = Seq(ins2, dels).foldLeft(
         Ivm.signedAggState(ins1, keys, "v", "op"))((acc, b) =>
         Ivm.mergeSignedStates(acc, Ivm.signedAggState(b, keys, "v", "op"), keys)
@@ -11857,10 +11085,7 @@ object SparkEntry {
           (col("user_id") % 10).cast("int").as("ubucket"),
           col("user_id").as("user"),
           dayofmonth(col("ts")).as("day"))
-      val ins1 = ev.filter(col("day") <= 15).withColumn("op", lit(1))
-      val ins2 = ev.filter(col("day") > 15).withColumn("op", lit(1))
-      val dels = ev.filter(col("day") <= 10 || col("event_type") === "error")
-        .withColumn("op", lit(-1))
+      val (ins1, ins2, dels) = retractChangelog(ev)
       val st = Seq(ins2, dels).foldLeft(
         Ivm.supportState(ins1, keys, "user", "op"))((acc, b) =>
         Ivm.mergeSupportStates(acc, Ivm.supportState(b, keys, "user", "op"),
@@ -11890,10 +11115,7 @@ object SparkEntry {
         .select(col("event_type"),
           floor(col("value")).cast("int").as("v"),
           dayofmonth(col("ts")).as("day"))
-      val ins1 = ev.filter(col("day") <= 15).withColumn("op", lit(1))
-      val ins2 = ev.filter(col("day") > 15).withColumn("op", lit(1))
-      val dels = ev.filter(col("day") <= 10 || col("event_type") === "error")
-        .withColumn("op", lit(-1))
+      val (ins1, ins2, dels) = retractChangelog(ev)
       val st = Seq(ins2, dels).foldLeft(
         Ivm.supportState(ins1, keys, "v", "op"))((acc, b) =>
         Ivm.mergeSupportStates(acc, Ivm.supportState(b, keys, "v", "op"),
@@ -11941,10 +11163,7 @@ object SparkEntry {
         .filter(col("value").isNotNull)
         .select(col("event_type"), col("event_id"), col("value"),
           dayofmonth(col("ts")).as("day"))
-      val ins1 = ev.filter(col("day") <= 15).withColumn("op", lit(1))
-      val ins2 = ev.filter(col("day") > 15).withColumn("op", lit(1))
-      val dels = ev.filter(col("day") <= 10 || col("event_type") === "error")
-        .withColumn("op", lit(-1))
+      val (ins1, ins2, dels) = retractChangelog(ev)
       val st = Seq(ins2, dels).foldLeft(
         Ivm.supportState(ins1, grain, "event_id", "op"))((acc, b) =>
         Ivm.mergeSupportStates(acc, Ivm.supportState(b, grain, "event_id", "op"),
@@ -11956,14 +11175,7 @@ object SparkEntry {
       // full recompute over the live rows: the maintained leaderboard must
       // equal the one-shot window ranking bit-for-bit
       oracleSql =
-      """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
-        |FROM (SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id) AS rank
-        |  FROM events
-        |  WHERE value IS NOT NULL
-        |    AND date_part('day', ts) > 10 AND event_type <> 'error') t
-        |WHERE rank <= 5""".stripMargin),
+      liveLeaderboardSql),
 
     // TOP-K under retraction with BOUNDED state — the compacting trade
     // the exact support table (q_ivm_topk_retract, state = live rows)
@@ -11984,10 +11196,7 @@ object SparkEntry {
         .filter(col("value").isNotNull)
         .select(col("event_type"), col("event_id"), col("value"),
           dayofmonth(col("ts")).as("day"))
-      val ins1 = ev.filter(col("day") <= 15).withColumn("op", lit(1))
-      val ins2 = ev.filter(col("day") > 15).withColumn("op", lit(1))
-      val dels = ev.filter(col("day") <= 10 || col("event_type") === "error")
-        .withColumn("op", lit(-1))
+      val (ins1, ins2, dels) = retractChangelog(ev)
       val st0 = Ivm.topKBoundedInit(ins1, keys, "value", "event_id", k = 5, m = 4)
       val folded = Seq(ins2, dels).foldLeft(st0) { (acc, b) =>
         val next = Ivm.topKBoundedMerge(acc, b, keys, "value", "event_id", "op",
@@ -12019,14 +11228,7 @@ object SparkEntry {
       // the bounded-buffer variant maintains a different state but must
       // read back the IDENTICAL leaderboard while churn stays in-buffer
       oracleSql =
-      """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
-        |FROM (SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id) AS rank
-        |  FROM events
-        |  WHERE value IS NOT NULL
-        |    AND date_part('day', ts) > 10 AND event_type <> 'error') t
-        |WHERE rank <= 5""".stripMargin),
+      liveLeaderboardSql),
 
     // --- beyond-reference: feature-hashing vectorizer (hashing trick) ---
     // Weinberger et al. 2009: token → bucket via hash, ± sign via a
@@ -12609,12 +11811,7 @@ object SparkEntry {
       // Exact top-k: the aggregate's two-level build+merge must equal the
       // direct window ranking — total order (value DESC, event_id ASC).
       oracleSql =
-      """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
-        |FROM (SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id) AS rank
-        |  FROM events WHERE value IS NOT NULL) t
-        |WHERE rank <= 5""".stripMargin),
+      topValuedEventsSql),
 
     // Standing leaderboard: the same top-k state folded INCREMENTALLY —
     // three ten-day batches, each merge step persisted like a daily
@@ -12647,12 +11844,7 @@ object SparkEntry {
       // identical oracle to q_topk_agg: the incremental fold must land on
       // the same exact ranking
       oracleSql =
-      """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
-        |FROM (SELECT event_type, event_id, value,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY value DESC, event_id) AS rank
-        |  FROM events WHERE value IS NOT NULL) t
-        |WHERE rank <= 5""".stripMargin),
+      topValuedEventsSql),
 
     // Deterministic reservoir sample as the same aggregate: A-Res
     // (Efraimidis & Spiridakis 2006) with the randomness replaced by an
@@ -12692,17 +11884,7 @@ object SparkEntry {
     // bit-identical, GraphSpec-pinned), oracle = the same 8-round
     // recursive CTE with sum(w) out-mass in place of out-degree.
     QueryDef("q_pagerank_weighted", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
+      val pairs = copurchasePairs(s, dir)
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("n"))
         .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("n")))
       PageRank.runWeightedAdaptive(edges, "n", iters = 8)
@@ -12713,35 +11895,16 @@ object SparkEntry {
       // out-degree, and each contribution is rank·w/wsum — same
       // decimal(28,12) quantization so the cross-engine hash is exact.
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
+      s"""WITH RECURSIVE
+        |$basketCandCtes
         |pairs AS (SELECT a, b, count(*) AS n FROM cand GROUP BY a, b HAVING count(*) >= 2),
         |edges AS (SELECT a AS src, b AS dst, n AS w FROM pairs
         |          UNION ALL SELECT b, a, n FROM pairs),
         |deg AS (SELECT src, sum(w) AS wsum FROM edges GROUP BY src),
         |nodes AS (SELECT src AS node FROM deg),
-        |pr AS (
-        |  SELECT node, CAST(1.0 AS DOUBLE) AS rank, 0 AS it FROM nodes
-        |  UNION ALL
-        |  SELECT n.node,
-        |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE) AS rank,
-        |         i.nit
-        |  FROM nodes n
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM pr GROUP BY it) i
-        |  LEFT JOIN (
-        |    SELECT e.dst AS node, sum(CAST(p.rank * e.w / d.wsum AS DECIMAL(28,12))) AS mass
-        |    FROM pr p JOIN edges e ON e.src = p.node JOIN deg d ON d.src = e.src
-        |    GROUP BY e.dst) m ON m.node = n.node
-        |  WHERE i.nit <= 8)
-        |SELECT node AS part, round(rank, 6) AS rank FROM pr WHERE it = 8""".stripMargin),
+        |${pageRankCte(init = "CAST(1.0 AS DOUBLE)",
+          rank = "(CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) + 0.85 * CAST(COALESCE(m.mass, 0) AS DOUBLE)",
+          contrib = "p.rank * e.w / d.wsum")}""".stripMargin),
 
     // --- beyond-reference: multi-source hop-bounded shortest paths -----
     // The co-purchase graph again, now asked a PATH question: the
@@ -12758,28 +11921,7 @@ object SparkEntry {
     // carry ∪ relax. Sparse state: only reached (source, node) pairs
     // ever shuffle (ShortestPath.scala scale notes).
     QueryDef("q_sssp", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-        .withColumn("w", floor(lit(1000.0) / col("n").cast("double")).cast("long"))
-      // r14: the substrate feeds THREE jobs (sources collect, the sizing
-      // count, the edge collect/driver-BF input) — checkpointed once; the
-      // incremental sibling already did this, which is why it ran FASTER
-      // than the plain query (1.77 vs 2.86 s idle) before this fix.
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .localCheckpoint(eager = false)
-      val sources = edges.select(col("src")).distinct()
-        .orderBy(col("src")).limit(3).select(col("src").as("source"))
-      graft.graph.ShortestPath.runAdaptive(edges, sources, iters = 6)
+      copurchaseShortestPaths(s, dir)
         .select(col("source"), col("node").as("part"), col("dist"))
     },
       // Hop-bounded Bellman-Ford as a recursive CTE: each round is a min
@@ -12788,35 +11930,8 @@ object SparkEntry {
       // the same carry ∪ relax round ShortestPath.run executes. State is
       // sparse (reached pairs only), mirroring the Spark side.
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
-        |pairs AS (
-        |  SELECT a, b, CAST(floor(1000.0 / count(*)) AS BIGINT) AS w
-        |  FROM cand GROUP BY a, b HAVING count(*) >= 2),
-        |edges AS (SELECT a AS src, b AS dst, w FROM pairs
-        |          UNION ALL SELECT b, a, w FROM pairs),
-        |srcs AS (SELECT src AS source
-        |         FROM (SELECT DISTINCT src FROM edges ORDER BY src LIMIT 3)),
-        |loop_edges AS (SELECT src, dst, w FROM edges
-        |               UNION ALL
-        |               SELECT DISTINCT src, src, CAST(0 AS BIGINT) FROM edges),
-        |bf AS (
-        |  SELECT source, source AS node, CAST(0 AS BIGINT) AS dist, 0 AS it FROM srcs
-        |  UNION ALL
-        |  SELECT m.source, m.node, m.dist, i.nit
-        |  FROM (SELECT p.source, e.dst AS node, min(p.dist + e.w) AS dist
-        |        FROM bf p JOIN loop_edges e ON e.src = p.node
-        |        GROUP BY p.source, e.dst) m
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM bf GROUP BY it) i
-        |  WHERE i.nit <= 6)
+      s"""WITH RECURSIVE
+        |${copurchaseBfCtes(rounds = 6)}
         |SELECT source, node AS part, dist FROM bf WHERE it = 6""".stripMargin),
 
     // --- beyond-reference: INCREMENTAL shortest paths (edge addition) --
@@ -12832,26 +11947,14 @@ object SparkEntry {
     // is the point: incremental fold ≡ batch fixpoint (fixpoints are
     // unique; GraphSpec pins the same equality on random splits).
     QueryDef("q_sssp_incremental", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-        .withColumn("w", floor(lit(1000.0) / col("n").cast("double")).cast("long"))
+      val pairs = copurchaseCostPairs(s, dir)
       val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"), col("a"), col("b"))
         .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("w"), col("a"), col("b")))
         .localCheckpoint(eager = false) // base/delta split + the full set
       val isLate = pmod(col("a") + col("b"), lit(5)) === 0
       val base = edges.filter(!isLate).select(col("src"), col("dst"), col("w"))
       val delta = edges.filter(isLate).select(col("src"), col("dst"), col("w"))
-      val sources = edges.select(col("src")).distinct()
-        .orderBy(col("src")).limit(3).select(col("src").as("source"))
+      val sources = lowestSources(edges)
       // r14: adaptive tiers — at this scale the co-purchase graph is far
       // under the 2M-edge driver bound, so base fixpoint + incremental
       // fold run as driver sweeps (bit-identical: unique fixpoint, long
@@ -12867,35 +11970,8 @@ object SparkEntry {
       // at the gate scale: stable from round 10; 14 is margin (the CTE
       // carries the full state per round, so extra rounds are idempotent).
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
-        |pairs AS (
-        |  SELECT a, b, CAST(floor(1000.0 / count(*)) AS BIGINT) AS w
-        |  FROM cand GROUP BY a, b HAVING count(*) >= 2),
-        |edges AS (SELECT a AS src, b AS dst, w FROM pairs
-        |          UNION ALL SELECT b, a, w FROM pairs),
-        |srcs AS (SELECT src AS source
-        |         FROM (SELECT DISTINCT src FROM edges ORDER BY src LIMIT 3)),
-        |loop_edges AS (SELECT src, dst, w FROM edges
-        |               UNION ALL
-        |               SELECT DISTINCT src, src, CAST(0 AS BIGINT) FROM edges),
-        |bf AS (
-        |  SELECT source, source AS node, CAST(0 AS BIGINT) AS dist, 0 AS it FROM srcs
-        |  UNION ALL
-        |  SELECT m.source, m.node, m.dist, i.nit
-        |  FROM (SELECT p.source, e.dst AS node, min(p.dist + e.w) AS dist
-        |        FROM bf p JOIN loop_edges e ON e.src = p.node
-        |        GROUP BY p.source, e.dst) m
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM bf GROUP BY it) i
-        |  WHERE i.nit <= 14)
+      s"""WITH RECURSIVE
+        |${copurchaseBfCtes(rounds = 14)}
         |SELECT source, node AS part, dist FROM bf WHERE it = 14""".stripMargin),
 
     // --- beyond-reference: harmonic centrality of the seed parts -------
@@ -12906,25 +11982,7 @@ object SparkEntry {
     // before the sum (the PageRank mass discipline: partitioning cannot
     // reorder a decimal sum).
     QueryDef("q_harmonic_centrality", (s, dir) => {
-      val baskets = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      val pairs = baskets
-        // r15: one codegen'd successor-pairs kernel + one explode — the
-        // posexplode×slice chain duplicated the basket per position.
-        .select(explode(graft.functions.GraftFunctions.successorPairs(col("ps"))).as("pr"))
-        .select(col("pr.a").as("a"), col("pr.b").as("b"))
-        .groupBy("a", "b")
-        .agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-        .withColumn("w", floor(lit(1000.0) / col("n").cast("double")).cast("long"))
-      // r14: checkpoint the multi-job substrate once (see q_sssp).
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst"), col("w")))
-        .localCheckpoint(eager = false)
-      val sources = edges.select(col("src")).distinct()
-        .orderBy(col("src")).limit(3).select(col("src").as("source"))
-      graft.graph.ShortestPath.runAdaptive(edges, sources, iters = 6)
+      copurchaseShortestPaths(s, dir)
         .filter(col("dist") > 0)
         .groupBy("source")
         .agg(count(lit(1)).as("n_reached"),
@@ -12936,35 +11994,8 @@ object SparkEntry {
       // quantized decimal(28,12) before the sum (order-free), self rows
       // (dist 0) excluded.
       oracleSql =
-      """WITH RECURSIVE
-        |baskets AS (
-        |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
-        |  FROM lineitem GROUP BY l_orderkey),
-        |cand AS (
-        |  SELECT ps[i] AS a, ps[j] AS b
-        |  FROM baskets,
-        |       unnest(generate_series(1, len(ps))) t1(i),
-        |       unnest(generate_series(1, len(ps))) t2(j)
-        |  WHERE i < j),
-        |pairs AS (
-        |  SELECT a, b, CAST(floor(1000.0 / count(*)) AS BIGINT) AS w
-        |  FROM cand GROUP BY a, b HAVING count(*) >= 2),
-        |edges AS (SELECT a AS src, b AS dst, w FROM pairs
-        |          UNION ALL SELECT b, a, w FROM pairs),
-        |srcs AS (SELECT src AS source
-        |         FROM (SELECT DISTINCT src FROM edges ORDER BY src LIMIT 3)),
-        |loop_edges AS (SELECT src, dst, w FROM edges
-        |               UNION ALL
-        |               SELECT DISTINCT src, src, CAST(0 AS BIGINT) FROM edges),
-        |bf AS (
-        |  SELECT source, source AS node, CAST(0 AS BIGINT) AS dist, 0 AS it FROM srcs
-        |  UNION ALL
-        |  SELECT m.source, m.node, m.dist, i.nit
-        |  FROM (SELECT p.source, e.dst AS node, min(p.dist + e.w) AS dist
-        |        FROM bf p JOIN loop_edges e ON e.src = p.node
-        |        GROUP BY p.source, e.dst) m
-        |  CROSS JOIN (SELECT it + 1 AS nit FROM bf GROUP BY it) i
-        |  WHERE i.nit <= 6)
+      s"""WITH RECURSIVE
+        |${copurchaseBfCtes(rounds = 6)}
         |SELECT source, CAST(count(*) AS BIGINT) AS n_reached,
         |  round(CAST(sum(CAST(1.0 / CAST(dist AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE), 9)
         |    AS harmonic
@@ -13022,14 +12053,7 @@ object SparkEntry {
       // IEEE op order of the Spark expression (greatest/COALESCE guards
       // included), per-doc sum through decimal(28,12).
       oracleSql =
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
-        |    THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
-        |    ELSE [] END) AS bg
-        |  FROM toks),
+      s"""WITH $docBigramCtes
         |b2 AS (SELECT doc_id, bg, split_part(bg, ' ', 1) AS pfx,
         |              split_part(bg, ' ', 2) AS w2 FROM bi),
         |tr AS (SELECT * FROM b2 WHERE doc_id % 10 <> 9),
@@ -13353,6 +12377,38 @@ object SparkEntry {
        |  WHERE a.vec_id <> p.qid),
        |""".stripMargin
 
+  /** The fitted-IVF top-5 pipeline for the 8 query vectors (vec_id < 8):
+    * 16 cells from 3 Lloyd rounds over the `fitWhere` slice, rounded
+    * through FLOAT as Ann's cell centroids are, then assignment of every
+    * vector, a 4-cell probe per query and the cosine top 5 (qid, vec_id,
+    * sim, rn).
+    */
+  private def ivfOracleSql(fitWhere: String): String =
+    s"""WITH ${lloydCtes(k = 16, iters = 3, dim = 64, fitWhere = fitWhere)},
+       |cf AS MATERIALIZED (
+       |  SELECT cid, list_transform(cv, x -> CAST(CAST(x AS FLOAT) AS DOUBLE)) AS cv
+       |  FROM c3),
+       |assigned AS MATERIALIZED (
+       |  SELECT vec_id, v, cid FROM (
+       |    SELECT e.vec_id, e.v, c.cid,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
+       |    FROM e, cf c)
+       |  WHERE rn = 1),
+       |probed AS MATERIALIZED (
+       |  SELECT vec_id AS qid, v AS qv, cid FROM (
+       |    SELECT e.vec_id, e.v, c.cid,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cid) AS rn
+       |    FROM e, cf c WHERE e.vec_id < 8)
+       |  WHERE rn <= 4),
+       |scored AS (
+       |  SELECT DISTINCT q.qid, a.vec_id, list_cosine_similarity(q.qv, a.v) AS sim
+       |  FROM probed q JOIN assigned a USING (cid) WHERE a.vec_id <> q.qid),
+       |ranked AS (SELECT qid, vec_id, sim,
+       |  row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn FROM scored)
+       |SELECT qid, vec_id, round(sim, 6) AS sim, rn FROM ranked WHERE rn <= 5""".stripMargin
+
   /** @param fitWhere SQL predicate selecting the Lloyd-FIT slice (the
     *   standing-index scenario fits centroids on the base load only);
     *   the `e` CTE still exposes ALL vectors for downstream assignment.
@@ -13427,6 +12483,501 @@ object SparkEntry {
     * 0-based line explode → threshold table (f) → owner line (f2) → keep
     * flags (k). Mirrors synthLineDocs + LineDedup exactly.
     */
+  /** The co-purchase baskets and their (a < b) candidate pairs, one row
+    * per shared order — the substrate the graph oracles group into
+    * `pairs` (≥ 2 shared orders). Ends with a comma.
+    */
+  private val basketCandCtes: String =
+    """baskets AS (
+      |  SELECT l_orderkey, list_sort(list_distinct(list(l_partkey))) AS ps
+      |  FROM lineitem GROUP BY l_orderkey),
+      |cand AS (
+      |  SELECT ps[i] AS a, ps[j] AS b
+      |  FROM baskets,
+      |       unnest(generate_series(1, len(ps))) t1(i),
+      |       unnest(generate_series(1, len(ps))) t2(j)
+      |  WHERE i < j),""".stripMargin
+
+  /** The co-purchase graph's canonical edges `e` (pa < pb, ≥ 2 shared
+    * orders) by a self-join of the distinct (order, part) rows — the
+    * triangle oracles' substrate. Ends with a comma.
+    */
+  private val copurchaseEdgeCtes: String =
+    """op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |e AS (
+      |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+      |  FROM op a JOIN op b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      |  GROUP BY 1, 2 HAVING count(*) >= 2),""".stripMargin
+
+  /** Hop-bounded Bellman-Ford over the cost-weighted co-purchase graph
+    * (w = floor(1000/n)) from its three lowest parts, as a recursive CTE:
+    * each round is a min over one-edge relaxations of the previous
+    * round's reached set, with a zero-cost self-loop per node supplying
+    * the carried dist — the carry ∪ relax round ShortestPath.run
+    * executes. State is sparse (reached pairs only). `bf` holds rounds
+    * 0..`rounds`, tagged `it`.
+    */
+  private def copurchaseBfCtes(rounds: Int): String =
+    s"""$basketCandCtes
+      |pairs AS (
+      |  SELECT a, b, CAST(floor(1000.0 / count(*)) AS BIGINT) AS w
+      |  FROM cand GROUP BY a, b HAVING count(*) >= 2),
+      |edges AS (SELECT a AS src, b AS dst, w FROM pairs
+      |          UNION ALL SELECT b, a, w FROM pairs),
+      |srcs AS (SELECT src AS source
+      |         FROM (SELECT DISTINCT src FROM edges ORDER BY src LIMIT 3)),
+      |loop_edges AS (SELECT src, dst, w FROM edges
+      |               UNION ALL
+      |               SELECT DISTINCT src, src, CAST(0 AS BIGINT) FROM edges),
+      |bf AS (
+      |  SELECT source, source AS node, CAST(0 AS BIGINT) AS dist, 0 AS it FROM srcs
+      |  UNION ALL
+      |  SELECT m.source, m.node, m.dist, i.nit
+      |  FROM (SELECT p.source, e.dst AS node, min(p.dist + e.w) AS dist
+      |        FROM bf p JOIN loop_edges e ON e.src = p.node
+      |        GROUP BY p.source, e.dst) m
+      |  CROSS JOIN (SELECT it + 1 AS nit FROM bf GROUP BY it) i
+      |  WHERE i.nit <= $rounds)""".stripMargin
+
+  /** 8 rounds of PageRank power iteration as a recursive CTE over `nodes`,
+    * `edges` and `deg`, then the rounded readout (part, rank). `init` is
+    * the round-0 rank, `rank` the next round's rank from its mass
+    * `m.mass`, and `contrib` one edge's contribution to that mass, which
+    * quantizes through decimal(28,12) as on the Spark side, so the
+    * comparison is hash-exact.
+    */
+  private def pageRankCte(init: String, rank: String, contrib: String): String =
+    s"""pr AS (
+      |  SELECT node, $init AS rank, 0 AS it FROM nodes
+      |  UNION ALL
+      |  SELECT n.node,
+      |         $rank AS rank,
+      |         i.nit
+      |  FROM nodes n
+      |  CROSS JOIN (SELECT it + 1 AS nit FROM pr GROUP BY it) i
+      |  LEFT JOIN (
+      |    SELECT e.dst AS node, sum(CAST($contrib AS DECIMAL(28,12))) AS mass
+      |    FROM pr p JOIN edges e ON e.src = p.node JOIN deg d ON d.src = e.src
+      |    GROUP BY e.dst) m ON m.node = n.node
+      |  WHERE i.nit <= 8)
+      |SELECT node AS part, round(rank, 6) AS rank FROM pr WHERE it = 8""".stripMargin
+
+  /** Per-user event days `e` (user_id, day, v as decimal(12,3)) and
+    * their integer midpoint day `md`, the pre/post split of the A/B
+    * oracles. Ends with a comma.
+    */
+  private val userDayCtes: String =
+    """e AS (
+      |  SELECT user_id,
+      |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+      |    CAST(value AS DECIMAL(12,3)) AS v
+      |  FROM events),
+      |md AS (
+      |  SELECT CAST(floor(CAST(min(day) + max(day) AS DOUBLE) / 2.0) AS BIGINT) AS mid
+      |  FROM e),""".stripMargin
+
+  /** Each document's distinct word 3-shingles `sh` (doc_id, sh; empty
+    * below 3 tokens) over its whitespace tokens `docs` — the set-
+    * similarity oracles' substrate (TextAnalysis.wordShingles). Ends with
+    * a comma.
+    */
+  private val shingleSetCtes: String =
+    """docs AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
+      |  FROM documents),
+      |sh AS MATERIALIZED (
+      |  SELECT doc_id,
+      |    CASE WHEN len(toks) >= 3
+      |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
+      |        i -> array_to_string(toks[i:i+2], ' ')))
+      |      ELSE [] END AS sh
+      |  FROM docs),""".stripMargin
+
+  /** Each event type's daily series `daily` (event_type, day, v) — the
+    * time-series oracles' substrate. Ends with a comma.
+    */
+  private val dailyEventCte: String =
+    """daily AS (
+      |  SELECT event_type,
+      |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS day,
+      |    sum(CAST(value AS DECIMAL(12,3))) AS v
+      |  FROM events GROUP BY 1, 2),""".stripMargin
+
+  /** Every doc pair (a < b) of `docs` whose word-3-shingle Jaccard is
+    * ≥ `minJaccard`, by brute force: doc_id_a, doc_id_b, jaccard (4
+    * places), then `extraCols`, one select item each — the exact row set
+    * the near-dup queries' LSH stages must reproduce.
+    */
+  private def jaccardPairsSql(docs: String, minJaccard: Double, extraCols: Seq[String]): String =
+    s"""WITH docs AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
+      |  FROM $docs),
+      |sh AS (
+      |  SELECT doc_id,
+      |    CASE WHEN len(toks) >= 3
+      |      THEN list_distinct(list_transform(range(1, len(toks) - 1),
+      |        i -> array_to_string(toks[i:i+2], ' ')))
+      |      ELSE [] END AS sh
+      |  FROM docs)
+      |SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
+      |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+      |        len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard${extraCols.map(",\n  " + _).mkString}
+      |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
+      |  AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+      |      len(list_distinct(list_concat(a.sh, b.sh))) >= $minJaccard""".stripMargin
+
+  /** Near-dup components by brute force over the tokenized docs CTE
+    * `docs` (doc_id, toks): word-3-shingle sets `sh`, pairs with Jaccard
+    * ≥ `minJaccard`, symmetric edges plus self-loops, and their
+    * transitive closure `reach(s, t)` — min(t) per s is the cluster
+    * label. The recursive CTE needs WITH RECURSIVE.
+    */
+  private def shingleClosureCtes(docs: String, minJaccard: Double): String =
+    s"""sh AS (
+      |  SELECT doc_id, CASE WHEN len(toks) >= 3
+      |    THEN list_distinct(list_transform(range(1, len(toks) - 1),
+      |      i -> array_to_string(toks[i:i+2], ' ')))
+      |    ELSE [] END AS sh FROM $docs),
+      |pairs AS (
+      |  SELECT a.doc_id AS a, b.doc_id AS b
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |  WHERE len(list_distinct(list_concat(a.sh, b.sh))) > 0
+      |    AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+      |        len(list_distinct(list_concat(a.sh, b.sh))) >= $minJaccard),
+      |edges AS (
+      |  SELECT a, b FROM pairs UNION SELECT b, a FROM pairs
+      |  UNION SELECT a, a FROM pairs UNION SELECT b, b FROM pairs),
+      |reach(s, t) AS (
+      |  SELECT a, b FROM edges
+      |  UNION
+      |  SELECT r.s, e.b FROM reach r JOIN edges e ON r.t = e.a)""".stripMargin
+
+  /** q_dedup_clusters' oracle: the full-corpus closure at Jaccard ≥ 0.5,
+    * (doc_id, cluster). Its incremental sibling is bit-equal to the full
+    * recompute, so it shares this oracle.
+    */
+  private def dedupClustersSql: String =
+    s"""WITH RECURSIVE docs AS (
+      |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS toks
+      |  FROM documents),
+      |${shingleClosureCtes("docs", minJaccard = 0.5)}
+      |SELECT s AS doc_id, min(t) AS cluster FROM reach GROUP BY s""".stripMargin
+
+  /** BM25 (k1 = 1.2, b = 0.75) of every `post` posting (doc_id, term, tf,
+    * dl, df, n_docs, avgdl) against each query's `qterms` (q_id, term),
+    * each term's score decimal-quantized before the exact sum, then the
+    * top 5 per query (score desc, doc_b asc).
+    */
+  private val bm25Top5Sql: String =
+    """scored AS (
+      |  SELECT q.q_id, p.doc_id AS doc_b, count(*) AS n_shared,
+      |    CAST(sum(CAST(
+      |      ln(1 + (p.n_docs - p.df + 0.5) / (p.df + 0.5)) *
+      |      (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / p.avgdl))
+      |      AS DECIMAL(28,12))) AS DOUBLE) AS score
+      |  FROM qterms q JOIN post p USING (term)
+      |  WHERE p.doc_id <> q.q_id
+      |  GROUP BY q.q_id, p.doc_id)
+      |SELECT q_id, doc_b, n_shared, score, rn FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, doc_b ASC) AS rn
+      |  FROM scored)
+      |WHERE rn <= 5""".stripMargin
+
+  /** DuckDB's native ASOF join of each event to its customer's latest
+    * order at or before it (event_id, user_id, asof_orderkey) — the
+    * independent oracle of every backward as-of path.
+    */
+  private val asofLatestOrderSql: String =
+    """WITH o AS (
+      |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS asof_orderkey
+      |  FROM orders GROUP BY 1, 2),
+      |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
+      |SELECT e.event_id, e.user_id, o.asof_orderkey
+      |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn >= o.odn""".stripMargin
+
+  /** [[asofLatestOrderSql]] forward: the earliest order at or after each
+    * event (event_id, user_id, next_orderkey).
+    */
+  private val asofNextOrderSql: String =
+    """WITH o AS (
+      |  SELECT o_custkey, epoch_ns(o_orderdate) AS odn, max(o_orderkey) AS next_orderkey
+      |  FROM orders GROUP BY 1, 2),
+      |e AS (SELECT event_id, user_id, epoch_ns(ts) AS tsn FROM events)
+      |SELECT e.event_id, e.user_id, o.next_orderkey
+      |FROM e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.tsn <= o.odn""".stripMargin
+
+  /** The substring-dedup substrate: every 40-char window `grams` (doc_id,
+    * pos, gram), the windows shared by ≥ 2 docs, and each doc's runs of
+    * shared windows `grp` (doc_id, pos, g) — a new run starts where a
+    * hit lies more than 40 chars past the previous one.
+    */
+  private val sharedGramRunCtes: String =
+    """grams AS (
+      |  SELECT doc_id, i AS pos, substr(text, i, 40) AS gram
+      |  FROM documents,
+      |       unnest(generate_series(1, greatest(length(text) - 39, 0))) AS t(i)),
+      |dup AS (SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
+      |hits AS (SELECT g.doc_id, g.pos FROM grams g JOIN dup USING (gram)),
+      |flagged AS (
+      |  SELECT doc_id, pos,
+      |    CASE WHEN pos > lag(pos) OVER w + 40 THEN 1 ELSE 0 END AS brk
+      |  FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+      |grp AS (
+      |  SELECT doc_id, pos,
+      |    sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
+      |  FROM flagged)""".stripMargin
+
+  /** Each document's distinct word 5-grams `grams` (doc_id, gram) over
+    * its whitespace tokens. Ends with a comma.
+    */
+  private val docWord5GramCtes: String =
+    """toks AS (
+      |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
+      |  FROM documents),
+      |grams AS (
+      |  SELECT DISTINCT doc_id, gram FROM (
+      |    SELECT doc_id, unnest(CASE WHEN len(t) >= 5
+      |      THEN list_transform(range(1, len(t) - 3), i -> array_to_string(t[i:i+4], ' '))
+      |      ELSE [] END) AS gram
+      |    FROM toks)),""".stripMargin
+
+  /** Eight unrolled BPE merge rounds over the words of `docs`, mirroring
+    * Bpe.learnMerges: `w0` (freq, symstr) holds each distinct lower-cased
+    * word in a BRACKETED symbol encoding (chr(30) sym chr(31) per
+    * symbol), and round k adds pair counts `pk` (≥ 2 floor), the
+    * (n DESC, a, b) argmax merge `mk` and the rewritten words `wk`. The
+    * greedy left-to-right merge scan is string replace(): it consumes
+    * matches leftmost-first without overlap — exactly the Bpe.mergePair
+    * fold — and the brackets make a match mid-symbol impossible. An
+    * early-stopped round yields an empty mk and leaves its words as they
+    * were, like the Scala loop break.
+    */
+  private def bpeMergeCtes(docs: String): String = {
+    val so = "chr(30)"
+    val sc = "chr(31)"
+    def round(k: Int): String =
+      s"""p$k AS MATERIALIZED (
+         |  SELECT s[CAST(i AS INT)] AS a, s[CAST(i AS INT) + 1] AS b,
+         |         CAST(sum(freq) AS BIGINT) AS n
+         |  FROM (SELECT freq,
+         |          string_split(substr(symstr, 2, length(symstr) - 2), $sc || $so) AS s
+         |        FROM w${k - 1}),
+         |       unnest(range(1, len(s))) AS t(i)
+         |  GROUP BY a, b HAVING n >= 2),
+         |m$k AS MATERIALIZED (SELECT a, b, n FROM p$k ORDER BY n DESC, a, b LIMIT 1),
+         |w$k AS MATERIALIZED (
+         |  SELECT freq,
+         |    CASE WHEN (SELECT count(*) FROM m$k) = 0 THEN symstr
+         |         ELSE replace(symstr,
+         |           $so || (SELECT a FROM m$k) || $sc || $so || (SELECT b FROM m$k) || $sc,
+         |           $so || (SELECT a FROM m$k) || (SELECT b FROM m$k) || $sc)
+         |    END AS symstr
+         |  FROM w${k - 1})""".stripMargin
+    s"""w0 AS MATERIALIZED (
+       |  SELECT CAST(count(*) AS BIGINT) AS freq,
+       |    list_aggregate(list_transform(range(1, length(w) + 1),
+       |      i -> $so || substr(w, CAST(i AS INT), 1) || $sc), 'string_agg', '') AS symstr
+       |  FROM (SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+       |                x -> x <> '')) AS w
+       |        FROM $docs)
+       |  GROUP BY w),
+       |${(1 to 8).map(round).mkString(",\n")}""".stripMargin
+  }
+
+  /** Concat-and-split packing (Packing.packSequences at ctxLen 256, 16
+    * shards): each doc's token count, md5-rank shard and order `f`, and
+    * its cumulative end in its shard's token stream `c` (doc_id, shard,
+    * n_tokens, tok_end) — +1 EOS per doc.
+    */
+  private val packSequencesCtes: String =
+    """d AS (
+      |  SELECT doc_id,
+      |    len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS n_tokens,
+      |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
+      |  FROM documents),
+      |f AS (SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, rnk, rnk % 16 AS shard
+      |      FROM d WHERE n_tokens > 0),
+      |c AS (
+      |  SELECT doc_id, shard, n_tokens,
+      |    CAST(sum(n_tokens + 1) OVER (PARTITION BY shard ORDER BY rnk, doc_id
+      |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS tok_end
+      |  FROM f)""".stripMargin
+
+  /** Next-fit packing (Packing.packGreedy at ctxLen 256, 16 shards) as a
+    * per-shard recursive CTE, one recursion step per shard row: `r`
+    * (shard, rn, doc_id, n_tokens, bin, fill). Needs WITH RECURSIVE.
+    */
+  private val packGreedyCtes: String =
+    """d AS (
+      |  SELECT doc_id,
+      |    CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS BIGINT) AS n_tokens,
+      |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS rnk
+      |  FROM documents),
+      |f AS (
+      |  SELECT doc_id, n_tokens, rnk % 16 AS shard,
+      |    least(n_tokens, 256) AS n_eff,
+      |    row_number() OVER (PARTITION BY rnk % 16 ORDER BY rnk, doc_id) AS rn
+      |  FROM d WHERE n_tokens > 0),
+      |r AS (
+      |  SELECT shard, rn, doc_id, n_tokens,
+      |    CAST(0 AS BIGINT) AS bin, n_eff AS fill
+      |  FROM f WHERE rn = 1
+      |  UNION ALL
+      |  SELECT f.shard, f.rn, f.doc_id, f.n_tokens,
+      |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.bin ELSE r.bin + 1 END,
+      |    CASE WHEN r.fill + f.n_eff <= 256 THEN r.fill + f.n_eff ELSE f.n_eff END
+      |  FROM r JOIN f ON f.shard = r.shard AND f.rn = r.rn + 1)""".stripMargin
+
+  /** The one-shot SCD2 recompute of each user's purchase tier
+    * floor(value / 25): a new version wherever the tier changes in
+    * (ts, event_id) order, with valid_from/valid_to/version/is_current —
+    * q_scd2's oracle, and q_scd2_incremental's, since fold ≡ rebuild.
+    */
+  private val scd2TierSql: String =
+    """WITH p AS (
+      |  SELECT user_id AS k, CAST(floor(value / 25.0) AS BIGINT) AS attr,
+      |    epoch_us(ts) AS ts, event_id AS tb
+      |  FROM events WHERE event_type = 'purchase'),
+      |lg AS (
+      |  SELECT k, attr, ts, tb,
+      |    lag(attr) OVER w AS prev, lag(1) OVER w AS prev_seen
+      |  FROM p WINDOW w AS (PARTITION BY k ORDER BY ts, tb)),
+      |ch AS (
+      |  SELECT k, attr, ts, tb FROM lg
+      |  WHERE prev_seen IS NULL OR attr IS DISTINCT FROM prev),
+      |iv AS (
+      |  SELECT k, attr, ts AS valid_from,
+      |    lead(ts) OVER w2 AS valid_to,
+      |    CAST(row_number() OVER w2 AS INT) AS version
+      |  FROM ch WINDOW w2 AS (PARTITION BY k ORDER BY ts, tb))
+      |SELECT k AS user_id, attr AS tier, valid_from, valid_to, version,
+      |  valid_to IS NULL AS is_current
+      |FROM iv""".stripMargin
+
+  /** The roster `c` (c_custkey, c_name), its typo'd copy `d` (d_key,
+    * d_name; the typo class by c_custkey % 3) and their candidate pairs
+    * `j` (d_key, d_name, c_custkey, sim): blocked on the last 4
+    * characters and kept at Jaro-Winkler ≥ 0.85. Ends with a comma.
+    */
+  private val typoMatchCtes: String =
+    """c AS (SELECT c_custkey, c_name FROM customer),
+      |d AS (
+      |  SELECT c_custkey AS d_key,
+      |    CASE WHEN c_custkey % 3 = 0 THEN 'C' || substr(c_name, 3, 64)
+      |         WHEN c_custkey % 3 = 1 THEN substr(c_name, 1, 6) || 'm' || substr(c_name, 7, 64)
+      |         ELSE 'Cuts' || substr(c_name, 5, 64) END AS d_name
+      |  FROM c),
+      |j AS (
+      |  SELECT d.d_key, d.d_name, c.c_custkey,
+      |    jaro_winkler_similarity(d.d_name, c.c_name) AS sim
+      |  FROM d JOIN c ON right(d.d_name, 4) = right(c.c_name, 4)
+      |  WHERE jaro_winkler_similarity(d.d_name, c.c_name) >= 0.85),""".stripMargin
+
+  /** The autocorrelation oracles' moments: the daily revenue series
+    * `daily` (day, kilo), its day pairs `lag_d` calendar days apart for
+    * lags 1..`maxLag`, and per lag the exact BIGINT moment sums `m`
+    * (lag_d, n, sx, sy, sxx, syy, sxy).
+    */
+  private def acfMomentCtes(maxLag: Int): String =
+    s"""daily AS (
+      |  SELECT day, CAST(floor(CAST(v AS DOUBLE) / 1000.0) AS BIGINT) AS kilo
+      |  FROM (
+      |    SELECT CAST(floor(epoch_us(o_orderdate) / 86400000000) AS BIGINT) AS day,
+      |      sum(CAST(o_totalprice AS DECIMAL(12,3))) AS v
+      |    FROM orders GROUP BY 1)),
+      |pairs AS (
+      |  SELECT CAST(g.gs AS INT) AS lag_d, a.kilo AS x, b.kilo AS y
+      |  FROM daily a
+      |  CROSS JOIN (SELECT unnest(range(1, ${maxLag + 1})) AS gs) g
+      |  JOIN daily b ON b.day = a.day + g.gs),
+      |m AS (
+      |  SELECT lag_d, count(*) AS n,
+      |    CAST(CAST(sum(x) AS BIGINT) AS DOUBLE) AS sx,
+      |    CAST(CAST(sum(y) AS BIGINT) AS DOUBLE) AS sy,
+      |    CAST(CAST(sum(x * x) AS BIGINT) AS DOUBLE) AS sxx,
+      |    CAST(CAST(sum(y * y) AS BIGINT) AS DOUBLE) AS syy,
+      |    CAST(CAST(sum(x * y) AS BIGINT) AS DOUBLE) AS sxy
+      |  FROM pairs GROUP BY 1)""".stripMargin
+
+  /** Each user's value total per event type `u` (event_type, user_id, v,
+    * pos = odd user_id) and its per-arm moments `mo` (n1/n0, s1/s0,
+    * q1/q0). Ends with a comma.
+    */
+  private val parityMomentCtes: String =
+    """u AS (
+      |  SELECT event_type, user_id, sum(CAST(value AS DECIMAL(12,3))) AS v,
+      |    user_id % 2 = 1 AS pos
+      |  FROM events GROUP BY 1, 2),
+      |mo AS (
+      |  SELECT event_type,
+      |    CAST(sum(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+      |    CAST(sum(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS BIGINT) AS n0,
+      |    sum(CASE WHEN pos THEN v END) AS s1,
+      |    sum(CASE WHEN NOT pos THEN v END) AS s0,
+      |    sum(CASE WHEN pos THEN v * v END) AS q1,
+      |    sum(CASE WHEN NOT pos THEN v * v END) AS q0
+      |  FROM u GROUP BY 1),""".stripMargin
+
+  /** The split score of the stump oracles: both sides' size-weighted
+    * Gini impurity (nl/pl left, nr/pr right) over the n rows.
+    */
+  private val giniScoreSql: String =
+    """((CASE WHEN nl = 0 THEN 0.0 ELSE
+      |        CAST(nl AS DOUBLE) * (1.0
+      |          - (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
+      |            * (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE))
+      |          - (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))
+      |            * (CAST(nl - pl AS DOUBLE) / CAST(nl AS DOUBLE))) END)
+      |     + (CASE WHEN nr = 0 THEN 0.0 ELSE
+      |        CAST(nr AS DOUBLE) * (1.0
+      |          - (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
+      |            * (CAST(pr AS DOUBLE) / CAST(nr AS DOUBLE))
+      |          - (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))
+      |            * (CAST(nr - pr AS DOUBLE) / CAST(nr AS DOUBLE))) END))
+      |      / CAST(n AS DOUBLE)""".stripMargin
+
+  /** The top 5 valued events per event type (value desc, event_id): the
+    * direct window ranking the top-k aggregate states must reproduce.
+    */
+  private val topValuedEventsSql: String =
+    """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
+      |FROM (SELECT event_type, event_id, value,
+      |    row_number() OVER (PARTITION BY event_type
+      |      ORDER BY value DESC, event_id) AS rank
+      |  FROM events WHERE value IS NOT NULL) t
+      |WHERE rank <= 5""".stripMargin
+
+  /** [[topValuedEventsSql]] over the rows [[retractChangelog]] leaves
+    * live — the full recompute every maintained leaderboard must equal
+    * bit-for-bit.
+    */
+  private val liveLeaderboardSql: String =
+    """SELECT event_type, CAST(rank AS INTEGER) AS rank, event_id, value
+      |FROM (SELECT event_type, event_id, value,
+      |    row_number() OVER (PARTITION BY event_type
+      |      ORDER BY value DESC, event_id) AS rank
+      |  FROM events
+      |  WHERE value IS NOT NULL
+      |    AND date_part('day', ts) > 10 AND event_type <> 'error') t
+      |WHERE rank <= 5""".stripMargin
+
+  /** Every word bigram occurrence `bi` (doc_id, bg as "w1 w2") over each
+    * document's whitespace tokens. Ends with a comma.
+    */
+  private val docBigramCtes: String =
+    """toks AS (
+      |  SELECT doc_id, list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS t
+      |  FROM documents),
+      |bi AS (
+      |  SELECT doc_id, unnest(CASE WHEN len(t) >= 2
+      |    THEN list_transform(range(1, len(t)), i -> array_to_string(t[i:i+1], ' '))
+      |    ELSE [] END) AS bg
+      |  FROM toks),""".stripMargin
+
   private val lineDedupCtes: String =
     """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
       |syn AS (SELECT doc_id,
@@ -13848,6 +13399,22 @@ object SparkEntry {
       |""".stripMargin + rounds
   }
 
+  /** The orders' (o_custkey, day since 1992-01-01) points `d` and the
+    * Morton bit-spread cascade of their low 16 bits, b through s4 — the
+    * same magic-mask ladder as Layout.zValue2, in pure BIGINT bit ops;
+    * s4 carries the spread x4/y4. Ends with a comma.
+    */
+  private val mortonSpreadCtes: String =
+    """d AS (
+      |  SELECT o_custkey,
+      |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day
+      |  FROM orders),
+      |b AS (SELECT *, o_custkey & 65535 AS xb, day & 65535 AS yb FROM d),
+      |s1 AS (SELECT *, ((xb | (xb << 8)) & 16711935) AS x1, ((yb | (yb << 8)) & 16711935) AS y1 FROM b),
+      |s2 AS (SELECT *, ((x1 | (x1 << 4)) & 252645135) AS x2, ((y1 | (y1 << 4)) & 252645135) AS y2 FROM s1),
+      |s3 AS (SELECT *, ((x2 | (x2 << 2)) & 858993459) AS x3, ((y2 | (y2 << 2)) & 858993459) AS y3 FROM s2),
+      |s4 AS (SELECT *, ((x3 | (x3 << 1)) & 1431655765) AS x4, ((y3 | (y3 << 1)) & 1431655765) AS y4 FROM s3),""".stripMargin
+
   /** q_zonemap_prune oracle: one rows CTE feeds all three layouts'
     * zone aggregations (z-spread cascade for Morton, custkey/128 for
     * linear, the shared [[hilbertWalkCtes]] for the curve), then the two
@@ -13863,15 +13430,7 @@ object SparkEntry {
          |    min(o_custkey) AS min_ck, max(o_custkey) AS max_ck,
          |    min(day) AS min_day, max(day) AS max_day
          |  FROM $src GROUP BY 2""".stripMargin
-    s"""WITH d AS (
-       |  SELECT o_custkey,
-       |    CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day
-       |  FROM orders),
-       |b AS (SELECT *, o_custkey & 65535 AS xb, day & 65535 AS yb FROM d),
-       |s1 AS (SELECT *, ((xb | (xb << 8)) & 16711935) AS x1, ((yb | (yb << 8)) & 16711935) AS y1 FROM b),
-       |s2 AS (SELECT *, ((x1 | (x1 << 4)) & 252645135) AS x2, ((y1 | (y1 << 4)) & 252645135) AS y2 FROM s1),
-       |s3 AS (SELECT *, ((x2 | (x2 << 2)) & 858993459) AS x3, ((y2 | (y2 << 2)) & 858993459) AS y3 FROM s2),
-       |s4 AS (SELECT *, ((x3 | (x3 << 1)) & 1431655765) AS x4, ((y3 | (y3 << 1)) & 1431655765) AS y4 FROM s3),
+    s"""WITH $mortonSpreadCtes
        |r AS (SELECT o_custkey, day, ((x4 | (y4 << 1)) >> 18) AS zcell,
        |             CAST(floor(o_custkey / 128) AS BIGINT) AS lcell FROM s4),
        |""".stripMargin + hilbertWalkCtes + s""",

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextAnalysis
@@ -131,17 +132,13 @@ object DocsStream {
       idCol: String = "doc_id",
       textCol: String = "text",
       shingleLen: Int = 2,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.similarity.SparseSim.bm25DocLengths(batch, idCol, textCol, shingleLen)
-          .write.mode("append").parquet(lengthsPath)
-        graft.similarity.SparseSim.bm25RawPostings(batch, idCol, textCol, shingleLen)
-          .write.mode("append").parquet(postingsPath)
-      }
-      .start()
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, _) =>
+      graft.similarity.SparseSim.bm25DocLengths(batch, idCol, textCol, shingleLen)
+        .write.mode("append").parquet(lengthsPath)
+      graft.similarity.SparseSim.bm25RawPostings(batch, idCol, textCol, shingleLen)
+        .write.mode("append").parquet(postingsPath)
+    }
 
   /** Same maintenance discipline for the substring-dedup anchor index:
     * [[graft.text.SubstringDedup.buildAnchorIndex]] rows are already
@@ -157,15 +154,11 @@ object DocsStream {
       textCol: String = "text",
       gramLen: Int = 24,
       window: Int = 16,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.text.SubstringDedup.buildAnchorIndex(batch, idCol, textCol, gramLen, window)
-          .write.mode("append").parquet(indexPath)
-      }
-      .start()
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, _) =>
+      graft.text.SubstringDedup.buildAnchorIndex(batch, idCol, textCol, gramLen, window)
+        .write.mode("append").parquet(indexPath)
+    }
 
   /** Streaming CROSS-DOC SUBSTRING dedup gate against the standing
     * anchor index: each micro-batch detects winnow-anchored shared spans
@@ -215,47 +208,43 @@ object DocsStream {
       window: Int = 16,
       minSpan: Int = 60,
       maxSharedFrac: Double = 0.5,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.text.SubstringDedup
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val versions = stateVersionsBelow(spark, indexPath, batchId)
-        // Union of versions strictly below this batch's id = the corpus
-        // state this batch saw the first time it ran (append-only index);
-        // explicit leaf paths keep the partition column out of the schema.
-        val idx =
-          if (versions.isEmpty)
-            // unseeded cold start: an empty index with the right schema
-            SubstringDedup.buildAnchorIndex(
-              batch.limit(0), idCol, textCol, gramLen, window)
-          else spark.read.parquet(versions.map(v => s"$indexPath/batch=$v"): _*)
-        val spans = SubstringDedup.incrementalSharedSpans(
-          batch, idCol, textCol, idx, gramLen, window, minSpan,
-          includeBatchInternal = false)
-        val cover = spans.groupBy("doc_id")
-          .agg(sum(col("span_len")).as("shared_chars"), count(lit(1)).as("n_spans"))
-        val res = batch
-          .select(col(idCol).as("doc_id"), length(col(textCol)).cast("long").as("n_chars"))
-          .join(cover, Seq("doc_id"), "left")
-          .select(
-            col("doc_id"),
-            coalesce(col("shared_chars"), lit(0L)).as("shared_chars"),
-            coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-            col("n_chars"),
-            (coalesce(col("shared_chars"), lit(0L)).cast("double") <=
-              lit(maxSharedFrac) * col("n_chars").cast("double")).as("keep"))
-          .localCheckpoint() // two consumers: results write + survivor join
-        res.write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
-        val survivors = batch.join(
-          res.filter(col("keep")).select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_semi")
-        SubstringDedup.buildAnchorIndex(survivors, idCol, textCol, gramLen, window)
-          .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val versions = stateVersionsBelow(spark, indexPath, batchId)
+      // Union of versions strictly below this batch's id = the corpus
+      // state this batch saw the first time it ran (append-only index);
+      // explicit leaf paths keep the partition column out of the schema.
+      val idx =
+        if (versions.isEmpty)
+          // unseeded cold start: an empty index with the right schema
+          SubstringDedup.buildAnchorIndex(
+            batch.limit(0), idCol, textCol, gramLen, window)
+        else spark.read.parquet(versions.map(v => s"$indexPath/batch=$v"): _*)
+      val spans = SubstringDedup.incrementalSharedSpans(
+        batch, idCol, textCol, idx, gramLen, window, minSpan,
+        includeBatchInternal = false)
+      val cover = spans.groupBy("doc_id")
+        .agg(sum(col("span_len")).as("shared_chars"), count(lit(1)).as("n_spans"))
+      val res = batch
+        .select(col(idCol).as("doc_id"), length(col(textCol)).cast("long").as("n_chars"))
+        .join(cover, Seq("doc_id"), "left")
+        .select(
+          col("doc_id"),
+          coalesce(col("shared_chars"), lit(0L)).as("shared_chars"),
+          coalesce(col("n_spans"), lit(0L)).as("n_spans"),
+          col("n_chars"),
+          (coalesce(col("shared_chars"), lit(0L)).cast("double") <=
+            lit(maxSharedFrac) * col("n_chars").cast("double")).as("keep"))
+        .localCheckpoint() // two consumers: results write + survivor join
+      res.write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
+      val survivors = batch.join(
+        res.filter(col("keep")).select(col("doc_id").as(idCol)),
+        Seq(idCol), "left_semi")
+      SubstringDedup.buildAnchorIndex(survivors, idCol, textCol, gramLen, window)
+        .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+    }
   }
 
   /** Streaming SEMANTIC dedup against a standing
@@ -281,9 +270,9 @@ object DocsStream {
       vecCol: String = "embedding",
       tau: java.math.BigDecimal = new java.math.BigDecimal("0.35"),
       maxCell: Int = 4096,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.similarity.SemDeDup
-    docsStreamForeach(vecs, checkpointPath) { batch =>
+    docsStreamForeach(vecs, checkpointPath) { (batch, _) =>
       val spark = batch.sparkSession
       val idx = SemDeDup.SemIndex(centroids, spark.read.parquet(keptPath))
       val res = SemDeDup.dedupIncrement(batch, idCol, vecCol, idx, tau, maxCell)
@@ -316,8 +305,8 @@ object DocsStream {
       checkpointPath: String,
       idCol: String = "doc_id",
       textCol: String = "text",
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStreamForeach(docs, checkpointPath) { batch =>
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, _) =>
       val accepted = graft.text.QualityModel.score(batch, idCol, textCol, model)
         .filter(col("pred")).select(idCol)
       batch.join(accepted, Seq(idCol), "left_semi")
@@ -351,17 +340,12 @@ object DocsStream {
       valueCol: String,
       cuts: Seq[Double],
       refCounts: Seq[Long],
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.core.Stats.psiAgainstRef(batch, col(valueCol), cuts, refCounts)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      graft.core.Stats.psiAgainstRef(batch, col(valueCol), cuts, refCounts)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outPath)
+    }
 
   def bm25ServeStream(
       queries: DataFrame,
@@ -372,8 +356,8 @@ object DocsStream {
       textCol: String = "text",
       shingleLen: Int = 2,
       k: Int = 5,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStreamForeach(queries, checkpointPath) { batch =>
+  ): StreamingQuery =
+    docsStreamForeach(queries, checkpointPath) { (batch, _) =>
       graft.similarity.SparseSim
         .bm25Retrieve(batch, idCol, textCol, index, shingleLen, k)
         .write.mode("append").parquet(outPath)
@@ -407,7 +391,7 @@ object DocsStream {
       textCol: String = "text",
       ctxLen: Int = 256,
       shards: Int = 16,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.text.Packing
     // REPLAY SAFETY: foreachBatch gives at-least-once delivery, so both
     // writes must be idempotent under batch re-execution. State is
@@ -421,23 +405,19 @@ object DocsStream {
     // two writes leaves only a stale/fresh version pair, never a
     // half-written standing layout (the in-place overwrite this replaces
     // could be caught mid-delete). Versions are <= shards rows each.
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val state =
-          if (versions.isEmpty) Packing.emptyPackState(spark)
-          else spark.read.parquet(s"$statePath/batch=${versions.max}")
-        val placed = Packing
-          .packGreedyAppend(batch, idCol, textCol, ctxLen, shards, state)
-          .localCheckpoint() // placements write + state roll share one pack
-        placed.write.mode("overwrite").parquet(s"$placementsPath/batch=$batchId")
-        Packing.packState(state, placed, ctxLen)
-          .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val state =
+        if (versions.isEmpty) Packing.emptyPackState(spark)
+        else spark.read.parquet(s"$statePath/batch=${versions.max}")
+      val placed = Packing
+        .packGreedyAppend(batch, idCol, textCol, ctxLen, shards, state)
+        .localCheckpoint() // placements write + state roll share one pack
+      placed.write.mode("overwrite").parquet(s"$placementsPath/batch=$batchId")
+      Packing.packState(state, placed, ctxLen)
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** Standing-state version ids strictly below `batchId` at
@@ -504,26 +484,22 @@ object DocsStream {
       groupCol: String = "source",
       valueCol: String = "n_tokens",
       k: Int = 256,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.functions.GraftFunctions
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch
-          .groupBy(col(groupCol))
-          .agg(GraftFunctions.quantileSketch(col(valueCol), k).as("sk"))
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val merged =
-          if (versions.isEmpty) fresh
-          else fresh.unionByName(
-            loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
-            .groupBy(groupCol)
-            .agg(GraftFunctions.quantileSketchMerge(col("sk")).as("sk"))
-        merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = batch
+        .groupBy(col(groupCol))
+        .agg(GraftFunctions.quantileSketch(col(valueCol), k).as("sk"))
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val merged =
+        if (versions.isEmpty) fresh
+        else fresh.unionByName(
+          loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
+          .groupBy(groupCol)
+          .agg(GraftFunctions.quantileSketchMerge(col("sk")).as("sk"))
+      merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** STANDING FREQUENT-TERMS MAINTENANCE: the Misra–Gries twin of
@@ -543,26 +519,22 @@ object DocsStream {
       groupCol: String = "source",
       termCol: String = "term",
       k: Int = 256,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.functions.GraftFunctions
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch
-          .groupBy(col(groupCol))
-          .agg(GraftFunctions.mgTopK(col(termCol), k).as("sk"))
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val merged =
-          if (versions.isEmpty) fresh
-          else fresh.unionByName(
-            loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
-            .groupBy(groupCol)
-            .agg(GraftFunctions.mgMerge(col("sk")).as("sk"))
-        merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = batch
+        .groupBy(col(groupCol))
+        .agg(GraftFunctions.mgTopK(col(termCol), k).as("sk"))
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val merged =
+        if (versions.isEmpty) fresh
+        else fresh.unionByName(
+          loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
+          .groupBy(groupCol)
+          .agg(GraftFunctions.mgMerge(col("sk")).as("sk"))
+      merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** STANDING EXACT-AGGREGATE MAINTENANCE: the IVM member of the
@@ -587,23 +559,19 @@ object DocsStream {
       checkpointPath: String,
       keys: Seq[String],
       valueCol: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.core.Ivm
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = Ivm.aggState(batch, keys, valueCol)
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val merged =
-          if (versions.isEmpty) fresh
-          else Ivm.mergeAggStates(
-            spark.read.parquet(s"$statePath/batch=${versions.max}"),
-            fresh, keys)
-        merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = Ivm.aggState(batch, keys, valueCol)
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val merged =
+        if (versions.isEmpty) fresh
+        else Ivm.mergeAggStates(
+          spark.read.parquet(s"$statePath/batch=${versions.max}"),
+          fresh, keys)
+      merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** STANDING CHANGELOG (CDC) MAINTENANCE: the retraction-capable member
@@ -630,23 +598,19 @@ object DocsStream {
       keys: Seq[String],
       valueCol: String,
       opCol: String = "op",
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.core.Ivm
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = Ivm.signedAggState(batch, keys, valueCol, opCol)
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val merged =
-          if (versions.isEmpty) fresh
-          else Ivm.mergeSignedStates(
-            spark.read.parquet(s"$statePath/batch=${versions.max}"),
-            fresh, keys)
-        merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = Ivm.signedAggState(batch, keys, valueCol, opCol)
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val merged =
+        if (versions.isEmpty) fresh
+        else Ivm.mergeSignedStates(
+          spark.read.parquet(s"$statePath/batch=${versions.max}"),
+          fresh, keys)
+      merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** STANDING LEADERBOARD MAINTENANCE: the exact-top-k member of the
@@ -679,26 +643,22 @@ object DocsStream {
       valueCol: String,
       idCol: String,
       k: Int = 10,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
+  ): StreamingQuery = {
     import graft.functions.GraftFunctions
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fresh = batch
-          .groupBy(col(groupCol))
-          .agg(GraftFunctions.topK(col(valueCol), col(idCol), k).as("sk"))
-        val versions = stateVersionsBelow(spark, statePath, batchId)
-        val merged =
-          if (versions.isEmpty) fresh
-          else fresh.unionByName(
-            loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
-            .groupBy(groupCol)
-            .agg(GraftFunctions.topKMerge(col("sk")).as("sk"))
-        merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-      }
-      .start()
+    docsStreamForeach(docs, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val fresh = batch
+        .groupBy(col(groupCol))
+        .agg(GraftFunctions.topK(col(valueCol), col(idCol), k).as("sk"))
+      val versions = stateVersionsBelow(spark, statePath, batchId)
+      val merged =
+        if (versions.isEmpty) fresh
+        else fresh.unionByName(
+          loadKeyedState(spark, s"$statePath/batch=${versions.max}", groupCol))
+          .groupBy(groupCol)
+          .agg(GraftFunctions.topKMerge(col("sk")).as("sk"))
+      merged.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
   }
 
   /** STANDING AS-OF ENRICHMENT: the streaming member of the as-of
@@ -751,24 +711,30 @@ object DocsStream {
       payload: Seq[String],
       forward: Boolean = false,
       toleranceNs: Option[Long] = None,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dim = batch.sparkSession.read.parquet(dimPath)
-        graft.core.AsOf.asOfJoinExec(batch, dim, leftKey, leftTime,
-            rightKey, rightTime, payload, forward, toleranceNs)
-          .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
-      }
-      .start()
+  ): StreamingQuery =
+    docsStreamForeach(events, checkpointPath) { (batch, batchId) =>
+      val dim = batch.sparkSession.read.parquet(dimPath)
+      graft.core.AsOf.asOfJoinExec(batch, dim, leftKey, leftTime,
+          rightKey, rightTime, payload, forward, toleranceNs)
+        .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
+    }
 
-  private def docsStreamForeach(df: DataFrame, checkpointPath: String)(
-      f: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+  /** Start `df` as an append-mode stream checkpointed at
+    * `checkpointPath` that runs `f(batch, batchId)` on every micro-batch,
+    * fired by `trigger` (default: Spark's own default, ProcessingTime(0)
+    * — the next batch as soon as the previous one ends). Every
+    * foreachBatch sink in this package starts through here.
+    */
+  private[streaming] def docsStreamForeach(
+      df: DataFrame,
+      checkpointPath: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L))(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) => f(batch) }
+      .trigger(trigger)
+      .foreachBatch(f)
       .start()
 
   /** Streaming fuzzy-exact dedup: drop any document whose normalized
@@ -821,8 +787,8 @@ object DocsStream {
       idCol: String = "doc_id",
       textCol: String = "text",
       shingleLen: Int = 3,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStreamForeach(docs, checkpointPath) { batch =>
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, _) =>
       val hits = graft.similarity.SetSimJoin
         .selfJoinIncrement(
           batch, col(idCol), TextAnalysis.wordShingles(col(textCol), shingleLen), index, t)
@@ -850,8 +816,8 @@ object DocsStream {
       idCol: String = "doc_id",
       textCol: String = "text",
       shingleLen: Int = 3,
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    docsStreamForeach(docs, checkpointPath) { batch =>
+  ): StreamingQuery =
+    docsStreamForeach(docs, checkpointPath) { (batch, _) =>
       val hits = graft.similarity.SetSimJoin
         .containmentIncrement(
           batch, col(idCol), TextAnalysis.wordShingles(col(textCol), shingleLen), index, t)

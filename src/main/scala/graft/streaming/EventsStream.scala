@@ -277,13 +277,23 @@ object EventsStream {
     * [[graft.core.Scd.scd2Increment]] — the mutable-store member of the
     * streaming maintenance family (bm25IndexAppender appends immutable
     * rows; an SCD2 fold must CLOSE affected live rows, so each batch
-    * rewrites the table through a tmp-path swap, the parquet analogue
-    * of a MERGE-capable table format's row-level upsert, which is what
-    * this becomes at 100 TB).
+    * writes a whole new table version, the parquet analogue of a
+    * MERGE-capable table format's row-level upsert, which is what this
+    * becomes at 100 TB).
     *
-    * First batch bootstraps the table with a plain [[graft.core.Scd.scd2]]
-    * build. Micro-batch boundaries are invisible under the append-only
-    * CDC contract (StreamingSpec pins stream-folded ≡ one-shot build).
+    * REPLAY SAFETY: the table rides the versioned layout of the other
+    * stateful appenders. It is REPLACE-state: a batch folds into the
+    * newest version strictly below its own id (a plain
+    * [[graft.core.Scd.scd2]] build when there is none) and overwrites
+    * its own `tablePath/batch=<id>`. A re-executed batch therefore
+    * refolds into exactly the table it saw the first time — never into
+    * one that already holds it, which would break scd2Increment's
+    * append-only precondition — and a failed write leaves the previous
+    * version in place. [[scd2Table]] reads the current table; to
+    * continue a table built elsewhere, write it as `tablePath/batch=-1`.
+    * Micro-batch boundaries are invisible under the append-only CDC
+    * contract (StreamingSpec pins stream-folded ≡ one-shot build, also
+    * across a replay).
     */
   def scd2Appender(
       events: DataFrame,
@@ -294,24 +304,22 @@ object EventsStream {
       ts: Column,
       tiebreak: Column,
   ): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        val cur = new org.apache.hadoop.fs.Path(tablePath)
-        val folded =
-          if (fs.exists(cur))
-            graft.core.Scd.scd2Increment(spark.read.parquet(tablePath), batch, key, attr, ts, tiebreak)
-          else graft.core.Scd.scd2(batch, key, attr, ts, tiebreak)
-        val tmp = new org.apache.hadoop.fs.Path(tablePath + ".next")
-        folded.write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(cur, true)
-        fs.rename(tmp, cur)
-        ()
-      }
-      .start()
+    DocsStream.docsStreamForeach(events, checkpointPath) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val versions = DocsStream.stateVersionsBelow(spark, tablePath, batchId)
+      val folded =
+        if (versions.isEmpty) graft.core.Scd.scd2(batch, key, attr, ts, tiebreak)
+        else graft.core.Scd.scd2Increment(
+          spark.read.parquet(s"$tablePath/batch=${versions.max}"), batch, key, attr, ts, tiebreak)
+      folded.write.mode("overwrite").parquet(s"$tablePath/batch=$batchId")
+    }
+
+  /** The current dimension table of [[scd2Appender]]: its newest version. */
+  def scd2Table(spark: SparkSession, tablePath: String): DataFrame = {
+    val versions = DocsStream.stateVersionsBelow(spark, tablePath, Long.MaxValue)
+    require(versions.nonEmpty, s"no SCD2 table version under $tablePath")
+    spark.read.parquet(s"$tablePath/batch=${versions.max}")
+  }
 
   /** Streaming record-linkage serving: each micro-batch of dirty
     * records fuzzy-matches against a STATIC clean roster through
@@ -334,16 +342,11 @@ object EventsStream {
       blockLen: Int = 4,
       minSim: Double = 0.85,
   ): StreamingQuery =
-    probes.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.core.Linkage
-          .bestMatch(batch, probeId, probeName, roster, rosterId, rosterName, blockLen, minSim)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .start()
+    DocsStream.docsStreamForeach(probes, checkpointPath) { (batch, _) =>
+      graft.core.Linkage
+        .bestMatch(batch, probeId, probeName, roster, rosterId, rosterName, blockLen, minSim)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** STANDING FREQUENT-SEQUENCE MINING: fold each micro-batch into
     * [[graft.core.SeqMine]]'s session-pattern supports without ever
@@ -389,40 +392,35 @@ object EventsStream {
       typeCol: String = "event_type",
       tieCol: String = "event_id",
   ): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        val batch = batch0.select(
-          col(userCol).as("u"),
-          unix_micros(col(tsCol).cast("timestamp")).as("t"),
-          col(typeCol).as("a"), col(tieCol).as("tb"))
-        val versions = DocsStream.stateVersionsBelow(spark, statePath, batchId)
-        val buffered =
-          if (versions.isEmpty) batch.limit(0)
-          else spark.read.parquet(s"$statePath/batch=${versions.max}")
-        val all = buffered.unionByName(batch)
-        val sess = graft.core.SeqMine.sessionize(all, gapUs)
-          .localCheckpoint() // three consumers: closure split (semi + anti) + horizon
-        // In-plan closure horizon (1-row broadcast, no collected scalar).
-        val horizon = sess.agg((max(col("t")) - lit(2L * gapUs)).as("h"))
-        val closedKeys = sess.groupBy(col("u"), col("sid"))
-          .agg(max(col("t")).as("lastT"))
-          .crossJoin(broadcast(horizon))
-          .filter(col("lastT") < col("h"))
-          .select(col("u"), col("sid"))
-        val closed = sess.join(closedKeys, Seq("u", "sid"), "left_semi")
-        val open = sess.join(closedKeys, Seq("u", "sid"), "left_anti")
-        graft.core.SeqMine.sessionPatterns(closed)
-          .groupBy(col("pattern"), col("k"))
-          .agg(count(lit(1)).as("support"))
-          .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
-        open.select(col("u"), col("t"), col("a"), col("tb"))
-          .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-        ()
-      }
-      .start()
+    DocsStream.docsStreamForeach(events, checkpointPath) { (batch0, batchId) =>
+      val spark = batch0.sparkSession
+      val batch = batch0.select(
+        col(userCol).as("u"),
+        unix_micros(col(tsCol).cast("timestamp")).as("t"),
+        col(typeCol).as("a"), col(tieCol).as("tb"))
+      val versions = DocsStream.stateVersionsBelow(spark, statePath, batchId)
+      val buffered =
+        if (versions.isEmpty) batch.limit(0)
+        else spark.read.parquet(s"$statePath/batch=${versions.max}")
+      val all = buffered.unionByName(batch)
+      val sess = graft.core.SeqMine.sessionize(all, gapUs)
+        .localCheckpoint() // three consumers: closure split (semi + anti) + horizon
+      // In-plan closure horizon (1-row broadcast, no collected scalar).
+      val horizon = sess.agg((max(col("t")) - lit(2L * gapUs)).as("h"))
+      val closedKeys = sess.groupBy(col("u"), col("sid"))
+        .agg(max(col("t")).as("lastT"))
+        .crossJoin(broadcast(horizon))
+        .filter(col("lastT") < col("h"))
+        .select(col("u"), col("sid"))
+      val closed = sess.join(closedKeys, Seq("u", "sid"), "left_semi")
+      val open = sess.join(closedKeys, Seq("u", "sid"), "left_anti")
+      graft.core.SeqMine.sessionPatterns(closed)
+        .groupBy(col("pattern"), col("k"))
+        .agg(count(lit(1)).as("support"))
+        .write.mode("overwrite").parquet(s"$resultsPath/batch=$batchId")
+      open.select(col("u"), col("t"), col("a"), col("tb"))
+        .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+    }
 
   /** Reader for [[seqMiningAppender]]'s delta versions: total supports
     * with the batch threshold applied at read time.

@@ -31,22 +31,17 @@ object EvidenceSink {
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
       contract: Option[Qc.EvidenceContract] = None,
   ): StreamingQuery =
-    evidence.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // Validation is its own action; persist so the micro-batch source
-        // is processed once per trigger, not once per action.
-        val pinned = if (contract.isDefined) batch.persist() else batch
-        try {
-          qc(pinned)
-          contract.foreach(c => Qc.validateEvidence(pinned, c))
-          pinned.write
-            .mode("append")
-            .option("compression", "gzip")
-            .json(outDir)
-        } finally if (contract.isDefined) pinned.unpersist()
-      }
-      .start()
+    DocsStream.docsStreamForeach(evidence, checkpointDir, trigger) { (batch, _) =>
+      // Validation is its own action; persist so the micro-batch source
+      // is processed once per trigger, not once per action.
+      val pinned = if (contract.isDefined) batch.persist() else batch
+      try {
+        qc(pinned)
+        contract.foreach(c => Qc.validateEvidence(pinned, c))
+        pinned.write
+          .mode("append")
+          .option("compression", "gzip")
+          .json(outDir)
+      } finally if (contract.isDefined) pinned.unpersist()
+    }
 }

@@ -46,6 +46,22 @@ class QueriesSpec extends SparkTestBase {
     assert(sides.keySet == Set("both", "order_only", "lines_only"), s"got $sides")
   }
 
+  test("forced-distributed bench probes match the default driver tier at sf0.001") {
+    // Bench times these probes; bound 0 forces the distributed loops,
+    // which must give what the driver tier gives on the same input.
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val pagerank = rows(SparkEntry.queries("q_pagerank")(spark, sf))
+    assert(pagerank.nonEmpty)
+    assert(rows(SparkEntry.benchProbes("b_pagerank_dist")(spark, sf)) == pagerank,
+      "b_pagerank_dist must return exactly q_pagerank's rows")
+    val kmeans = rows(graft.similarity.KMeans.lloyd(
+      graft.core.Readers.table(spark, sf, "embeddings"), "vec_id", "embedding",
+      k = 8, dim = 64, iters = 2))
+    assert(kmeans.nonEmpty)
+    assert(rows(SparkEntry.benchProbes("b_kmeans_dist")(spark, sf)) == kmeans,
+      "b_kmeans_dist must equal the driver-bounded KMeans.lloyd fit")
+  }
+
   test("all queries execute and return rows at sf0.001 (except known-empty)") {
     // r10: no allowlist — every registered query must be non-vacuous,
     // including the former zero-row trio (q_join_anti, q_bonferroni,

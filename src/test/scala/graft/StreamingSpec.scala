@@ -1199,10 +1199,19 @@ class StreamingSpec extends SparkTestBase {
 
   test("scd2Appender: stream-folded dimension == one-shot batch build") {
     import graft.core.Scd
-    val purchases = spark.read.parquet(s"$sf/events.parquet")
+    val real = spark.read.parquet(s"$sf/events.parquet")
       .filter($"event_type" === "purchase")
       .select($"user_id", $"event_id", $"ts", $"value")
-      .localCheckpoint()
+    // One synthetic key whose tier changes INSIDE the last batch (tier 0,
+    // then tier 4 a second later): a replay that refolds the batch into
+    // a table already holding it closes the tier-4 row before it opens.
+    val last = real.orderBy($"ts".desc, $"event_id".desc).limit(1)
+    val flip = last.select(lit(-1L).as("user_id"), lit(-2L).as("event_id"), $"ts",
+        lit(10.0).as("value"))
+      .unionByName(last.select(lit(-1L).as("user_id"), lit(-1L).as("event_id"),
+        ($"ts" + expr("INTERVAL 1 SECOND")).as("ts"), lit(100.0).as("value")))
+      .select(real.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+    val purchases = real.unionByName(flip).localCheckpoint()
     val evSchema = purchases.schema
     val dir = tmpDir("scd2_in")
     val table = tmpDir("scd2_table") + "/dim"
@@ -1210,24 +1219,39 @@ class StreamingSpec extends SparkTestBase {
     // Three TIME-SLICED files written in order — micro-batches must
     // respect the append-only CDC contract per key, so slices are by ts.
     val day = dayofmonth($"ts")
-    purchases.filter(day <= 10).coalesce(1).write.mode("overwrite").parquet(dir)
-    purchases.filter(day > 10 && day <= 20).coalesce(1).write.mode("append").parquet(dir)
-    purchases.filter(day > 20).coalesce(1).write.mode("append").parquet(dir)
+    val isFlip = $"user_id" === -1L
+    purchases.filter(day <= 10 && !isFlip).coalesce(1).write.mode("overwrite").parquet(dir)
+    purchases.filter(day > 10 && day <= 20 && !isFlip).coalesce(1).write.mode("append").parquet(dir)
+    purchases.filter(day > 20 || isFlip).coalesce(1).write.mode("append").parquet(dir)
 
-    val stream = spark.readStream.schema(evSchema)
+    def stream() = spark.readStream.schema(evSchema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val attr = floor($"value" / 25.0).cast("long")
     val tsUs = unix_micros($"ts".cast("timestamp"))
-    val q = EventsStream.scd2Appender(stream, table, ckpt,
-      key = $"user_id", attr = attr, ts = tsUs, tiebreak = $"event_id")
-    try q.processAllAvailable() finally q.stop()
+    def run(): Unit = {
+      val q = EventsStream.scd2Appender(stream(), table, ckpt,
+        key = $"user_id", attr = attr, ts = tsUs, tiebreak = $"event_id")
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Option[Long], Int, Boolean)].collect().toSet
-    val folded = rows(spark.read.parquet(table))
+    val folded = rows(EventsStream.scd2Table(spark, table))
     val oneShot = rows(Scd.scd2(purchases, $"user_id", attr, tsUs, $"event_id"))
+    assert(oneShot.count(_._1 == -1L) == 2, "the synthetic key must carry two versions")
     assert(folded.nonEmpty && folded == oneShot,
       "stream-folded SCD2 table must equal the one-shot batch build")
+
+    // REAL replay: truncate the commit log for the last batch and restart
+    // — the batch re-executes, and the table must come out unchanged.
+    assert(new java.io.File(s"$ckpt/commits/2").delete(),
+      "test harness: expected commit file for batch 2")
+    new java.io.File(s"$ckpt/commits/.2.crc").delete() // ChecksumFs sidecar
+    while (spark.streams.active.nonEmpty) Thread.sleep(50)
+    run()
+    val replayed = rows(EventsStream.scd2Table(spark, table))
+    assert(replayed == oneShot, "a replayed batch must refold into the table it first saw")
   }
 
   test("linkageServe: streamed fuzzy matches == one batch bestMatch call") {
