@@ -17,9 +17,9 @@ import graft.functions._
   *   builder.withExtensions(new GraftExtensions()) ...  // what GraftSession does
   * }}}
   *
-  * Injection happens at session build, before any query parses — unlike
-  * [[graft.functions.GraftFunctions.registerAll]], which registers the
-  * same builders into an already-running session's function registry.
+  * Injection happens at session build, before any query parses; every
+  * session [[graft.GraftSession]] builds carries it, and a session built
+  * elsewhere gets it with `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -33,14 +33,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** Top-K per key (generalized W1; also the ANN top-k primitive). */
-  def topKPerKey(df: DataFrame, keys: Seq[String], order: Seq[Column], k: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-  }
-
   /** Aggregation-based "keep best per key": shuffles pre-combined partial
     * aggregates instead of whole rows. `orderCol` max wins; ties broken by
     * packing the tiebreaker into the struct ordering.

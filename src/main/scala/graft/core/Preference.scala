@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftShim, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Preference learning from pairwise comparisons and implicit feedback —
   * the model fits an RLHF-style data pipeline runs over judgment logs:
@@ -15,7 +18,8 @@ import org.apache.spark.sql.functions._
   * → per-(entity, item) counts). Everything after runs on the MODEL
   * tier — tables bounded by the item vocabulary (T items → T² pair
   * rows) or by entity cardinality, iterated a FIXED small number of
-  * rounds as plain joins. No collects, no windows, no UDFs.
+  * rounds as plain joins (Bradley-Terry's on the driver when its model
+  * fits the driver tier). No windows, no UDFs.
   *
   * Determinism doctrine: every float division term is quantized to
   * DECIMAL(28,12) before its order-free sum; rescaling divides by a
@@ -33,12 +37,42 @@ object Preference {
     * — it converges to strength 0 but stays in every denominator).
     *
     * Returns (item, wins, strength) after `iters` rounds.
+    *
+    * The MM rounds are tiered by [[graft.graph.DriverTier]]: the model
+    * tables are bounded by the item vocabulary BY CONSTRUCTION (≤ T² pair
+    * rows — the same tier the distributed loop already broadcasts every
+    * round), so iterating the rounds as T²-row joins pays ~2 s of
+    * per-round planning and scheduling at bench scale for work a driver
+    * loop does in microseconds. A pair table within the driver budget is
+    * collected once and the identical arithmetic replayed: term =
+    * BigDecimal(nij/(si+sj)) HALF_UP to scale 12 (Spark's
+    * double→decimal(28,12) cast), exact order-free sum, the same double
+    * divisions, the same fixed anchor item — bit-identical (StatsSpec and
+    * PropertySpec pin driver == distributed). A larger model runs the
+    * distributed rounds; the corpus-scale comp aggregation is distributed
+    * either way.
     */
   def bradleyTerry(comp: DataFrame, winnerCol: String, loserCol: String,
-                   nCol: String, iters: Int = 3,
-                   maxDriverPairs: Int = 2000000): DataFrame = {
+                   nCol: String, iters: Int = 3): DataFrame =
+    fitBradleyTerry(comp, winnerCol, loserCol, nCol, iters, driverTier = true)
+
+  /** [[bradleyTerry]] always on the distributed rounds: the specs that
+    * pin the two tiers equal.
+    */
+  private[graft] def bradleyTerryDistributed(comp: DataFrame, winnerCol: String,
+      loserCol: String, nCol: String, iters: Int = 3): DataFrame =
+    fitBradleyTerry(comp, winnerCol, loserCol, nCol, iters, driverTier = false)
+
+  /** Peak bytes per (i, j, nij) pair row in the driver tier's collect:
+    * the decoded tuple (24 + boxed count 16 + slot 4, and two items at up
+    * to 48 B each — a boxed long is 16 B, a short string about 48 B) plus
+    * its unsafe row (about 60 B for two short strings and a long).
+    */
+  private val PairRowBytes = 200L
+
+  private def fitBradleyTerry(comp: DataFrame, winnerCol: String, loserCol: String,
+      nCol: String, iters: Int, driverTier: Boolean): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters in [1,16], got $iters")
-    require(maxDriverPairs >= 0, s"maxDriverPairs must be >= 0, got $maxDriverPairs")
     val base = comp.select(
       col(winnerCol).as("w"), col(loserCol).as("l"),
       col(nCol).cast("long").as("n"))
@@ -56,8 +90,8 @@ object Preference {
     // set is fixed across rounds, so one cheap head() on the
     // broadcast-sized model table checks the precondition up front.
     // headOption shape: an EMPTY comparison table skips the guard and
-    // falls through to the prior behavior (an empty model), instead of
-    // throwing an opaque NoSuchElementException here.
+    // the driver tier, giving the distributed rounds' empty model
+    // instead of an opaque NoSuchElementException here.
     val anchor = pairT.select(col("i").as("item")).distinct()
       .orderBy(col("item").asc).limit(1)
       .join(wins, Seq("item"), "left")
@@ -70,49 +104,42 @@ object Preference {
           "would NaN the model; drop winless items or re-key so the " +
           "anchor has at least one recorded win.")
     }
-    // DRIVER MM tier (r14): the model tables are bounded by the item
-    // vocabulary BY CONSTRUCTION (≤ T² pair rows — the same tier the
-    // distributed loop already broadcasts every round), so iterating the
-    // MM rounds as T²-row joins pays ~2 s of per-round planning and
-    // scheduling at bench scale for work a driver loop does in
-    // microseconds. Collect the two model tables once and replay the
-    // identical arithmetic: term = BigDecimal(nij/(si+sj)) HALF_UP to
-    // scale 12 (Spark's double→decimal(28,12) cast), exact order-free
-    // sum, the same double divisions, the same fixed anchor item —
-    // bit-identical (PreferenceSpec pins driver == distributed). A model
-    // beyond `maxDriverPairs` falls through to the distributed rounds
-    // unchanged; the corpus-scale comp aggregation is distributed either
-    // way.
-    val ptRows = pairT.limit(maxDriverPairs + 1).collect()
-    if (anchor.nonEmpty && ptRows.length <= maxDriverPairs) {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-      val winsMap = wins.collect().map(r => r.get(0) -> r.getLong(1)).toMap
-      val pt = ptRows.map(r => (r.get(0), r.get(1), r.getLong(2)))
-      val items = pt.map(_._1).distinct
-      val refItem = anchor.get.get(0)
-      var sm: Map[Any, Double] = items.map(_ -> 1.0).toMap
-      for (_ <- 1 to iters) {
-        val den = scala.collection.mutable.HashMap.empty[Any, java.math.BigDecimal]
-        pt.foreach { case (i, j, nij) =>
-          val term = java.math.BigDecimal.valueOf(nij.toDouble / (sm(i) + sm(j)))
-            .setScale(12, java.math.RoundingMode.HALF_UP)
-          den.updateWith(i)(p => Some(p.fold(term)(_.add(term))))
+    val distributed = (pt: DataFrame) => distributedRounds(pt, wins, iters)
+    if (anchor.isEmpty || !driverTier) distributed(pairT)
+    else {
+      val item = GraftShim.externalEncoder(pairT.schema("i").dataType)
+      implicit val pairRow: Encoder[(Any, Any, Long)] = Encoders.tuple(item, item, Encoders.scalaLong)
+      graft.graph.DriverTier.choose[(Any, Any, Long), DataFrame](pairT, PairRowBytes)(distributed) { pt =>
+        val winsMap = wins.collect().map(r => r.get(0) -> r.getLong(1)).toMap
+        val items = pt.map(_._1).distinct
+        val refItem = anchor.get.get(0)
+        var sm: Map[Any, Double] = items.map(_ -> 1.0).toMap
+        for (_ <- 1 to iters) {
+          val den = scala.collection.mutable.HashMap.empty[Any, java.math.BigDecimal]
+          pt.foreach { case (i, j, nij) =>
+            val term = java.math.BigDecimal.valueOf(nij.toDouble / (sm(i) + sm(j)))
+              .setScale(12, java.math.RoundingMode.HALF_UP)
+            den.updateWith(i)(p => Some(p.fold(term)(_.add(term))))
+          }
+          val sr = items.map(it =>
+            it -> winsMap.getOrElse(it, 0L).toDouble / den(it).doubleValue).toMap
+          val refv = sr(refItem)
+          sm = items.map(it => it -> sr(it) / refv).toMap
         }
-        val sr = items.map(it =>
-          it -> winsMap.getOrElse(it, 0L).toDouble / den(it).doubleValue).toMap
-        val refv = sr(refItem)
-        sm = items.map(it => it -> sr(it) / refv).toMap
+        val schema = StructType(Seq(
+          StructField("item", comp.schema(winnerCol).dataType, nullable = true),
+          StructField("wins", LongType, nullable = false),
+          StructField("strength", DoubleType, nullable = true)))
+        val out = items.map(it => Row(it, winsMap.getOrElse(it, 0L), sm(it)))
+        comp.sparkSession.createDataFrame(out.toSeq.asJava, schema)
       }
-      val itemType = comp.schema(winnerCol).dataType
-      val schema = StructType(Seq(
-        StructField("item", itemType, nullable = true),
-        StructField("wins", LongType, nullable = false),
-        StructField("strength", DoubleType, nullable = true)))
-      val out = items.map(it => Row(it, winsMap.getOrElse(it, 0L), sm(it)))
-      import scala.jdk.CollectionConverters._
-      return comp.sparkSession.createDataFrame(out.toSeq.asJava, schema)
     }
+  }
+
+  /** The MM rounds as T²-row joins, each round's broadcast strengths
+    * feeding the next.
+    */
+  private def distributedRounds(pairT: DataFrame, wins: DataFrame, iters: Int): DataFrame = {
     var s = pairT.select(col("i").as("item")).distinct()
       .withColumn("s", lit(1.0))
     for (_ <- 1 to iters) {

@@ -207,14 +207,6 @@ object Readers {
     }
   }
 
-  /** S13: local curated collection → DataFrame (reference literal maps,
-    * e.g. `BrainCRISPR.py:112-116`). Small: always broadcast-join these.
-    */
-  def fromPairs(spark: SparkSession, pairs: Seq[(String, String)], keyCol: String, valCol: String): DataFrame = {
-    import spark.implicits._
-    pairs.toDF(keyCol, valCol)
-  }
-
   /** Loads a testdata table from a scale-factor directory (TESTDATA.md). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")

@@ -489,30 +489,6 @@ object Stats {
           (col("n") * col("n") - col("chance")).cast(DoubleType)).as("kappa"))
   }
 
-  /** Sample autocorrelation of an evenly-indexed series at lags 1..maxLag:
-    * for each lag k, the Pearson correlation between (x_t, x_{t+k}) over
-    * every pair whose BOTH time points exist (a sparse series simply
-    * yields fewer pairs — no imputation).
-    *
-    * `value` MUST be an already-INTEGER-valued column (the caller picks
-    * the quantization, e.g. floor(revenue/1000) — kilodollar units).
-    * Rationale, learned the hard way: the q_corr_manual decimal-scaling
-    * recipe produces moment sums beyond 2⁵³ here (daily AGGREGATES are
-    * ~10× per-row facts, squared), and DuckDB's int128-decimal → DOUBLE
-    * cast is NOT correctly rounded (1-ulp off the JVM's BigDecimal
-    * round-to-nearest), so the "exact decimal then one cast" trick
-    * silently breaks past 53 bits. Integer units keep every moment sum
-    * < 2⁵³ — each BIGINT→DOUBLE cast is value-preserving on both
-    * engines, and the final Pearson expression is a fixed-order IEEE
-    * tree. The caller-side floor(x/c) on a nonnegative double is itself
-    * engine-identical (correctly-rounded division, exact floor) —
-    * unlike a decimal→long cast, which truncates on the JVM but ROUNDS
-    * in DuckDB.
-    *
-    * Scale: the series is already aggregated (one row per time index), so
-    * the lag fan-out is maxLag× a SMALL table; the pair join is keyed on
-    * the shifted index (equi-join, shuffles on time only).
-    */
   /** Average precision (the area under the precision-recall curve in its
     * standard rank-sum form) per group: AP = (1/R) Σ_{k: rel(k)}
     * cumpos(k)/k over the list ranked by (score DESC, id ASC) — the
@@ -627,6 +603,30 @@ object Stats {
           .as("survival"))
   }
 
+  /** Sample autocorrelation of an evenly-indexed series at lags 1..maxLag:
+    * for each lag k, the Pearson correlation between (x_t, x_{t+k}) over
+    * every pair whose BOTH time points exist (a sparse series simply
+    * yields fewer pairs — no imputation).
+    *
+    * `value` MUST be an already-INTEGER-valued column (the caller picks
+    * the quantization, e.g. floor(revenue/1000) — kilodollar units).
+    * Rationale, learned the hard way: the q_corr_manual decimal-scaling
+    * recipe produces moment sums beyond 2⁵³ here (daily AGGREGATES are
+    * ~10× per-row facts, squared), and DuckDB's int128-decimal → DOUBLE
+    * cast is NOT correctly rounded (1-ulp off the JVM's BigDecimal
+    * round-to-nearest), so the "exact decimal then one cast" trick
+    * silently breaks past 53 bits. Integer units keep every moment sum
+    * < 2⁵³ — each BIGINT→DOUBLE cast is value-preserving on both
+    * engines, and the final Pearson expression is a fixed-order IEEE
+    * tree. The caller-side floor(x/c) on a nonnegative double is itself
+    * engine-identical (correctly-rounded division, exact floor) —
+    * unlike a decimal→long cast, which truncates on the JVM but ROUNDS
+    * in DuckDB.
+    *
+    * Scale: the series is already aggregated (one row per time index), so
+    * the lag fan-out is maxLag× a SMALL table; the pair join is keyed on
+    * the shifted index (equi-join, shuffles on time only).
+    */
   def autocorr(df: DataFrame, time: Column, value: Column, maxLag: Int): DataFrame = {
     require(maxLag >= 1 && maxLag <= 64, s"maxLag must be in [1, 64], got $maxLag")
     val series = df.select(time.as("t"), value.as("v"))

@@ -9,16 +9,15 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Custom Catalyst expressions — SURVEY.md §4 named exactly two candidates
-  * (erf for the Stouffer p-value, `encore_parser.py:256-264`; Gini) and the
-  * beyond-reference similarity operators need two more (simhash, cosine).
-  *
-  * All four are full codegen citizens: `doGenCode` emits a call to a static
-  * JVM method, so they inline into whole-stage-generated code with no
-  * boxing, no closure dispatch, and null handling hoisted by
-  * `defineCodeGen` — measurably faster than equivalent Scala UDFs and
-  * usable from SQL via GraftShim.registerFunction.
-  */
+// Custom Catalyst expressions — SURVEY.md §4 named exactly two candidates
+// (erf for the Stouffer p-value, `encore_parser.py:256-264`; Gini) and the
+// beyond-reference similarity operators need two more (simhash, cosine).
+//
+// All four are full codegen citizens: `doGenCode` emits a call to a static
+// JVM method, so they inline into whole-stage-generated code with no
+// boxing, no closure dispatch, and null handling hoisted by
+// `defineCodeGen` — measurably faster than equivalent Scala UDFs and
+// usable from SQL through graft.GraftExtensions.
 
 /** Gauss error function erf(x). Implementation: commons-math3 (ships with
   * Spark). Used for 2·Φ̄(|z|) = 1 − erf(|z|/√2) (Stouffer two-sided p).

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, GraftShim}
 
 /** Column-API façade over graft's custom Catalyst expressions, mirroring
   * `org.apache.spark.sql.functions`' style. Also registers them as SQL
@@ -111,19 +111,6 @@ object GraftFunctions {
     */
   def successorPairs(arr: Column): Column =
     GraftShim.toColumn(SuccessorPairs(GraftShim.toExpression(arr)))
-
-  /** One-scan non-overlapping match count of a constant Java regex —
-    * the fused form of `length(regexp_replace(c,p,"X")) -
-    * length(regexp_replace(c,p,""))` (see plans.FuseRegexCount).
-    */
-  def regexCount(text: Column, pattern: String): Column =
-    GraftShim.toColumn(RegexCount(GraftShim.toExpression(text), pattern))
-
-  /** One-scan code points covered by matches — the fused form of
-    * `length(c) - length(regexp_replace(c,p,""))`.
-    */
-  def regexMatchedChars(text: Column, pattern: String): Column =
-    GraftShim.toColumn(RegexMatchedChars(GraftShim.toExpression(text), pattern))
 
   /** Ordered regex rulebook in one fused pipeline — the direct-API form
     * of the nested `regexp_replace` fold plans.FuseRegexChain rewrites
@@ -269,13 +256,4 @@ object GraftFunctions {
   def dtwBand(a: Column, b: Column, radius: Int): Column =
     GraftShim.toColumn(DtwBand(GraftShim.toExpression(a),
       GraftShim.toExpression(b), radius))
-
-  /** Register every kernel into a running session's function registry.
-    * Same builders as [[graft.GraftExtensions]] — use the extension for
-    * at-build injection, this for sessions you didn't construct.
-    */
-  def registerAll(spark: SparkSession): Unit =
-    graft.GraftExtensions.all.foreach { case (name, builder) =>
-      GraftShim.registerFunction(spark, name, builder)
-    }
 }

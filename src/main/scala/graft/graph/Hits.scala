@@ -62,11 +62,10 @@ object Hits {
     * it). Non-long node ids fall through to [[run]] unchanged; an empty
     * edge set gives [[run]]'s empty result.
     */
-  def runAdaptive(edges: DataFrame, rounds: Int,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
+  def runAdaptive(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 3,
       s"rounds must be in [1, 3] (integer-growth budget, see scaladoc), got $rounds")
-    DriverTier.pairs(edges.select(col("src"), col("dst")), maxDriverEdges)(run(_, rounds)) { es =>
+    DriverTier.pairs(edges.select(col("src"), col("dst")))(run(_, rounds)) { es =>
       def sumBy(pairs: Array[(Long, Long)]): mutable.LongMap[Long] = {
         val m = mutable.LongMap.empty[Long]
         pairs.foreach { case (k, v) => m(k) = Math.addExact(m.getOrElse(k, 0L), v) }

@@ -51,8 +51,7 @@ object KCore {
     * bit-identical by construction (GraphSpec pins it). Non-long node ids
     * fall through to [[peel]] unchanged.
     */
-  def peelAdaptive(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
+  def peelAdaptive(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1, 32], got $rounds")
     def degrees(es: Array[(Long, Long)]): mutable.LongMap[Long] = {
@@ -60,7 +59,7 @@ object KCore {
       es.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
       deg
     }
-    DriverTier.pairs(edges.select(col("src"), col("dst")), maxDriverEdges)(peel(_, k, rounds)) {
+    DriverTier.pairs(edges.select(col("src"), col("dst")))(peel(_, k, rounds)) {
       es0 =>
         var es = es0
         for (_ <- 1 to rounds) {

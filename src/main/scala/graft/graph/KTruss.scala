@@ -58,11 +58,10 @@ object KTruss {
     * are bit-identical (GraphSpec pins it). Non-long node ids fall
     * through to [[peel]] unchanged.
     */
-  def peelAdaptive(canonEdges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame = {
+  def peelAdaptive(canonEdges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3 (edges outside any triangle drop), got $k")
     require(rounds >= 1 && rounds <= 32, s"rounds must be in [1, 32], got $rounds")
-    DriverTier.pairs(canonEdges.select(col("a"), col("b")), maxDriverEdges)(peel(_, k, rounds)) {
+    DriverTier.pairs(canonEdges.select(col("a"), col("b")))(peel(_, k, rounds)) {
       es0 =>
         var es = es0
         var out = Array.empty[(Long, Long, Long)]

@@ -67,9 +67,8 @@ object LabelProp {
     * to [[run]] unchanged. Vote sums use addExact so overflow is as loud
     * as the distributed path's ANSI sum.
     */
-  def runAdaptive(edges: DataFrame, iters: Int,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges): DataFrame =
-    DriverTier.triples(edges.select(col("src"), col("dst"), col("weight")), maxDriverEdges)(
+  def runAdaptive(edges: DataFrame, iters: Int): DataFrame =
+    DriverTier.triples(edges.select(col("src"), col("dst"), col("weight")))(
       run(_, iters)) { es =>
       val nodes = es.map(_._1).distinct
       var labels = mutable.LongMap(nodes.map(n => n -> n): _*)

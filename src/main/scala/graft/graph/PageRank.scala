@@ -136,8 +136,8 @@ object PageRank {
     rank
   }
 
-  /** [[run]] through [[DriverTier]]: a graph under `maxDriverEdges`
-    * iterates on the driver. The tiers are BIT-IDENTICAL: contributions
+  /** [[run]] through [[DriverTier]]: a graph within the driver budget
+    * iterates on the driver ([[run]] itself is the distributed tier). The tiers are BIT-IDENTICAL: contributions
     * are quantized to decimal(28,12) (HALF_UP, matching Spark's
     * double→decimal cast), summed exactly (order-free), and blended in
     * the same double op order — GraphSpec asserts equality. Long node ids
@@ -148,9 +148,8 @@ object PageRank {
       edges: DataFrame,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.pairs(longPairs(edges), maxDriverEdges)(run(_, iters, damping)) { es =>
+    DriverTier.pairs(longPairs(edges))(run(_, iters, damping)) { es =>
       driverRanks(edges.sparkSession, unitWeights(es), iters, damping, isSeed = None)
     }
 
@@ -160,9 +159,8 @@ object PageRank {
       isSeed: Column,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.pairs(longPairs(edges), maxDriverEdges)(runPersonalized(_, isSeed, iters, damping)) {
+    DriverTier.pairs(longPairs(edges))(runPersonalized(_, isSeed, iters, damping)) {
       es => driverRanks(edges.sparkSession, unitWeights(es), iters, damping, Some(isSeed))
     }
 
@@ -172,11 +170,10 @@ object PageRank {
       weightCol: String,
       iters: Int,
       damping: Double = 0.85,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col(weightCol).cast("long").as("w"))
-    DriverTier.triples(e, maxDriverEdges)(runWeighted(_, "w", iters, damping)) { es =>
+    DriverTier.triples(e)(runWeighted(_, "w", iters, damping)) { es =>
       driverRanks(edges.sparkSession, es, iters, damping, isSeed = None)
     }
   }

@@ -196,7 +196,7 @@ object ShortestPath {
     state
   }
 
-  /** [[run]] through [[DriverTier]]: a graph under `maxDriverEdges` runs
+  /** [[run]] through [[DriverTier]]: a graph within the driver budget runs
     * the hop-bounded relaxation as [[driverConverged]] capped at `iters`
     * sweeps (a sweep that changes nothing leaves every later sweep
     * unchanged, so the early exit keeps the hop-bound contract). Pure
@@ -208,9 +208,8 @@ object ShortestPath {
       edges: DataFrame,
       sources: DataFrame,
       iters: Int,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.triples(longTriples(edges), maxDriverEdges)(run(_, sources, iters)) { es =>
+    DriverTier.triples(longTriples(edges))(run(_, sources, iters)) { es =>
       driverConverged(edges.sparkSession, sourceStates(sources), es, iters)
     }
 
@@ -223,9 +222,8 @@ object ShortestPath {
       sources: DataFrame,
       maxIters: Int = 30,
       checkpointEvery: Int = 3,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.triples(longTriples(edges), maxDriverEdges)(
+    DriverTier.triples(longTriples(edges))(
       runConverged(_, sources, maxIters, checkpointEvery)) { es =>
       driverConverged(edges.sparkSession, sourceStates(sources), es, maxIters)
     }
@@ -245,9 +243,8 @@ object ShortestPath {
       newEdges: DataFrame,
       maxIters: Int = 30,
       checkpointEvery: Int = 3,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.triples(longTriples(edgesAll), maxDriverEdges)(
+    DriverTier.triples(longTriples(edgesAll))(
       incrementalAdd(dist, _, newEdges, maxIters, checkpointEvery)) { es =>
       val state = dist
         .select(col("source").cast("long"), col("node").cast("long"), col("dist").cast("long"))

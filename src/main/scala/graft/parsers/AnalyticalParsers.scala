@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Dedup, Reshape, Stats}
 import graft.functions.GraftFunctions
 
-/** Multi-table / matrix-shaped parsers (SURVEY.md §3.2–3.3 lifecycles). */
+// Multi-table / matrix-shaped parsers (SURVEY.md §3.2–3.3 lifecycles).
 
 /** DepMap essentiality parser (reference `modules/Essentiality.py`):
   * the wide gene×cell-line matrix melt (R3, `:210-247`) followed by the

@@ -16,12 +16,6 @@ object Evidence {
   def urlStruct(niceName: String, url: Column): Column =
     when(url.isNotNull, array(struct(lit(niceName).as("niceName"), url.as("url"))))
 
-  /** Single-element literature array from one PMID column (R5 motif,
-    * `ClinGen.py:90-91`); null-safe.
-    */
-  def literatureArray(pmid: Column): Column =
-    when(pmid.isNotNull && trim(pmid) =!= "", array(trim(pmid)))
-
   /** Split a delimiter-separated PMID list into a trimmed, de-duplicated,
     * sorted array (`Gene2Phenotype.py:118-120`).
     */

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Stats, Union}
 
-/** Remaining reference modules, each demonstrating its distinctive
-  * operator shape. Together with SimpleParsers/AnalyticalParsers/
-  * BaselineExpression/Chembl/Orphanet this completes the module inventory
-  * (SURVEY.md intro list).
-  */
+// Remaining reference modules, each demonstrating its distinctive
+// operator shape. Together with SimpleParsers/AnalyticalParsers/
+// BaselineExpression/Chembl/Orphanet this completes the module inventory
+// (SURVEY.md intro list).
 
 /** IntOGen driver-genes parser (reference `modules/IntOGen.py`):
   * the F4 DOI→PMID dictionary "UDF" as a literal map + coalesce

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Cleanup, OntologyMap, Stats, Union}
 
-/** Linear single-source parsers (SURVEY.md §3.1 lifecycle).
-  * Each is a pure DataFrame→DataFrame pipeline; file I/O stays in
-  * graft.core.Readers so tests can inject fixtures directly.
-  */
+// Linear single-source parsers (SURVEY.md §3.1 lifecycle).
+// Each is a pure DataFrame→DataFrame pipeline; file I/O stays in
+// graft.core.Readers so tests can inject fixtures directly.
 
 /** ClinGen gene-validity parser (reference `modules/ClinGen.py:75-98`):
   * project + rename, literal datasource fields, URL struct wrap,
@@ -189,9 +188,6 @@ object PanelAppParser {
   private val trailing = "[:.]*"
   val omimRe: String = leading + "(OMIM|MIM)?" + sep + "(\\d{6})" + trailing
   val otherRe: String = leading + "(OrphaNet: ORPHA|Orphanet|ORPHA|HP|MONDO)" + sep + "(\\d+)" + trailing
-
-  /** Kept for backward compatibility with earlier tests. */
-  val phenotypeRules: Seq[(String, String)] = phenotypeRulesBeforeSplit
 
   /** PMID harvesting (reference `PanelApp.py:58-74,333-360`): ASCII-scrub,
     * the two known publication-string shapes regexp_extract_all'd, digit

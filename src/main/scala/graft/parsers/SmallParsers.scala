@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Stats, Union}
 
-/** The remaining thin reference modules — each is a short pipeline whose
-  * operators are already library primitives; included so the module
-  * inventory is complete (a reference user can run every parser shape).
-  */
+// The remaining thin reference modules — each is a short pipeline whose
+// operators are already library primitives; included so the module
+// inventory is complete (a reference user can run every parser shape).
 
 /** Project Score parser (reference `modules/ProjectScore.py:60-76`):
   * J4 right join of cancer-type LUT onto cell-passport disease cell lines,

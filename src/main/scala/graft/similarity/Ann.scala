@@ -303,7 +303,6 @@ object Ann {
       m: Int = 8,
       ksub: Int = 16,
       iters: Int = 2,
-      maxDriverVecs: Long = KMeans.defaultMaxDriverVecs,
   ): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val dsub = dim / m
@@ -311,8 +310,7 @@ object Ann {
     // (KMeans.fitSubspaces) instead of m independent KMeans.centroids
     // fits — bit-identical by the decimal-sum argument there, ~m× fewer
     // jobs/corpus passes and one checkpoint instead of m+1.
-    KMeans.fitSubspaces(normalized(corpus, idCol, vecCol), m, dsub, ksub, iters,
-      maxDriverVecs)
+    KMeans.fitSubspaces(normalized(corpus, idCol, vecCol), m, dsub, ksub, iters)
   }
 
   /** Encode each vector as `m` small centroid ids (argmin squared-L2 per

@@ -9,18 +9,20 @@ import graft.functions.GraftFunctions.cosineSim
   * behind semantic dedup / semantic sharding of a training corpus
   * (cluster-then-dedup-within-cluster, SemDeDup-style).
   *
-  * Spark-first shape (the same dataflow Spark MLlib's KMeans uses):
+  * Spark-first shape of the distributed loop (the same dataflow Spark
+  * MLlib's KMeans uses; an input within the driver budget runs the same
+  * rounds as driver sweeps instead, see [[fit]]):
   *  - the DATA never leaves the cluster — each iteration is one broadcast
   *    of k×dim centroid literals into a codegen'd projection (cosineSim
   *    kernel per centroid, argmax via struct array_max) followed by ONE
   *    map-side-combining groupBy;
   *  - the MODEL (k×dim doubles, a few KB) collects to the driver each
   *    iteration — the same "small side lives on the driver" decision as a
-  *    broadcast join. No per-row driver loops anywhere.
+  *    broadcast join;
   *  - per-dimension sums are `dim` independent decimal SUM aggregates in
   *    one agg (map-side partials; the shuffle carries k rows per map
-  *    partition), NOT a posexplode — exploding n×dim rows would shuffle
-  *    64× the data for the same answer.
+  *    partition and subspace), one row per vector and subspace — exploding
+  *    n×dim element rows would shuffle 64× the data for the same answer.
   *
   * Determinism: init = first k vectors by id (callers wanting kmeans++
   * seed from a hash-sample — `Sampling.hashSample` — and fit on that);
@@ -50,10 +52,9 @@ object KMeans {
       k: Int,
       dim: Int,
       iters: Int,
-      maxDriverVecs: Long = defaultMaxDriverVecs,
   ): DataFrame = {
     val v = prepared(vecs, idCol, vecCol)
-    assign(v, fitOn(v, k, dim, iters, maxDriverVecs))
+    assign(v, fit(v, 1, dim, k, iters).head)
   }
 
   /** Just the fitted centroid matrix (k×dim) — the offline artifact
@@ -67,9 +68,57 @@ object KMeans {
       k: Int,
       dim: Int,
       iters: Int,
-      maxDriverVecs: Long = defaultMaxDriverVecs,
   ): Array[Array[Double]] =
-    fitOn(prepared(vecs, idCol, vecCol), k, dim, iters, maxDriverVecs)
+    fit(prepared(vecs, idCol, vecCol), 1, dim, k, iters).head
+
+  /** FUSED multi-subspace Lloyd — the PQ codebook fit
+    * ([[Ann.pqCodebooks]]) done in ONE Spark job per iteration instead of
+    * one fit per subspace; [[lloyd]] and [[centroids]] are its m = 1 case.
+    * The m per-subspace fits are independent, but each costs (assign +
+    * agg + collect) jobs over the same corpus; at m=8 that was ~24 jobs
+    * (and 8 extra localCheckpoints) per PQ query, all scheduler latency
+    * at bench scale and ~m redundant corpus scans at 100 TB. Here every
+    * iteration computes ALL subspace assignments in one codegen'd
+    * projection, posexplodes to (s, cluster, subvec) — each element of
+    * the input crosses the (partially-aggregated) shuffle exactly once,
+    * unlike a per-dimension posexplode of n×dim rows — and one
+    * groupBy(s, cluster) yields every subspace's decimal sums together.
+    *
+    * BIT-IDENTICAL to the per-subspace loop by construction: the same
+    * scored-struct assignment (shared [[scoredBest]] builder — same
+    * cosineSim kernel, tie-break, NaN pin), the same per-subspace init
+    * (first k rows by id, sliced), and the same decimal(28,12) per-element
+    * sums — decimal addition is exact, so neither fusion nor partitioning
+    * can reorder a result (SimilaritySpec pins fused ≡ per-subspace).
+    *
+    * @param normed (id, v: array<double>) with |v| = m·dsub — callers pass
+    *               the already-normalized corpus; checkpointed here once.
+    */
+  def fitSubspaces(
+      normed: DataFrame,
+      m: Int,
+      dsub: Int,
+      k: Int,
+      iters: Int,
+  ): Array[Array[Array[Double]]] =
+    fit(normed.select(col("id"), col("v")).localCheckpoint(false), m, dsub, k, iters)
+
+  /** [[fitSubspaces]] over `vecs` cast like [[lloyd]]'s input, always on
+    * the distributed loop: the forced-distributed bench probe and the
+    * specs that pin the two tiers equal.
+    */
+  private[graft] def fitDistributed(
+      vecs: DataFrame,
+      idCol: String,
+      vecCol: String,
+      m: Int,
+      dsub: Int,
+      k: Int,
+      iters: Int,
+  ): Array[Array[Array[Double]]] = {
+    val v = prepared(vecs, idCol, vecCol)
+    sweepDistributed(v, initial(v, m, dsub, k, iters), dsub, iters)
+  }
 
   /** Checkpoint once: the fit consumes the cast vectors iters+1 times. */
   private def prepared(vecs: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -77,42 +126,42 @@ object KMeans {
       .select(col(idCol).as("id"), transform(col(vecCol), x => x.cast("double")).as("v"))
       .localCheckpoint(false)
 
-  /** Vector-count bound for the driver-tier fits — the KMeans sibling of
-    * the graph kit's 2M-edge driver tier ([[graft.graph.DriverTier]]):
-    * an input under the bound fits in driver memory (200k × 64 dims ≈
-    * 100 MB as primitive arrays) and the Lloyd rounds run as driver
-    * sweeps instead of one scheduled job each; past the bound the
-    * distributed loop is unchanged. The actual gate is an ELEMENT budget
-    * — count × dim ≤ bound × 64, i.e. the bound names how many
-    * 64-dim-reference vectors fit, and a higher-dimensional corpus
-    * proportionally lowers the row count the driver will take (r14
-    * advice: a row-count-only gate let a 512-dim corpus under 200k rows
-    * collect 8× the intended bytes). Both paths are BIT-IDENTICAL: the
-    * driver assignment calls the same CosineImpl arithmetic with the
-    * same argmax tie/NaN-pin rule, and the centroid update replays
-    * Spark's exact double→decimal(28,12) HALF_UP quantization and exact
-    * decimal sums (order-free by exactness), so neither tier nor
-    * partitioning can move a result (SimilaritySpec pins driver ≡
-    * distributed for both fit shapes). Inputs must be NaN/null-free
-    * vectors (the embeddings contract — a NaN would cast to decimal
-    * NULL distributed-side). Callers can pass an explicit bound (tests,
-    * forced-distributed bench probes) instead of this default.
+  /** The Lloyd fit of `m` subspaces of `dsub` dims over checkpointed
+    * (id, v), tiered by [[graft.graph.DriverTier]] at 56 + 16·m·dsub B
+    * per vector (a decoded `Array[Double]`, 20 + 8·dim B, and its unsafe
+    * row, about 36 + 8·dim B; 1059 B measured at dim 64): an input within
+    * the driver budget runs the rounds as driver sweeps instead of one
+    * scheduled job each. Both tiers are BIT-IDENTICAL: the driver
+    * assignment calls the same CosineImpl arithmetic with the same argmax
+    * tie/NaN-pin rule, and the centroid update replays Spark's exact
+    * double→decimal(28,12) HALF_UP quantization and exact decimal sums
+    * (order-free by exactness), so neither tier nor partitioning can move
+    * a result (SimilaritySpec and PropertySpec pin driver ≡ distributed).
+    * Inputs must be NaN/null-free vectors (the embeddings contract — a
+    * NaN would cast to decimal NULL distributed-side).
     */
-  private[similarity] val defaultMaxDriverVecs: Long = 200000L
+  private def fit(v: DataFrame, m: Int, dsub: Int, k: Int, iters: Int): Array[Array[Array[Double]]] = {
+    val init = initial(v, m, dsub, k, iters)
+    if (iters == 0) init
+    else {
+      import v.sparkSession.implicits._
+      graft.graph.DriverTier.choose[Array[Double], Array[Array[Array[Double]]]](
+        v.select(col("v")), 56L + 16L * m * dsub)(
+        sweepDistributed(_, init, dsub, iters))(sweepDriver(_, init, dsub, iters))
+    }
+  }
 
-  /** count × dim within the driver element budget (bound × 64-dim ref)? */
-  private def fitsDriver(n: Long, dim: Int, maxDriverVecs: Long): Boolean =
-    n * dim <= maxDriverVecs * 64L
-
-  /** Collect an array<double> column as primitive arrays — the Dataset
-    * encoder path writes straight into Array[Double] (no per-element
-    * boxing, no Row/Seq wrappers), roughly 5× leaner on driver heap than
-    * Row.getSeq for the same vectors.
+  /** Init = first k vectors by id, sliced per subspace, via the same tiny
+    * distributed job on BOTH tiers (no driver re-implementation of id
+    * ordering to drift).
     */
-  private def collectVectors(v: DataFrame): Array[Array[Double]] = {
-    val ds = v.select(col("v"))
-    import ds.sparkSession.implicits._
-    ds.as[Array[Double]].collect()
+  private def initial(v: DataFrame, m: Int, dsub: Int, k: Int, iters: Int): Array[Array[Array[Double]]] = {
+    require(m > 0 && dsub > 0 && k > 0 && iters >= 0,
+      s"bad kmeans config m=$m dsub=$dsub k=$k iters=$iters")
+    val initRows = v.orderBy(col("id")).limit(k).collect()
+      .map(_.getSeq[Double](1).toArray)
+    require(initRows.length > 0, "kmeans: empty input")
+    Array.tabulate(m)(s => initRows.map(full => full.slice(s * dsub, s * dsub + dsub)))
   }
 
   /** Spark Cast(double → decimal(28,12)) replay: shortest-string
@@ -140,129 +189,53 @@ object KMeans {
     bi
   }
 
-  private def fitOn(
-      v: DataFrame,
-      k: Int,
-      dim: Int,
+  /** Driver tier: every subspace's assignment + exact decimal sums per
+    * in-memory sweep over the collected vectors — replaces one scheduled
+    * (posexplode + agg + collect) job per iteration.
+    */
+  private def sweepDriver(
+      vecs: Array[Array[Double]],
+      init: Array[Array[Array[Double]]],
+      dsub: Int,
       iters: Int,
-      maxDriverVecs: Long = defaultMaxDriverVecs): Array[Array[Double]] = {
-    require(k > 0 && iters >= 0 && dim > 0, s"bad kmeans config k=$k iters=$iters dim=$dim")
-    // Init = first k vectors by id, via the same tiny distributed job on
-    // BOTH tiers (no driver re-implementation of id ordering to drift).
-    var cents: Array[Array[Double]] =
-      v.orderBy(col("id")).limit(k).collect()
-        .map(_.getSeq[Double](1).toArray)
-    require(cents.length > 0, "kmeans: empty input")
-
-    if (iters > 0 && fitsDriver(v.count(), dim, maxDriverVecs)) {
-      // Driver tier (see defaultMaxDriverVecs): one collect of the
-      // checkpointed vectors, then `iters` in-memory sweeps — replaces
-      // iters scheduled (assign + 64-decimal-agg + collect) jobs.
-      val vecs = collectVectors(v)
-      for (_ <- 1 to iters) {
-        val sums = Array.fill(cents.length, dim)(java.math.BigDecimal.ZERO)
-        val counts = new Array[Long](cents.length)
-        vecs.foreach { vec =>
-          val c = bestClusterDriver(vec, cents)
-          counts(c) += 1
-          var d = 0
-          while (d < dim) { sums(c)(d) = sums(c)(d).add(dec12(vec(d))); d += 1 }
-        }
-        val next = cents.map(_.clone())
-        for (c <- cents.indices if counts(c) > 0) {
-          val n = counts(c).toDouble
-          next(c) = Array.tabulate(dim)(d => sums(c)(d).doubleValue / n)
-        }
-        cents = next
-      }
-      return cents
-    }
-
-    val sums = (0 until dim).map(i => sum(element_at(col("v"), i + 1).cast("decimal(28,12)")).as(s"s$i"))
+  ): Array[Array[Array[Double]]] = {
+    val m = init.length
+    var cents = init
     for (_ <- 1 to iters) {
-      val updated = assign(v, cents)
-        .groupBy(col("cluster"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .collect()
-      val next = cents.map(_.clone())
-      updated.foreach { r =>
-        val c = r.getAs[Int]("cluster")
-        val n = r.getAs[Long]("n").toDouble
-        next(c) = Array.tabulate(dim)(i => r.getAs[java.math.BigDecimal](s"s$i").doubleValue / n)
+      val sums = Array.tabulate(m)(s => Array.fill(cents(s).length, dsub)(java.math.BigDecimal.ZERO))
+      val counts = Array.tabulate(m)(s => new Array[Long](cents(s).length))
+      vecs.foreach { vec =>
+        var s = 0
+        while (s < m) {
+          val sub = if (m == 1) vec else java.util.Arrays.copyOfRange(vec, s * dsub, s * dsub + dsub)
+          val c = bestClusterDriver(sub, cents(s))
+          counts(s)(c) += 1
+          var d = 0
+          while (d < dsub) { sums(s)(c)(d) = sums(s)(c)(d).add(dec12(sub(d))); d += 1 }
+          s += 1
+        }
+      }
+      val next = cents.map(_.map(_.clone()))
+      for (s <- 0 until m; c <- cents(s).indices if counts(s)(c) > 0) {
+        val n = counts(s)(c).toDouble
+        next(s)(c) = Array.tabulate(dsub)(d => sums(s)(c)(d).doubleValue / n)
       }
       cents = next
     }
     cents
   }
 
-  /** FUSED multi-subspace Lloyd — the PQ codebook fit
-    * ([[Ann.pqCodebooks]]) done in ONE Spark job per iteration instead of
-    * one fit per subspace. The m per-subspace fits are independent, but
-    * each costs (assign + agg + collect) jobs over the same corpus; at m=8
-    * that was ~24 jobs (and 8 extra localCheckpoints) per PQ query, all
-    * scheduler latency at bench scale and ~m redundant corpus scans at
-    * 100 TB. Here every iteration computes ALL subspace assignments in one
-    * codegen'd projection, posexplodes to (s, cluster, subvec) — each
-    * element of the input crosses the (partially-aggregated) shuffle
-    * exactly once, unlike the full-dim posexplode [[lloyd]]'s scaladoc
-    * rejects — and one groupBy(s, cluster) yields every subspace's decimal
-    * sums together.
-    *
-    * BIT-IDENTICAL to the per-subspace loop by construction: the same
-    * scored-struct assignment (shared [[scoredBest]] builder — same
-    * cosineSim kernel, tie-break, NaN pin), the same per-subspace init
-    * (first k rows by id, sliced), and the same decimal(28,12) per-element
-    * sums — decimal addition is exact, so neither fusion nor partitioning
-    * can reorder a result (SimilaritySpec pins fused ≡ per-subspace).
-    *
-    * @param normed (id, v: array<double>) with |v| = m·dsub — callers pass
-    *               the already-normalized corpus; checkpointed here once.
+  /** Distributed tier: one (assign all subspaces + posexplode + decimal
+    * agg + collect) job per iteration over `v`'s `v` column.
     */
-  def fitSubspaces(
-      normed: DataFrame,
-      m: Int,
+  private def sweepDistributed(
+      v: DataFrame,
+      init: Array[Array[Array[Double]]],
       dsub: Int,
-      k: Int,
       iters: Int,
-      maxDriverVecs: Long = defaultMaxDriverVecs,
   ): Array[Array[Array[Double]]] = {
-    require(m > 0 && dsub > 0 && k > 0 && iters >= 0,
-      s"bad pq-fit config m=$m dsub=$dsub k=$k iters=$iters")
-    val v = normed.select(col("id"), col("v")).localCheckpoint(false)
-    val initRows = v.orderBy(col("id")).limit(k).collect()
-      .map(_.getSeq[Double](1).toArray)
-    require(initRows.length > 0, "kmeans: empty input")
-    var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-      initRows.map(full => full.slice(s * dsub, s * dsub + dsub))
-    }
-    if (iters > 0 && fitsDriver(v.count(), m * dsub, maxDriverVecs)) {
-      // Driver tier (see defaultMaxDriverVecs / fitOn): every subspace's
-      // assignment + exact decimal sums per in-memory sweep — replaces
-      // one scheduled (posexplode + agg + collect) job per iteration.
-      val vecs = collectVectors(v)
-      for (_ <- 1 to iters) {
-        val sums = Array.tabulate(m)(s => Array.fill(cents(s).length, dsub)(java.math.BigDecimal.ZERO))
-        val counts = Array.tabulate(m)(s => new Array[Long](cents(s).length))
-        vecs.foreach { vec =>
-          var s = 0
-          while (s < m) {
-            val sub = java.util.Arrays.copyOfRange(vec, s * dsub, s * dsub + dsub)
-            val c = bestClusterDriver(sub, cents(s))
-            counts(s)(c) += 1
-            var d = 0
-            while (d < dsub) { sums(s)(c)(d) = sums(s)(c)(d).add(dec12(sub(d))); d += 1 }
-            s += 1
-          }
-        }
-        val next = cents.map(_.map(_.clone()))
-        for (s <- 0 until m; c <- cents(s).indices if counts(s)(c) > 0) {
-          val n = counts(s)(c).toDouble
-          next(s)(c) = Array.tabulate(dsub)(d => sums(s)(c)(d).doubleValue / n)
-        }
-        cents = next
-      }
-      return cents
-    }
+    val m = init.length
+    var cents = init
     val sums = (0 until dsub).map(i =>
       sum(element_at(col("sv"), i + 1).cast("decimal(28,12)")).as(s"s$i"))
     for (_ <- 1 to iters) {

@@ -322,20 +322,6 @@ object NearDup {
       .distinct()
   }
 
-  /** Connected components over an undirected edge list via min-label
-    * propagation: every node repeatedly adopts the minimum label among
-    * itself and its neighbors until fixpoint — the step a real dedup
-    * pipeline needs between candidate PAIRS and survivor selection
-    * (duplicate groups are transitive; pairs alone are not).
-    *
-    * Scale shape: one shuffle (join + groupBy on id) per iteration;
-    * iterations ≤ graph diameter, and near-dup graphs are shallow
-    * (duplicate groups are cliques or short chains). Labels persist per
-    * iteration to truncate lineage. Convergence check is a cheap
-    * sum(label) action: the label vector is component-wise
-    * non-increasing, so the sum strictly decreases until fixpoint
-    * (decimal accumulator — id sums can exceed long for hash-derived ids).
-    */
   /** Node-id normalization for the label domain: INTEGRAL numeric ids
     * cast to long (lossless; ANSI mode throws rather than silently
     * nulling on overflow), everything else (string/UUID/binary ids, and
@@ -356,16 +342,9 @@ object NearDup {
     case _ => when(c.isNull, lit(null).cast("long")).otherwise(xxhash64(c))
   }
 
-  /** @param fixedIterations when true, runs exactly `maxIter` propagation
-    *   rounds as ONE lazy plan (no per-round driver actions): correct
-    *   whenever `maxIter` ≥ the largest component's diameter — a safe bet
-    *   for near-dup graphs, where groups are cliques or short chains. When
-    *   false (default), iterates with a decimal label-sum fixpoint check
-    *   per round — use for graphs of unknown shape.
-    *
-    * Edges with a null endpoint are dropped (they can never connect
-    * anything; left in, null==null join semantics would silently drop the
-    * propagation instead).
+  /** (src, dst) as [[nodeId]] labels. Edges with a null endpoint are
+    * dropped (they can never connect anything; left in, null==null join
+    * semantics would silently drop the propagation instead).
     */
   private def symEdges(edges: DataFrame, aCol: String, bCol: String): DataFrame =
     edges
@@ -374,6 +353,28 @@ object NearDup {
         nodeId(edges(bCol), edges.schema(bCol).dataType).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
 
+  /** Connected components over an undirected edge list via min-label
+    * propagation: every node repeatedly adopts the minimum label among
+    * itself and its neighbors until fixpoint — the step a real dedup
+    * pipeline needs between candidate PAIRS and survivor selection
+    * (duplicate groups are transitive; pairs alone are not).
+    *
+    * Scale shape: one shuffle (join + groupBy on id) per iteration;
+    * iterations ≤ graph diameter, and near-dup graphs are shallow
+    * (duplicate groups are cliques or short chains). Labels persist per
+    * iteration to truncate lineage. Convergence check is a cheap
+    * sum(label) action: the label vector is component-wise
+    * non-increasing, so the sum strictly decreases until fixpoint
+    * (decimal accumulator — id sums can exceed long for hash-derived ids).
+    *
+    * @param fixedIterations when true, runs exactly `maxIter` propagation
+    *   rounds as ONE lazy plan (no per-round driver actions): correct
+    *   whenever `maxIter` ≥ the largest component's diameter — a safe bet
+    *   for near-dup graphs, where groups are cliques or short chains. When
+    *   false (default), iterates with a decimal label-sum fixpoint check
+    *   per round — use for graphs of unknown shape. Edges with a null
+    *   endpoint are dropped.
+    */
   def connectedComponents(
       edges: DataFrame,
       aCol: String,
@@ -489,9 +490,8 @@ object NearDup {
       edges: DataFrame,
       aCol: String,
       bCol: String,
-      maxDriverEdges: Long = DriverTier.MaxDriverEdges,
   ): DataFrame =
-    DriverTier.pairs(symEdges(edges, aCol, bCol), maxDriverEdges)(
+    DriverTier.pairs(symEdges(edges, aCol, bCol))(
       connectedComponents(_, "src", "dst", maxIter = 25, fixedIterations = false)) { es =>
       // Union-find with path halving; attaching the larger root under the
       // smaller keeps every root the min of its component, so find() alone

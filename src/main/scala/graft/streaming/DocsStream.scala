@@ -313,17 +313,6 @@ object DocsStream {
         .write.mode("append").parquet(outPath)
     }
 
-  /** Retrieval SERVING from a query stream: each micro-batch of query
-    * documents scores against a standing FROZEN BM25 index
-    * ([[graft.similarity.SparseSim.bm25Retrieve]]) and appends its top-k
-    * to `outPath`. Because every query's result is a pure function of
-    * (query, index) — the frozen-model contract — micro-batching is
-    * invisible: stream-served rows are bit-identical to one batch call
-    * over the same queries (StreamingSpec pin). Stateless between
-    * batches; per-batch cost is the broadcast term-pruned join, the
-    * corpus-scale index never reshuffles (term-bucketed store drops its
-    * exchange entirely, LayoutSpec).
-    */
   /** Streaming drift monitor: per micro-batch, PSI of the batch's value
     * distribution against a FROZEN reference histogram
     * ([[graft.core.Stats.psiAgainstRef]] — literal octile cuts + counts
@@ -347,6 +336,17 @@ object DocsStream {
         .write.mode("append").parquet(outPath)
     }
 
+  /** Retrieval SERVING from a query stream: each micro-batch of query
+    * documents scores against a standing FROZEN BM25 index
+    * ([[graft.similarity.SparseSim.bm25Retrieve]]) and appends its top-k
+    * to `outPath`. Because every query's result is a pure function of
+    * (query, index) — the frozen-model contract — micro-batching is
+    * invisible: stream-served rows are bit-identical to one batch call
+    * over the same queries (StreamingSpec pin). Stateless between
+    * batches; per-batch cost is the broadcast term-pruned join, the
+    * corpus-scale index never reshuffles (term-bucketed store drops its
+    * exchange entirely, LayoutSpec).
+    */
   def bm25ServeStream(
       queries: DataFrame,
       index: DataFrame,

@@ -61,14 +61,6 @@ object NgramLm {
     Model(bigrams, contexts, vocab)
   }
 
-  /** Score every document: (id, n_bigrams, n_oov, mean_p, ppl).
-    *
-    * n_oov counts UNSEEN bigram events (training count 0 — smoothing
-    * still prices them); mean_p is the arithmetic mean of the add-k
-    * probabilities (exact, oracle-hashable); ppl = exp(mean -ln P),
-    * decimal(18,3)-quantized. Documents with < 2 tokens keep their row
-    * with n_bigrams = 0 and NULL scores.
-    */
   /** DSIR-style importance weights (Xie et al. 2023): score every doc by
     * how much more likely its unigrams are under a TARGET distribution
     * than under the RAW corpus distribution,
@@ -123,6 +115,14 @@ object NgramLm {
       .na.fill(0L, Seq("n_tokens"))
   }
 
+  /** Score every document: (id, n_bigrams, n_oov, mean_p, ppl).
+    *
+    * n_oov counts UNSEEN bigram events (training count 0 — smoothing
+    * still prices them); mean_p is the arithmetic mean of the add-k
+    * probabilities (exact, oracle-hashable); ppl = exp(mean -ln P),
+    * decimal(18,3)-quantized. Documents with < 2 tokens keep their row
+    * with n_bigrams = 0 and NULL scores.
+    */
   def score(
       docs: DataFrame,
       idCol: String,

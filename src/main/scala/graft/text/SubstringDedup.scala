@@ -215,8 +215,8 @@ object SubstringDedup {
     * broadcast of the (small) new batch's distinct grams before any
     * shuffle, so per-batch cost scales with the BATCH, not the corpus —
     * with a gram-bucketed index even that shuffle disappears.
-    */
-  /** @param includeBatchInternal also detect batch-internal sharing
+    *
+    * @param includeBatchInternal also detect batch-internal sharing
     *        (both copies flagged — the symmetric detection contract).
     *        `false` restricts to batch-vs-INDEX spans: the dedup-GATE
     *        shape ([[graft.streaming.DocsStream.substringDedupAppender]]),

@@ -49,12 +49,6 @@ object WordPiece {
       .select(explode(filter(split(trim(col(textCol)), "\\s+"), _ =!= "")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
 
-  /** Fit from a (w, f) word-count table — the vocabulary depends on the
-    * corpus ONLY through word frequencies, so a refit from an
-    * incrementally-maintained standing count state (Ivm / ivmAppender)
-    * is bit-identical to a full-corpus fit without rescanning history:
-    * the continual-tokenizer maintenance loop.
-    */
   /** (piece, occ, score) over all substrings of the word table up to
     * `maxPieceLen`: occ = corpus occurrences (per start position ×
     * word frequency), score = occ × length — the shared seed statistic
@@ -70,6 +64,12 @@ object WordPiece {
         (col("occ") * length(col("piece"))).as("score"))
   }
 
+  /** Fit from a (w, f) word-count table — the vocabulary depends on the
+    * corpus ONLY through word frequencies, so a refit from an
+    * incrementally-maintained standing count state (Ivm / ivmAppender)
+    * is bit-identical to a full-corpus fit without rescanning history:
+    * the continual-tokenizer maintenance loop.
+    */
   def vocabFromWordCounts(
       words: DataFrame,
       vocabSize: Int = 64,

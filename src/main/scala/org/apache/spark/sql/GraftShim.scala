@@ -1,10 +1,14 @@
 package org.apache.spark.sql
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, RowEncoder}
 import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, Expression, If, Literal, RuntimeReplaceable, StringTrim, With}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.csv.TextInputCSVDataSource
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Bridge between graft's custom Catalyst `Expression`s and the public
   * `Column` API.
@@ -45,16 +49,30 @@ object GraftShim {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** Register a custom expression under a SQL function name, so
-    * `spark.sql("SELECT graft_erf(x) ...")` works alongside the Column API.
+  /** `df`'s rows decoded by `enc` straight into one presized array, the
+    * only copy on the driver beside the serialized result blocks:
+    * `Dataset.collect` first builds an `Array[InternalRow]` and then maps
+    * it. Runs as a SQL execution like `collect`, so listeners see it.
+    * `executeCollectIterator` and the encoder's deserializer are
+    * private[sql].
     */
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression,
-  ): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+  def collectDecoded[T: Encoder: ClassTag](df: DataFrame): Array[T] = {
+    val qe = df.queryExecution
+    val fromRow = encoderFor[T].resolveAndBind(qe.analyzed.output).createDeserializer()
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val (n, rows) = qe.executedPlan.executeCollectIterator()
+      val out = new Array[T](n.toInt)
+      var i = 0
+      rows.foreach { r => out(i) = fromRow(r); i += 1 }
+      out
+    }
+  }
+
+  /** The encoder of a `dataType` column's external values (`Row.get`'s
+    * types), for decoding a column whose type is known only at run time.
+    */
+  def externalEncoder(dataType: DataType): Encoder[Any] =
+    RowEncoder.encoderForDataType(dataType, lenient = false).asInstanceOf[Encoder[Any]]
 
   /** Spark's own CSV schema inference over `lines` with `header` as the
     * header line: the inference scan of `TextInputCSVDataSource.infer`

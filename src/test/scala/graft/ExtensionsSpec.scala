@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** SQL surface injected by [[graft.GraftExtensions]] (the shared test
-  * session is built `withExtensions`, so these functions must resolve
-  * WITHOUT any runtime registerAll call).
+  * session is built `withExtensions`, so these functions resolve with no
+  * runtime registration).
   */
 class ExtensionsSpec extends SparkTestBase {
   import spark.implicits._

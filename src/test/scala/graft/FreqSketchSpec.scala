@@ -97,7 +97,6 @@ class FreqSketchSpec extends SparkTestBase {
       assert(est <= exact(t), s"$t overcounted through the Spark path")
       assert(exact(t) - est <= n / 65.0, s"$t bound violated through the Spark path")
     }
-    GraftFunctions.registerAll(spark)
     df.createOrReplaceTempView("mg_in")
     val viaSql = spark.sql(
       """SELECT size(graft_mg_entries(graft_mg_topk(term, 64))) AS nc

@@ -24,7 +24,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("erf works through SQL registration") {
-    GraftFunctions.registerAll(spark)
     val p = spark.sql("SELECT graft_erf(1.0) AS e").head().getDouble(0)
     assert(math.abs(p - 0.8427007929497149) < 1e-15)
   }
@@ -112,7 +111,6 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("charEntropy through SQL registration") {
-    GraftFunctions.registerAll(spark)
     val r = spark.sql("SELECT graft_char_entropy('abab').ent_nats AS e").head().getDouble(0)
     assert(math.abs(r - math.log(2.0)) < 1e-9)
   }
@@ -190,7 +188,6 @@ class FunctionsSpec extends SparkTestBase {
       .toDF("a", "b")
     val out = df.select(GraftFunctions.jaroWinkler($"a", $"b").as("s")).collect()
     assert(out(0).isNullAt(0) && out(1).isNullAt(0) && !out(2).isNullAt(0))
-    GraftFunctions.registerAll(spark)
     val viaSql = spark.sql("SELECT graft_jaro_winkler('martha', 'marhta') AS s").head().getDouble(0)
     assert(viaSql == 0.9611111111111111)
   }
@@ -216,7 +213,6 @@ class FunctionsSpec extends SparkTestBase {
     val n = Seq(Option.empty[String]).toDF("t")
       .select(GraftFunctions.multiMatchCounts($"t", pats).as("c")).collect()
     assert(n(0).isNullAt(0))
-    GraftFunctions.registerAll(spark)
     val viaSql = spark.sql(
       "SELECT graft_multi_match('ushers', array('he','she','his','hers')) AS c")
       .as[Seq[Long]].head()
@@ -243,7 +239,6 @@ class FunctionsSpec extends SparkTestBase {
       df.select(GraftFunctions.unicodeNorm($"d", "NFX")).head()
     }
     assert(e.getMessage.contains("NFX"), e.getMessage)
-    GraftFunctions.registerAll(spark)
     // Spark's chr() wraps mod 256 (DuckDB's does not) — embed the
     // combining mark via the Scala escape instead.
     assert(spark.sql(s"SELECT graft_unicode_norm('$decomposed', 'NFC') AS s")
@@ -264,7 +259,6 @@ class FunctionsSpec extends SparkTestBase {
       .select($"a", $"b", GraftFunctions.damerauLevenshtein($"a", $"b").as("d"))
       .as[(String, String, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
     cases.foreach { case (k, want) => assert(got(k) == want, s"$k: got ${got(k)} want $want") }
-    GraftFunctions.registerAll(spark)
     assert(spark.sql("SELECT graft_damerau_levenshtein('CA', 'ABC') AS d").head().getInt(0) == 2)
   }
 

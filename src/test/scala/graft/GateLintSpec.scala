@@ -40,4 +40,31 @@ class GateLintSpec extends SparkTestBase {
         s"(r11: q_readability/q_sq8/q_table_digest) — fold to double/BIGINT first: " +
         offenders.mkString("; "))
   }
+
+  // Source lint: Scaladoc attaches only the LAST of two stacked doc
+  // comments, so the first documents nothing and the next definition can
+  // show a neighbour's doc. Reads src/main from the project root (the
+  // forked test JVM's working directory).
+  test("source lint: no doc comment in src/main is followed directly by another") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"found only ${files.size} sources under $root")
+    // The offset of each doc comment that ends where, after whitespace,
+    // another begins.
+    def stacked(text: String): Iterator[Int] =
+      Iterator.iterate(text.indexOf("/**"))(i => text.indexOf("/**", text.indexOf("*/", i + 3) max i + 3))
+        .takeWhile(_ >= 0)
+        .filter { i =>
+          val end = text.indexOf("*/", i + 3)
+          end >= 0 && text.startsWith("/**", text.indexWhere(!_.isWhitespace, end + 2))
+        }
+    val offenders = files.sortBy(_.toString).flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      stacked(text).map(i => s"$p:${text.take(i).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty, s"stacked doc comments (the first attaches to nothing): ${offenders.mkString(", ")}")
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
-import graft.graph.{DriverTier, PageRank}
+import graft.graph.PageRank
 
 /** PageRank invariants on hand graphs — the rows-only q_pagerank query's
   * correctness anchor (no SQL oracle can express the iteration).
@@ -43,7 +43,7 @@ class GraphSpec extends SparkTestBase {
     val edges = undirected((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (3L, 4L))
     val driver = PageRank.runAdaptive(edges, iters = 7)
       .as[(Long, Double)].collect().toMap
-    val dist = PageRank.runAdaptive(edges, iters = 7, maxDriverEdges = 0L)
+    val dist = PageRank.run(edges, iters = 7)
       .as[(Long, Double)].collect().toMap
     assert(driver == dist, s"paths diverge:\n driver=$driver\n dist=$dist")
   }
@@ -70,7 +70,7 @@ class GraphSpec extends SparkTestBase {
     // Driver escape hatch ≡ distributed, weighted edition.
     val driver = PageRank.runWeightedAdaptive(tri, "w", iters = 7)
       .as[(Long, Double)].collect().toMap
-    val dist = PageRank.runWeightedAdaptive(tri, "w", iters = 7, maxDriverEdges = 0L)
+    val dist = PageRank.runWeighted(tri, "w", iters = 7)
       .as[(Long, Double)].collect().toMap
     assert(driver == dist, s"weighted paths diverge:\n driver=$driver\n dist=$dist")
   }
@@ -240,10 +240,10 @@ class GraphSpec extends SparkTestBase {
       s"round 2 must discover the cheaper 2-hop route: $two")
     // runAdaptive keeps the same hop bound on both tiers: the driver
     // sweep must stop after `iters` relaxations, not at the fixpoint.
-    for ((iters, want) <- Seq(1 -> one, 2 -> two); bound <- Seq(DriverTier.MaxDriverEdges, 0L)) {
-      val got = graft.graph.ShortestPath.runAdaptive(edges, srcs, iters, maxDriverEdges = bound)
+    for ((iters, want) <- Seq(1 -> one, 2 -> two)) {
+      val got = graft.graph.ShortestPath.runAdaptive(edges, srcs, iters)
         .as[(Long, Long, Long)].collect().map(r => r._2 -> r._3).toMap
-      assert(got == want, s"runAdaptive iters=$iters maxDriverEdges=$bound: $got != $want")
+      assert(got == want, s"runAdaptive iters=$iters: $got != $want")
     }
   }
 
@@ -270,10 +270,6 @@ class GraphSpec extends SparkTestBase {
     val drv = graft.graph.ShortestPath.runAdaptive(edges, srcs, iters = 5)
       .as[(Long, Long, Long)].collect().toSet
     assert(dist == drv, s"driver/distributed drift: ${dist.diff(drv)} vs ${drv.diff(dist)}")
-    // And the adaptive threshold at 0 forces the distributed branch.
-    val forced = graft.graph.ShortestPath.runAdaptive(edges, srcs, iters = 5,
-      maxDriverEdges = 0L).as[(Long, Long, Long)].collect().toSet
-    assert(forced == dist)
   }
 
   test("sssp: runConverged reaches the fixpoint a generous hop bound agrees with") {
@@ -364,8 +360,8 @@ class GraphSpec extends SparkTestBase {
     val full = weighted(tris: _*)
     val drv = graft.graph.ShortestPath.runConvergedAdaptive(full, srcs)
       .as[(Long, Long, Long)].collect().toSet
-    val dist = graft.graph.ShortestPath.runConvergedAdaptive(full, srcs,
-      maxDriverEdges = 0L).as[(Long, Long, Long)].collect().toSet
+    val dist = graft.graph.ShortestPath.runConverged(full, srcs)
+      .as[(Long, Long, Long)].collect().toSet
     assert(drv == dist, s"converged driver/distributed drift: ${drv.diff(dist)} / ${dist.diff(drv)}")
     val (delta, base) = tris.partition { case (a, b, w) => (a + b + w) % 3 == 0 }
     val baseD = graft.graph.ShortestPath.runConvergedAdaptive(weighted(base: _*), srcs)
@@ -373,7 +369,7 @@ class GraphSpec extends SparkTestBase {
       .incrementalAddAdaptive(baseD, full, weighted(delta: _*))
       .as[(Long, Long, Long)].collect().toSet
     val incDist = graft.graph.ShortestPath
-      .incrementalAddAdaptive(baseD, full, weighted(delta: _*), maxDriverEdges = 0L)
+      .incrementalAdd(baseD, full, weighted(delta: _*))
       .as[(Long, Long, Long)].collect().toSet
     assert(incDrv == incDist && incDrv == dist,
       s"incremental driver/distributed drift:\n drv=$incDrv\n dist=$incDist\n full=$dist")
@@ -387,10 +383,6 @@ class GraphSpec extends SparkTestBase {
     val drv = LabelProp.runAdaptive(edges, iters = 4).as[(Long, Long)].collect().toSet
     val dist = LabelProp.run(edges, iters = 4).as[(Long, Long)].collect().toSet
     assert(drv == dist, s"LabelProp drift:\n drv=$drv\n dist=$dist")
-    // the forced-distributed branch agrees too
-    val forced = LabelProp.runAdaptive(edges, iters = 4, maxDriverEdges = 0L)
-      .as[(Long, Long)].collect().toSet
-    assert(forced == dist)
     // fractional weights must take the distributed path (exact-vote guard)
     val frac = edges.withColumn("weight", col("weight").cast("double") / 2.0)
     val fd = LabelProp.runAdaptive(frac, iters = 2).as[(Long, Long)].collect().toSet
@@ -448,8 +440,8 @@ class GraphSpec extends SparkTestBase {
     val seed = col("node") % 2 === 0
     val drv = PageRank.runPersonalizedAdaptive(edges, seed, iters = 6)
       .as[(Long, Double)].collect().toMap
-    val dist = PageRank.runPersonalizedAdaptive(edges, seed, iters = 6,
-      maxDriverEdges = 0L).as[(Long, Double)].collect().toMap
+    val dist = PageRank.runPersonalized(edges, seed, iters = 6)
+      .as[(Long, Double)].collect().toMap
     assert(drv == dist, s"PPR drift:\n drv=$drv\n dist=$dist")
   }
 
@@ -460,30 +452,33 @@ class GraphSpec extends SparkTestBase {
     val triples = Seq.empty[(Long, Long, Long)].toDF("src", "dst", "w")
     val srcs = Seq(1L, 2L).toDF("source")
     val converged = ShortestPath.runConverged(triples, srcs)
-    val entryPoints: Seq[(String, Long => DataFrame)] = Seq(
-      "PageRank.runAdaptive" -> (b => PageRank.runAdaptive(pairs, 3, maxDriverEdges = b)),
-      "PageRank.runPersonalizedAdaptive" -> (b =>
-        PageRank.runPersonalizedAdaptive(pairs, col("node") === 1L, 3, maxDriverEdges = b)),
-      "PageRank.runWeightedAdaptive" -> (b =>
-        PageRank.runWeightedAdaptive(triples, "w", 3, maxDriverEdges = b)),
-      "ShortestPath.runAdaptive" -> (b =>
-        ShortestPath.runAdaptive(triples, srcs, 3, maxDriverEdges = b)),
-      "ShortestPath.runConvergedAdaptive" -> (b =>
-        ShortestPath.runConvergedAdaptive(triples, srcs, maxDriverEdges = b)),
-      "ShortestPath.incrementalAddAdaptive" -> (b =>
-        ShortestPath.incrementalAddAdaptive(converged, triples, triples, maxDriverEdges = b)),
-      "LabelProp.runAdaptive" -> (b =>
-        LabelProp.runAdaptive(triples.withColumnRenamed("w", "weight"), 3, maxDriverEdges = b)),
-      "Hits.runAdaptive" -> (b => Hits.runAdaptive(pairs, 2, maxDriverEdges = b)),
-      "KCore.peelAdaptive" -> (b => KCore.peelAdaptive(pairs, 2, 3, maxDriverEdges = b)),
-      "KTruss.peelAdaptive" -> (b =>
-        KTruss.peelAdaptive(pairs.toDF("a", "b"), 3, 2, maxDriverEdges = b)),
-      "NearDup.connectedComponentsAdaptive" -> (b =>
-        NearDup.connectedComponentsAdaptive(pairs, "src", "dst", maxDriverEdges = b)),
+    // Each adaptive entry point beside its distributed entry point.
+    val entryPoints: Seq[(String, DataFrame, DataFrame)] = Seq(
+      ("PageRank.runAdaptive", PageRank.runAdaptive(pairs, 3), PageRank.run(pairs, 3)),
+      ("PageRank.runPersonalizedAdaptive",
+        PageRank.runPersonalizedAdaptive(pairs, col("node") === 1L, 3),
+        PageRank.runPersonalized(pairs, col("node") === 1L, 3)),
+      ("PageRank.runWeightedAdaptive",
+        PageRank.runWeightedAdaptive(triples, "w", 3), PageRank.runWeighted(triples, "w", 3)),
+      ("ShortestPath.runAdaptive",
+        ShortestPath.runAdaptive(triples, srcs, 3), ShortestPath.run(triples, srcs, 3)),
+      ("ShortestPath.runConvergedAdaptive",
+        ShortestPath.runConvergedAdaptive(triples, srcs), ShortestPath.runConverged(triples, srcs)),
+      ("ShortestPath.incrementalAddAdaptive",
+        ShortestPath.incrementalAddAdaptive(converged, triples, triples),
+        ShortestPath.incrementalAdd(converged, triples, triples)),
+      ("LabelProp.runAdaptive",
+        LabelProp.runAdaptive(triples.withColumnRenamed("w", "weight"), 3),
+        LabelProp.run(triples.withColumnRenamed("w", "weight"), 3)),
+      ("Hits.runAdaptive", Hits.runAdaptive(pairs, 2), Hits.run(pairs, 2)),
+      ("KCore.peelAdaptive", KCore.peelAdaptive(pairs, 2, 3), KCore.peel(pairs, 2, 3)),
+      ("KTruss.peelAdaptive",
+        KTruss.peelAdaptive(pairs.toDF("a", "b"), 3, 2), KTruss.peel(pairs.toDF("a", "b"), 3, 2)),
+      ("NearDup.connectedComponentsAdaptive",
+        NearDup.connectedComponentsAdaptive(pairs, "src", "dst"),
+        NearDup.connectedComponents(pairs, "src", "dst")),
     )
-    // An empty edge set fits every bound >= 0, so -1 forces the distributed tier.
-    entryPoints.foreach { case (name, f) =>
-      val (drv, dist) = (f(DriverTier.MaxDriverEdges), f(-1L))
+    entryPoints.foreach { case (name, drv, dist) =>
       assert(drv.schema.map(c => c.name -> c.dataType) == dist.schema.map(c => c.name -> c.dataType),
         s"$name schema: ${drv.schema.simpleString} vs ${dist.schema.simpleString}")
       assert(drv.collect().toSet == dist.collect().toSet, s"$name rows differ")

@@ -42,6 +42,106 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("driver tier == distributed tier on random inputs (graph kit, KMeans, Bradley-Terry)") {
+    import org.apache.spark.sql.DataFrame
+    import graft.core.Preference
+    import graft.graph.{Hits, KCore, KTruss, LabelProp, PageRank, ShortestPath}
+    import graft.similarity.KMeans
+    def same(what: String, drv: DataFrame, dist: DataFrame): Unit = {
+      assert(drv.schema.map(c => c.name -> c.dataType) == dist.schema.map(c => c.name -> c.dataType),
+        s"$what schema: ${drv.schema.simpleString} vs ${dist.schema.simpleString}")
+      val (d, r) = (drv.collect().map(_.toString).sorted.toSeq, dist.collect().map(_.toString).sorted.toSeq)
+      assert(d == r, s"$what: driver ${d.diff(r)} vs distributed ${r.diff(d)}")
+    }
+
+    // Graph kit: random long-id graphs with self-loops and duplicate
+    // edges (the empty graph first); each adaptive entry point against
+    // its distributed entry point, bit for bit. KTruss takes its
+    // documented canonical input (a < b, each edge once).
+    val graphGen = for {
+      n <- Gen.choose(1, 10)
+      m <- Gen.choose(1, 18)
+      edges <- Gen.listOfN(m, for {
+        a <- Gen.choose(0L, n - 1L); b <- Gen.choose(0L, n - 1L); w <- Gen.choose(0L, 9L)
+      } yield (a, b, w))
+      srcs <- Gen.nonEmptyListOf(Gen.choose(0L, n.toLong)).map(_.distinct.take(2))
+    } yield (edges, srcs)
+    val graphs = (List.empty[(Long, Long, Long)], List(0L)) +: samples(graphGen, 3, 6000L)
+    graphs.zipWithIndex.foreach { case ((es, srcList), i) =>
+      val triples = es.toDF("src", "dst", "w")
+      val positive = triples.withColumn("w", col("w") + 1L) // runWeighted's contract: w > 0
+      val pairs = triples.select("src", "dst")
+      val canon = es.collect { case (a, b, _) if a != b => (math.min(a, b), math.max(a, b)) }
+        .distinct.toDF("a", "b")
+      val weights = triples.withColumnRenamed("w", "weight")
+      val srcs = srcList.toDF("source")
+      val (delta, base) = es.partition(_._3 % 3 == 0)
+      val converged = ShortestPath.runConverged(base.toDF("src", "dst", "w"), srcs)
+      val deltaDf = delta.toDF("src", "dst", "w")
+      val seed = col("node") % 2 === 0
+      val cases = Seq(
+        ("PageRank.runAdaptive", PageRank.runAdaptive(pairs, 4), PageRank.run(pairs, 4)),
+        ("PageRank.runPersonalizedAdaptive",
+          PageRank.runPersonalizedAdaptive(pairs, seed, 4), PageRank.runPersonalized(pairs, seed, 4)),
+        ("PageRank.runWeightedAdaptive",
+          PageRank.runWeightedAdaptive(positive, "w", 4), PageRank.runWeighted(positive, "w", 4)),
+        ("ShortestPath.runAdaptive",
+          ShortestPath.runAdaptive(triples, srcs, 3), ShortestPath.run(triples, srcs, 3)),
+        ("ShortestPath.runConvergedAdaptive",
+          ShortestPath.runConvergedAdaptive(triples, srcs), ShortestPath.runConverged(triples, srcs)),
+        ("ShortestPath.incrementalAddAdaptive",
+          ShortestPath.incrementalAddAdaptive(converged, triples, deltaDf),
+          ShortestPath.incrementalAdd(converged, triples, deltaDf)),
+        ("LabelProp.runAdaptive", LabelProp.runAdaptive(weights, 3), LabelProp.run(weights, 3)),
+        ("Hits.runAdaptive", Hits.runAdaptive(pairs, 3), Hits.run(pairs, 3)),
+        ("KCore.peelAdaptive", KCore.peelAdaptive(pairs, 2, 3), KCore.peel(pairs, 2, 3)),
+        ("KTruss.peelAdaptive", KTruss.peelAdaptive(canon, 3, 2), KTruss.peel(canon, 3, 2)),
+        ("NearDup.connectedComponentsAdaptive",
+          NearDup.connectedComponentsAdaptive(pairs, "src", "dst"),
+          NearDup.connectedComponents(pairs, "src", "dst")),
+      )
+      cases.foreach { case (name, drv, dist) => same(s"graph $i $name (edges=$es)", drv, dist) }
+    }
+
+    // KMeans: random vectors; the full-dim fit through lloyd and the
+    // fused two-subspace fit, each against the forced-distributed fit.
+    val vecGen = for {
+      dsub <- Gen.choose(1, 3)
+      n <- Gen.choose(1, 24)
+      k <- Gen.choose(1, 4)
+      vs <- Gen.listOfN(n, Gen.listOfN(2 * dsub, Gen.choose(-1.0, 1.0)))
+    } yield (dsub, k, vs)
+    samples(vecGen, 3, 7000L).zipWithIndex.foreach { case ((dsub, k, vs), i) =>
+      val df = vs.zipWithIndex.map { case (v, id) => (id.toLong, v) }.toDF("vec_id", "emb")
+      val dim = 2 * dsub
+      same(s"kmeans $i lloyd", KMeans.lloyd(df, "vec_id", "emb", k, dim, 2),
+        KMeans.assignWith(df, "vec_id", "emb",
+          KMeans.fitDistributed(df, "vec_id", "emb", 1, dim, k, 2).head))
+      val fused = KMeans.fitSubspaces(df.select($"vec_id".as("id"), $"emb".as("v")), 2, dsub, k, 2)
+      val fusedDist = KMeans.fitDistributed(df, "vec_id", "emb", 2, dsub, k, 2)
+      assert(fused.map(_.map(_.toSeq).toSeq).toSeq == fusedDist.map(_.map(_.toSeq).toSeq).toSeq,
+        s"kmeans $i fitSubspaces drifted")
+    }
+
+    // Bradley-Terry: random decided comparisons over a few items; the
+    // smallest item is given a win (the anchor precondition).
+    val compGen = for {
+      t <- Gen.choose(2, 6)
+      m <- Gen.choose(1, 14)
+      cs <- Gen.listOfN(m, for {
+        a <- Gen.choose(0, t - 1); b <- Gen.choose(0, t - 1) if a != b; n <- Gen.choose(1L, 9L)
+      } yield (s"i$a", s"i$b", n))
+    } yield cs
+    samples(compGen, 3, 8000L).zipWithIndex.foreach { case (cs, i) =>
+      val items = cs.flatMap(c => Seq(c._1, c._2)).distinct.sorted
+      val comps = if (cs.exists(_._1 == items.head)) cs else cs :+ ((items.head, items(1), 1L))
+      val comp = comps.toDF("winner", "loser", "n")
+      same(s"bradleyTerry $i (comparisons=$comps)",
+        Preference.bradleyTerry(comp, "winner", "loser", "n", iters = 3),
+        Preference.bradleyTerryDistributed(comp, "winner", "loser", "n", iters = 3))
+    }
+  }
+
   test("Gini kernel agrees with a driver-side reference on random vectors") {
     val vecGen = Gen.nonEmptyListOf(Gen.choose(0.0, 100.0))
     samples(vecGen, 8, 2000L).foreach { xs =>

@@ -147,8 +147,7 @@ class QuantileSketchSpec extends SparkTestBase {
     out.foreach { case (g, p50) =>
       assert(p50 > 1500 && p50 < 2500, s"group $g median $p50 out of band")
     }
-    // SQL registration of all three kernels.
-    GraftFunctions.registerAll(spark)
+    // All three kernels through SQL.
     df.createOrReplaceTempView("skq_in")
     val viaSql = spark.sql(
       """SELECT element_at(

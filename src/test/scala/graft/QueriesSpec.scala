@@ -47,8 +47,8 @@ class QueriesSpec extends SparkTestBase {
   }
 
   test("forced-distributed bench probes match the default driver tier at sf0.001") {
-    // Bench times these probes; bound 0 forces the distributed loops,
-    // which must give what the driver tier gives on the same input.
+    // Bench times these probes; they run the distributed loops, which
+    // must give what the driver tier gives on the same input.
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     val pagerank = rows(SparkEntry.queries("q_pagerank")(spark, sf))
     assert(pagerank.nonEmpty)
@@ -59,7 +59,16 @@ class QueriesSpec extends SparkTestBase {
       k = 8, dim = 64, iters = 2))
     assert(kmeans.nonEmpty)
     assert(rows(SparkEntry.benchProbes("b_kmeans_dist")(spark, sf)) == kmeans,
-      "b_kmeans_dist must equal the driver-bounded KMeans.lloyd fit")
+      "b_kmeans_dist must equal the driver-tier KMeans.lloyd fit")
+  }
+
+  test("Explain prints a bench probe's plan (b_pagerank_dist) and fails on an unknown name") {
+    val plan = Explain.plan(spark, sf, Explain.resolve(Seq("b_pagerank_dist")).head, finalPlan = false)
+    assert(plan.contains("== Physical Plan =="), plan)
+    assert(plan.contains("rank"), plan)
+    val e = intercept[IllegalArgumentException](Explain.resolve(Seq("b_pagerank_dist", "q_pagernk")))
+    assert(e.getMessage.contains("unknown query names: q_pagernk;"), e.getMessage)
+    assert(e.getMessage.contains("b_kmeans_dist") && e.getMessage.contains("q_pagerank"), e.getMessage)
   }
 
   test("all queries execute and return rows at sf0.001 (except known-empty)") {

@@ -348,10 +348,6 @@ class SimilaritySpec extends SparkTestBase {
     val fast = NearDup.connectedComponentsAdaptive(edges, "a", "b")
       .as[(Long, Long)].collect().toMap
     assert(fast == ref)
-    // threshold 0 forces the distributed fallback — same labels.
-    val dist = NearDup.connectedComponentsAdaptive(edges, "a", "b", maxDriverEdges = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(dist == ref)
   }
 
   test("connectedComponents: fractional ids are hashed, not truncated onto the same node") {
@@ -968,24 +964,18 @@ class SimilaritySpec extends SparkTestBase {
     assert(meanSq > 0.6 && meanSq < 1.4, s"E[d2p/d2o] should be ~1, got $meanSq")
   }
 
-  test("KMeans driver tier == distributed fits, bit for bit (fitOn + fitSubspaces)") {
-    // The r14 vector-count escape hatch (the graph kit's 2M-edge pattern)
-    // must reproduce the distributed Lloyd loops EXACTLY — same cosine
-    // assignment/tie rule, same double→decimal(28,12) HALF_UP sums — on
-    // the real embeddings table.
+  test("KMeans driver tier == distributed fits, bit for bit (centroids + fitSubspaces)") {
+    // The driver tier must reproduce the distributed Lloyd loops EXACTLY
+    // — same cosine assignment/tie rule, same double→decimal(28,12)
+    // HALF_UP sums — on the real embeddings table, for the full-dim fit
+    // (m = 1) and the fused PQ subspace fit (m = 8).
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    // The bound is threaded as an explicit parameter (r14 advice: a
-    // sys-prop mutation here could flip another in-flight fit's tier if
-    // suites ever ran concurrently in one JVM).
-    def run(bound: Long): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-      val coarse = KMeans.centroids(emb, "vec_id", "embedding", k = 8, dim = 64, iters = 3,
-        maxDriverVecs = bound)
-      val books = Ann.pqCodebooks(emb, "vec_id", "embedding", dim = 64,
-        m = 8, ksub = 16, iters = 2, maxDriverVecs = bound)
-      (coarse, books)
-    }
-    val (cDrv, bDrv) = run(200000L) // default bound: driver tier
-    val (cDist, bDist) = run(0L) // bound 0: distributed loops
+    val cDrv = KMeans.centroids(emb, "vec_id", "embedding", k = 8, dim = 64, iters = 3)
+    val cDist = KMeans.fitDistributed(emb, "vec_id", "embedding", m = 1, dsub = 64, k = 8, iters = 3).head
+    val bDrv = KMeans.fitSubspaces(
+      emb.select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v")),
+      m = 8, dsub = 8, k = 16, iters = 2)
+    val bDist = KMeans.fitDistributed(emb, "vec_id", "embedding", m = 8, dsub = 8, k = 16, iters = 2)
     for (i <- cDrv.indices)
       assert(cDrv(i).toSeq == cDist(i).toSeq, s"coarse centroid $i drifted")
     for (s <- bDrv.indices; c <- bDrv(s).indices)
